@@ -1,53 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times every SparkEntry query at the
   * SPARK_GRAFT_SF_DIR scale factor and prints ONE JSON line. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine (the target is local[32]-class hardware);
-    // SPARK_GRAFT_CPUS pins it for reproducible small runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    // realistic-exchange posture (BENCH_SCALE control runs): a cluster plan
-    // pays per-partition fixed costs the local cpus-partition default
-    // hides — SPARK_GRAFT_SHUFFLE_PARTITIONS=200 SPARK_GRAFT_AQE=1 times
-    // the same queries under cluster-shaped exchanges + runtime re-plan
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // scale-curve runs (BENCH_SCALE control): a cluster reads N× data as
-    // ~N× fixed-size blocks, but the single-file TESTDATA layout reads it
-    // as ONE split until 128 MB — per-task input then grows with scale and
-    // scan-stage wall-clock scales serially, which is a harness artifact,
-    // not a plan property. Pinning e.g. 4m keeps bytes-per-task constant
-    // across scale points, the honest cluster-shaped posture.
-    val maxPartitionBytes =
-      sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // AQE stays at the session default unless explicitly pinned, so anchor
-    // comparability is unchanged when the knob is absent
-    val b = sys.env.get("SPARK_GRAFT_AQE") match {
-      case Some(v) => b0.config("spark.sql.adaptive.enabled", v == "1")
-      case None => b0
-    }
-    val spark = b.getOrCreate()
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: fault every table into the page cache and execute the
     // signature/similarity code paths on tiny slices, so timed queries
     // measure the operators rather than first-run JIT + codegen compilation
     // (measured ~6 s of one-time cost attributed to whichever doc-heavy
-    // query happened to run first)
-    Tables.names.foreach { n =>
-      try Tables.table(spark, sfDir, n).count()
-      catch { case _: Throwable => }
-    }
-    try {
+    // query happened to run first). A failed step is reported, not fatal:
+    // the timed loop still runs, and a query the failure breaks reports -1
+    def warmUp(step: String)(body: => Unit): Unit =
+      try body catch { case e: Throwable =>
+        System.err.println(s"[bench] warm-up $step FAILED: ${e.getMessage}")
+      }
+    Tables.names.foreach(n => warmUp(s"table $n")(Tables.table(spark, sfDir, n).count()))
+    warmUp("signatures") {
       val docs = Tables.documents(spark, sfDir).limit(64).cache()
       val emb = Tables.embeddings(spark, sfDir).limit(64).cache()
       ops.Dedup.simhashNearDup(docs).count()
@@ -55,6 +26,8 @@ object Bench {
       ops.SimSearch.bruteForceTopK(emb, 2, 3).count()
       ops.SimSearch.lshTopK(emb, 2, 3).count()
       docs.unpersist(); emb.unpersist()
+    }
+    warmUp("join-rank") {
       // join/aggregate codegen warmup on 64-row slices: the first timed join
       // query otherwise pays ~0.5 s of one-time whole-stage compilation
       val li = Tables.lineitem(spark, sfDir).limit(64).cache()
@@ -66,10 +39,12 @@ object Bench {
       // otherwise lands on whichever rank/window query runs first
       ops.Relational.priorityPriceRanks(ord).count()
       li.unpersist(); ord.unpersist()
+    }
+    warmUp("session-window") {
       val ev = Tables.events(spark, sfDir).limit(64).cache()
       ops.Relational.sessionCounts(ev).count()
       ev.unpersist()
-    } catch { case _: Throwable => }
+    }
     // headline set by default (the driver contract's "headline queries");
     // SPARK_GRAFT_BENCH_ALL=1 times the whole inventory
     val names0 =

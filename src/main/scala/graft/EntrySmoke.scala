@@ -1,17 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver t1 probe: `SparkEntry.entry(spark).count()` must be > 0 on
   * sf0.001. Exists so the verify skill's entry smoke is one runMain,
   * not a throwaway source file. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("ERROR")
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY_SMOKE rows=$n ${if (n > 0) "PASS" else "FAIL"}")

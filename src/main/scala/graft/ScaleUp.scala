@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up replicator for the TESTDATA layout: writes
@@ -45,22 +45,13 @@ object ScaleUp {
     val saltKeys = args.length == 4
     val (src, out, copies) = (args(0), args(1), args(2).toInt)
     require(copies >= 1, s"copies must be >= 1, got $copies")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // row-group bound, as a SESSION conf: newHadoopConf() copies every
-      // session entry into the per-write hadoop Configuration (a runtime
-      // sparkContext.hadoopConfiguration.setLong is NOT consulted by the
-      // SQL write path, and a DataFrameWriter .option() only admits
-      // parquet's own known keys — both verified ignored here)
-      .config("parquet.block.size",
-        sys.env.getOrElse("SPARK_GRAFT_PARQUET_BLOCK",
-          (8L * 1024 * 1024).toString))
-      .getOrCreate()
+    // row-group bound, as a SESSION conf: newHadoopConf() copies every
+    // session entry into the per-write hadoop Configuration (a runtime
+    // sparkContext.hadoopConfiguration.setLong is NOT consulted by the
+    // SQL write path, and a DataFrameWriter .option() only admits
+    // parquet's own known keys — both verified ignored here)
+    val spark = Session.build(extra = Map("parquet.block.size" ->
+      sys.env.getOrElse("SPARK_GRAFT_PARQUET_BLOCK", (8L * 1024 * 1024).toString)))
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(out))
 

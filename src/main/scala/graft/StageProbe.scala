@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Scale-adjudication probe: run ONE query once with a SparkListener and
@@ -78,19 +77,11 @@ object StageProbe {
     require(args.nonEmpty, "usage: StageProbe <queryName>")
     val name = args(0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      // same knob Bench honors: a single-file replica reads as ONE split
-      // until 128 MB, so scan-side stages serialize as a harness artifact;
-      // pinning e.g. 4m is the cluster-shaped posture that separates that
-      // artifact from a real plan defect in the serial-wall verdict
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // a single-file replica reads as ONE split until 128 MB, so scan-side
+    // stages serialize as a harness artifact; Session's split-size knob
+    // (e.g. 4m) is the cluster-shaped posture that separates that artifact
+    // from a real plan defect in the serial-wall verdict
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("ERROR")
 
     case class Row(name: String, var tasks: Int = 0, var taskMs: Long = 0,

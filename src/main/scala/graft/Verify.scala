@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -312,26 +312,10 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // default to the machine (the target is local[32]-class hardware);
-    // SPARK_GRAFT_CPUS pins it for reproducible small runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    // exchange-posture knobs (same contract as Bench): the invariance sweep
-    // re-runs the whole surface under shuffle.partitions=200 + AQE and
-    // hash-compares against the oracle — results must not depend on
-    // partition count or on AQE's runtime re-planning
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val b = sys.env.get("SPARK_GRAFT_AQE") match {
-      case Some(v) => b0.config("spark.sql.adaptive.enabled", v == "1")
-      case None => b0
-    }
-    val spark = b.getOrCreate()
+    // the invariance sweep re-runs the whole surface under other postures
+    // (Session's knobs, or -Dspark.* confs) and hash-compares against the
+    // oracle: results must not depend on how Spark executes
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // 4 queries in flight: Spark's scheduler interleaves the jobs, roughly

@@ -23,6 +23,9 @@
 # so a crashed Verify run is distinguishable from an oracle mismatch.
 set -u
 cd "$(dirname "$0")/.."
+# plain java against the compiled classes lets each mode pass -D SQL confs
+# to the JVM directly
+. tools/jvm.sh
 MODE="${1:-all}"
 
 run_mode() {
@@ -43,22 +46,11 @@ run_mode() {
   esac
   echo "=== invariance sweep: $mode (sf=$sf) ==="
   rm -rf "$out"
-  # plain java against the compiled classes (scala-library ships in
-  # /opt/spark/jars): lets each mode pass -D SQL confs to the JVM directly
-  local JO="-XX:+IgnoreUnrecognizedVMOptions"
-  for m in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-           java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-    JO="$JO --add-opens=java.base/$m=ALL-UNNAMED"
-  done
-  for m in jdk.internal.ref sun.nio.ch sun.nio.cs sun.security.action \
-           sun.util.calendar; do
-    JO="$JO --add-opens=java.base/$m=ALL-UNNAMED"
-  done
   # ${arr[@]+...}: empty-array expansion is an unbound-variable error
   # under set -u on bash < 4.4
   local vrc=0
   env ${env[@]+"${env[@]}"} java $JO $heap ${props[@]+"${props[@]}"} \
-    -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+    -cp "$CP" \
     graft.Verify "$sf" "$out" >"$log" 2>&1 || vrc=$?
   if [ $vrc -ne 0 ]; then
     echo "FAIL $mode: Verify crashed (exit $vrc) — see $log"

@@ -25,16 +25,7 @@ QUERIES=("$@")
 [ ${#QUERIES[@]} -gt 0 ] || QUERIES=(dedup_prefix_filter affinity_brand_pairs
   corpus_hard_negatives dedup_minhash_lsh dedup_simhash)
 
-JO="-XX:+IgnoreUnrecognizedVMOptions"
-for m in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  JO="$JO --add-opens=java.base/$m=ALL-UNNAMED"
-done
-for m in jdk.internal.ref sun.nio.ch sun.nio.cs sun.security.action \
-         sun.util.calendar; do
-  JO="$JO --add-opens=java.base/$m=ALL-UNNAMED"
-done
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
+. tools/jvm.sh
 
 rc=0
 for q in "${QUERIES[@]}"; do

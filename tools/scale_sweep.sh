@@ -26,16 +26,7 @@ DATA="/tmp/sf0.${COPIES}${SALT:+s}"
 OUT="/tmp/graft_sweep${COPIES}${SALT:+s}"
 LOG="/tmp/graft_sweep${COPIES}${SALT:+s}.log"
 
-JO="-XX:+IgnoreUnrecognizedVMOptions"
-for m in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  JO="$JO --add-opens=java.base/$m=ALL-UNNAMED"
-done
-for m in jdk.internal.ref sun.nio.ch sun.nio.cs sun.security.action \
-         sun.util.calendar; do
-  JO="$JO --add-opens=java.base/$m=ALL-UNNAMED"
-done
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
+. tools/jvm.sh
 
 if [ ! -f "$DATA/lineitem.parquet" ]; then
   echo "=== building ${COPIES}x replica at $DATA ${SALT:+(salted keys)} ==="
