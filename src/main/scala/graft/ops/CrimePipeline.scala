@@ -4,11 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, StructField, StringType}
 import graft.functions.GraftFunctions._
+import scala.jdk.CollectionConverters._
 
 /** The reference pipeline itself, end to end, on crime-shaped CSV
   * (SURVEY.md §3): `SanFranciscoCrime` (weekly per-key histograms) and
   * `SanFranciscoCrimePrepOlap` (daily sparse triplets with dictionary ids),
-  * re-expressed as three declarative queries over one CSV scan.
+  * re-expressed as declarative queries over one pruned, cached CSV scan.
+  * As in `runmapreduce.sh`, job 2 takes its dictionaries from job 1's
+  * outputs: the histogram keys, in output order, are the id spaces.
   *
   * Semantics intentionally preserved from the reference:
   *   - positional 12-column schema, all strings
@@ -25,6 +28,12 @@ import graft.functions.GraftFunctions._
   *   - dictionary ids = 0-based sorted rank (`DataFile.java:55`);
   *   - output sorted by key, dense CSV vector / sparse triplet shapes
   *     matching `part-00000`.
+  *
+  * Deliberately narrower than the reference: the weekly histograms count
+  * buckets 0..16 only. An incident dated April–December (bucket 17 and up)
+  * is in `star` but in no histogram, while the reference's `containsKey`
+  * else-branch (`SanFranciscoCrime.java:183-187`) would emit its bucket
+  * too. Both oracles pin 17 buckets (ROADMAP open item).
   */
 object CrimePipeline {
 
@@ -85,21 +94,18 @@ object CrimePipeline {
       .orderBy("key")
   }
 
-  /** A6 / `DataFile.extractKeys`: 0-based sorted-rank dictionary of a key
-    * column — the id space job 2 and `LoadStarDB` share. */
-  def dictionary0(crime: DataFrame, keyColumn: String): DataFrame =
-    Parity.dictionary(crime, keyColumn, "id1", "name")
-      .select((col("id1") - 1).as("idx"), col("name"))
-
   /** A3 / `SanFranciscoCrimePrepOlap`: sparse daily (catIdx, distIdx, count)
-    * triplets keyed by normalized `yyyy/MM/dd` date string, ids joined from
-    * the dictionaries (broadcast — the reference's static-HashMap side input
-    * made cluster-safe). */
-  def dailyTriplets(crime: DataFrame): DataFrame = {
-    val cats = dictionary0(crime, "Category")
-      .withColumnRenamed("idx", "cat_idx").withColumnRenamed("name", "Category")
-    val dists = dictionary0(crime, "PdDistrict")
-      .withColumnRenamed("idx", "dist_idx").withColumnRenamed("name", "PdDistrict")
+    * triplets keyed by normalized `yyyy/MM/dd` date string. The ids are the
+    * 0-based positions of each key in `categories` and `districts` — job
+    * 1's histogram keys in output order (A6 / `DataFile.extractKeys`) —
+    * joined as broadcast local frames (the reference's static-HashMap side
+    * input made cluster-safe). */
+  def dailyTriplets(crime: DataFrame, categories: Seq[String],
+      districts: Seq[String]): DataFrame = {
+    val spark = crime.sparkSession
+    import spark.implicits._
+    val cats = categories.zipWithIndex.toDF("Category", "cat_idx")
+    val dists = districts.zipWithIndex.toDF("PdDistrict", "dist_idx")
     crime
       .groupBy(
         date_format(col("incident_date"), "yyyy/MM/dd").as("d"),
@@ -117,18 +123,31 @@ object CrimePipeline {
     df.select(concat_ws("\t", col(keyColumn), concat_ws(",", valueCols: _*)).as("line"))
   }
 
-  /** Whole job-1 + job-2 run to TSV files, mirroring `runmapreduce.sh`:
-    * one cached scan feeds all three outputs (the reference re-scans the CSV
-    * per job). */
+  /** Whole job-1 + job-2 run to TSV files, mirroring `runmapreduce.sh`.
+    * One cached scan of the five columns the outputs read feeds all four
+    * (the reference re-scans the CSV per job). Each weekly histogram is
+    * collected once — one row per key, the bound the reference's PrepOlap
+    * also holds in memory — and written from the driver; its keys, in the
+    * order Spark sorted them, are job 2's dictionaries. They are not
+    * re-sorted on the driver: Spark orders strings by UTF-8 bytes, Scala's
+    * `String` ordering by UTF-16 units, and the two differ. */
   def runAll(spark: SparkSession, csvPath: String, outDir: String): Unit = {
-    val tagged = readCrimeCsvTagged(spark, csvPath).cache()
+    val tagged = readCrimeCsvTagged(spark, csvPath)
+      .select("IncidntNum", "Category", "PdDistrict", "incident_date", "bad_reason")
+      .cache()
     try {
       val crime = tagged.where(col("bad_reason").isNull).drop("bad_reason")
-      toTsv(weeklyCounts(crime, "Category"), "key")
-        .coalesce(1).write.mode("overwrite").text(s"$outDir/bycategory")
-      toTsv(weeklyCounts(crime, "PdDistrict"), "key")
-        .coalesce(1).write.mode("overwrite").text(s"$outDir/bydistrict")
-      toTsv(dailyTriplets(crime).withColumn("triplet",
+      // job 1 for one key column: writes its TSV, returns its keys
+      def histogram(keyColumn: String, dir: String): Seq[String] = {
+        val hist = weeklyCounts(crime, keyColumn)
+        val rows = hist.collect().toSeq
+        toTsv(spark.createDataFrame(rows.asJava, hist.schema), "key")
+          .coalesce(1).write.mode("overwrite").text(dir)
+        rows.map(_.getString(0))
+      }
+      val categories = histogram("Category", s"$outDir/bycategory")
+      val districts = histogram("PdDistrict", s"$outDir/bydistrict")
+      toTsv(dailyTriplets(crime, categories, districts).withColumn("triplet",
           concat_ws(",", col("cat_idx"), col("dist_idx"), col("n")))
           .select("d", "triplet"), "d")
         .coalesce(1).write.mode("overwrite").text(s"$outDir/star")

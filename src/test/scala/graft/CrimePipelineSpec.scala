@@ -1,9 +1,11 @@
 package graft
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.{Calendar, Locale}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.CrimePipeline
+import scala.jdk.CollectionConverters._
 
 /** Differential test of the full reference pipeline on a crime-shaped CSV
   * fixture (FIXTURES.md §B): the expected values are computed by an
@@ -26,17 +28,30 @@ class CrimePipelineSpec extends AnyFunSuite {
 
   private case class Incident(category: String, district: String, date: String)
 
-  /** Independent reimplementation: tiny quote-aware CSV split + Calendar. */
-  private lazy val expected: Seq[Incident] = rows.drop(1).flatMap { line =>
-    val cols = splitCsv(line)
-    if (cols.length < 7) None
-    else {
-      val d = cols(4).split(" ").head
-      val parts = d.split("/")
-      if (parts.length != 3 || parts.exists(p => !p.forall(_.isDigit))) None
-      else Some(Incident(cols(1), cols(6), d))
+  /** Independent reimplementation: tiny quote-aware CSV split + Calendar.
+    * Splits data rows (header excluded) into the clean incidents and the
+    * dropped rows as (IncidntNum, reason), with the first failing rule. */
+  private def expected(dataRows: Seq[String]): (Seq[Incident], Seq[(String, String)]) = {
+    val tagged = dataRows.map { line =>
+      val cols = splitCsv(line).map(c => if (c.isEmpty) null else c)
+      def at(i: Int) = if (i < cols.length) cols(i) else null
+      val d = Option(at(4)).map(_.split(" ").head).orNull
+      val parts = Option(d).map(_.split("/")).getOrElse(Array.empty[String])
+      val reason =
+        if (at(1) == null) Some("missing_category")
+        else if (at(6) == null) Some("missing_district")
+        else if (parts.length != 3 || parts.exists(p => p.isEmpty || !p.forall(_.isDigit)))
+          Some("bad_date")
+        else None
+      reason match {
+        case Some(r) => Left(at(0) -> r)
+        case None => Right(Incident(at(1), at(6), d))
+      }
     }
+    (tagged.collect { case Right(i) => i }, tagged.collect { case Left(b) => b })
   }
+
+  private lazy val (incidents, dropped) = expected(rows.drop(1))
 
   private def splitCsv(line: String): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer[String]()
@@ -66,7 +81,7 @@ class CrimePipelineSpec extends AnyFunSuite {
 
   test("P3/P4: header, short and bad-date rows dropped; quoted commas survive") {
     val crime = CrimePipeline.readCrimeCsv(spark, csvPath)
-    assert(crime.count() == expected.length)   // 5 good rows
+    assert(crime.count() == incidents.length)   // 5 good rows
     val descripts = crime.select("Descript").collect().map(_.getString(0)).toSet
     assert(descripts.contains("GRAND THEFT FROM LOCKED AUTO, ATTEMPTED"))
   }
@@ -82,6 +97,7 @@ class CrimePipelineSpec extends AnyFunSuite {
       .map(r => r.getString(r.fieldIndex("IncidntNum")) ->
         r.getString(r.fieldIndex("bad_reason"))).toMap
     assert(reasons == Map("006" -> "missing_district", "007" -> "bad_date"))
+    assert(reasons == dropped.toMap)
     // runAll writes the audit next to the data outputs
     val out = "/tmp/graft_crime_badrec"
     CrimePipeline.runAll(spark, csvPath, out)
@@ -94,7 +110,7 @@ class CrimePipelineSpec extends AnyFunSuite {
     val got = CrimePipeline.weeklyCounts(
         CrimePipeline.readCrimeCsv(spark, csvPath), "Category")
       .collect().map(r => r.getString(0) -> (1 to 17).map(r.getLong)).toMap
-    val want = expected.groupBy(_.category).map { case (cat, incs) =>
+    val want = incidents.groupBy(_.category).map { case (cat, incs) =>
       val counts = Array.fill(17)(0L)
       incs.foreach(i => counts(bucketOf(i.date)) += 1)
       cat -> counts.toSeq
@@ -106,11 +122,15 @@ class CrimePipelineSpec extends AnyFunSuite {
 
   test("A3/A6: daily triplets carry 0-based sorted-rank dictionary ids") {
     val crime = CrimePipeline.readCrimeCsv(spark, csvPath)
-    val got = CrimePipeline.dailyTriplets(crime).collect()
+    // job 1's histogram keys, in output order, are job 2's dictionaries
+    def keys(column: String) = CrimePipeline.weeklyCounts(crime, column)
+      .collect().map(_.getString(0)).toSeq
+    val got = CrimePipeline.dailyTriplets(crime, keys("Category"), keys("PdDistrict"))
+      .collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2)) -> r.getLong(3)).toMap
-    val cats = expected.map(_.category).distinct.sorted.zipWithIndex.toMap
-    val dists = expected.map(_.district).distinct.sorted.zipWithIndex.toMap
-    val want = expected.groupBy(i => (i.date, i.category, i.district))
+    val cats = incidents.map(_.category).distinct.sorted.zipWithIndex.toMap
+    val dists = incidents.map(_.district).distinct.sorted.zipWithIndex.toMap
+    val want = incidents.groupBy(i => (i.date, i.category, i.district))
       .map { case ((d, c, t), is) =>
         val Array(m, dd, y) = d.split("/")
         (s"$y/$m/$dd", cats(c), dists(t)) -> is.length.toLong
@@ -140,5 +160,90 @@ class CrimePipelineSpec extends AnyFunSuite {
     assert(lines.forall(_.matches("""[^\t]+\t\d+(,\d+){16}""")))
     val star = spark.read.text(s"$out/star").collect().map(_.getString(0))
     assert(star.forall(_.matches("""\d{4}/\d{2}/\d{2}\t\d+,\d+,\d+""")))
+  }
+
+  private val fixture = "src/test/resources/fixtures/crime.csv"
+
+  /** The `part-*` files of one output directory, by name. */
+  private def partFiles(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+
+  private def outputLines(dir: String): Seq[String] =
+    partFiles(dir).flatMap(f =>
+      Files.readAllLines(f.toPath, StandardCharsets.UTF_8).asScala)
+
+  test("runAll on the 1505-row fixture: job 2's ids are job 1's line numbers; " +
+      "all four outputs match the plain-Scala oracle") {
+    val out = "/tmp/graft_crime_fixture_run"
+    CrimePipeline.runAll(spark, fixture, out)
+    val Seq(bycategory, bydistrict, star, badrecords) =
+      Seq("bycategory", "bydistrict", "star", "badrecords").map(d => outputLines(s"$out/$d"))
+    val (clean, bad) = expected(Files.readAllLines(
+      Paths.get(fixture), StandardCharsets.UTF_8).asScala.toSeq.drop(1))
+    assert(clean.length == 1500 && bad.length == 5)
+
+    def histogram(key: Incident => String): Seq[String] =
+      clean.groupBy(key).toSeq.sortBy(_._1).map { case (k, incs) =>
+        val counts = Array.fill(17)(0L)
+        incs.map(i => bucketOf(i.date)).filter(_ < 17).foreach(counts(_) += 1)
+        s"$k\t${counts.mkString(",")}"
+      }
+    def starLines(cats: Map[String, Int], dists: Map[String, Int]): Seq[String] =
+      clean.groupBy(i => (i.date, cats(i.category), dists(i.district))).toSeq
+        .map { case ((d, c, t), is) =>
+          val Array(m, dd, y) = d.split("/")
+          (s"$y/$m/$dd", c, t, is.length)
+        }
+        .sorted.map { case (d, c, t, n) => s"$d\t$c,$t,$n" }
+    def lineNumbers(lines: Seq[String]) = lines.map(_.split("\t")(0)).zipWithIndex.toMap
+    def sortedIds(key: Incident => String) = clean.map(key).distinct.sorted.zipWithIndex.toMap
+
+    // the reference's DataFile.extractKeys contract: an id is the key's
+    // 0-based line in job 1's output file
+    assert(star == starLines(lineNumbers(bycategory), lineNumbers(bydistrict)))
+    assert(bycategory == histogram(_.category))
+    assert(bydistrict == histogram(_.district))
+    assert(star == starLines(sortedIds(_.category), sortedIds(_.district)))
+    assert(badrecords.sorted == bad.map { case (id, r) => s"$id\t$r" }.sorted)
+  }
+
+  test("runAll writes each keyed output as one part file in key order") {
+    val out = "/tmp/graft_crime_fixture_order"
+    CrimePipeline.runAll(spark, fixture, out)
+    for (name <- Seq("bycategory", "bydistrict", "star")) {
+      val parts = partFiles(s"$out/$name")
+      assert(parts.length == 1 && parts.head.length > 0, s"$name: $parts")
+    }
+    def keys(name: String) = outputLines(s"$out/$name").map(_.split("\t")(0))
+    for (name <- Seq("bycategory", "bydistrict")) {
+      val ks = keys(name)
+      assert(ks.nonEmpty && ks == ks.sorted && ks.distinct == ks, name)
+    }
+    val star = outputLines(s"$out/star").map { line =>
+      val Array(d, triplet) = line.split("\t")
+      val Array(c, t, _) = triplet.split(",").map(_.toInt)
+      (d, c, t)
+    }
+    assert(star.length > 1 && star == star.sorted && star.distinct == star)
+  }
+
+  test("runAll leaves nothing cached, also when a write fails") {
+    val sc = spark.sparkContext
+    val cacheManager = spark.sharedState.cacheManager
+    // other suites share this session: drop their cached frames (they
+    // recompute on use) and compare persisted RDDs against a snapshot
+    spark.catalog.clearCache()
+    val persisted = sc.getPersistentRDDs.keySet.toSet
+    CrimePipeline.runAll(spark, fixture, "/tmp/graft_crime_fixture_cache")
+    assert(cacheManager.isEmpty)
+    assert(sc.getPersistentRDDs.keySet.toSet == persisted)
+
+    val file = Files.createTempFile("graft_crime_not_a_dir", ".txt")
+    try {
+      intercept[Exception](CrimePipeline.runAll(spark, fixture, s"$file/out"))
+      assert(cacheManager.isEmpty)
+      assert(sc.getPersistentRDDs.keySet.toSet == persisted)
+    } finally Files.delete(file)
   }
 }

@@ -2,7 +2,8 @@
 # One-command round pre-flight: everything the driver's gates will check,
 # in the order they fail fastest. Exit code 0 = ship-ready.
 #
-#   tools/preflight.sh            # full: test + verify/oracle + bench diff + smoke
+#   tools/preflight.sh            # full: test + verify/oracle + crime check
+#                                 # + bench diff + smoke
 #   tools/preflight.sh --quick    # skip sbt test (just gates + smoke)
 #   tools/preflight.sh --full     # everything + the 208-query inventory bench
 #                                 # vs BENCH_FULL_ANCHOR.json (~10 min extra)
@@ -27,6 +28,15 @@ sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/preflight_verify" \
   2>&1 | grep "\[verify\].*failed" && rc=1
 python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/preflight_verify \
   | tail -1 | tee /dev/stderr | grep -q " 0 fail" || rc=1
+
+step "Crime pipeline vs DuckDB: one crime_etl benchmark run (~1 min)"
+# the only DuckDB check of CrimePipeline.runAll's star output and its
+# dictionaries (Verify covers weeklyCounts and badRecords)
+python3 perfbench/run.py --workload crime_etl --seed 1 --seconds 1 --trace 0 \
+  | tail -1 | tee /dev/stderr | python3 -c '
+import json, sys
+r = json.loads(sys.stdin.read())
+sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)' || rc=1
 
 step "Entry smoke (driver t1)"
 sbt -batch "runMain graft.EntrySmoke" 2>&1 | grep ENTRY_SMOKE | grep PASS || rc=1
