@@ -50,23 +50,12 @@ object SparkEntry {
         .orderBy("id")),
     "p5_date_normalize" -> ((s, d) => Parity.dateNormalize(Tables.events(s, d))),
     // ---- star-schema ETL + OLAP (LoadStarDB / Mondrian, SURVEY §2.3-A5 §3.3)
-    // default path = distributed-rank dictionary (Parity.dictionaryAuto,
-    // conf default true: no one-task merge in the plan); the *_onetask
-    // variants pin the bounded-dim coalesce(1) merge — both paths oracled
-    // against the SAME SQL, so the gate proves them row-identical
+    // dims are Parity.dictionary's bounded one-task sorted rank
     "star_dim_category" -> ((s, d) =>
       Star.dimCategory(Tables.orders(s, d)).orderBy("category_id")),
     "star_dim_district" -> ((s, d) =>
       Star.dimDistrict(Tables.nation(s, d)).orderBy("district_id")),
     "star_dim_time" -> ((s, d) => Star.dimTime(Tables.orders(s, d))),
-    "star_dim_category_onetask" -> ((s, d) =>
-      Star.dimCategory(Tables.orders(s, d), scalable = Some(false))
-        .orderBy("category_id")),
-    "star_dim_district_onetask" -> ((s, d) =>
-      Star.dimDistrict(Tables.nation(s, d), scalable = Some(false))
-        .orderBy("district_id")),
-    "star_dim_time_onetask" -> ((s, d) =>
-      Star.dimTime(Tables.orders(s, d), scalable = Some(false))),
     "star_fact" -> ((s, d) =>
       Star.fact(Tables.orders(s, d), Tables.customer(s, d), Tables.nation(s, d))),
     "a5_sum_by_category" -> ((s, d) =>
@@ -1016,23 +1005,6 @@ object SparkEntry {
         |FROM (SELECT DISTINCT n_name AS name FROM nation WHERE n_name IS NOT NULL)
         |ORDER BY district_id""".stripMargin,
     "star_dim_time" ->
-      s"""WITH dd AS (SELECT DISTINCT CAST(o_orderdate AS DATE) AS d FROM orders
-         |            WHERE o_orderdate IS NOT NULL)
-         |SELECT CAST(row_number() OVER (ORDER BY d) AS INT) AS time_id, d,
-         |  CAST(year(d) AS INT) AS year, CAST(month(d) AS INT) AS month,
-         |  ${wom("d")} AS week, CAST(dayofmonth(d) AS INT) AS day
-         |FROM dd ORDER BY time_id""".stripMargin,
-    // the *_onetask variants pin the coalesce(1) dictionary path; the SQL
-    // is identical because the two builds must be row-identical
-    "star_dim_category_onetask" ->
-      """SELECT CAST(row_number() OVER (ORDER BY name) AS INT) AS category_id, name
-        |FROM (SELECT DISTINCT o_orderpriority AS name FROM orders WHERE o_orderpriority IS NOT NULL)
-        |ORDER BY category_id""".stripMargin,
-    "star_dim_district_onetask" ->
-      """SELECT CAST(row_number() OVER (ORDER BY name) AS INT) AS district_id, name
-        |FROM (SELECT DISTINCT n_name AS name FROM nation WHERE n_name IS NOT NULL)
-        |ORDER BY district_id""".stripMargin,
-    "star_dim_time_onetask" ->
       s"""WITH dd AS (SELECT DISTINCT CAST(o_orderdate AS DATE) AS d FROM orders
          |            WHERE o_orderdate IS NOT NULL)
          |SELECT CAST(row_number() OVER (ORDER BY d) AS INT) AS time_id, d,

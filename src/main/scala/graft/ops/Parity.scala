@@ -85,24 +85,17 @@ object Parity {
     * index reproduces that deterministically.
     *
     * Scale note: the id pass is single-partition by design — valid only for
-    * dimension-cardinality inputs (10-40 values here; the distinct() shuffle
-    * reduces to that before the index pass sees it). It was previously a
-    * global `row_number` window, which computes the same thing but logs
-    * Spark's single-partition-window performance warning on every run; the
-    * explicit sort + stateful scan is the same one-task work without
-    * pretending to be a general window. A 100 TB-scale dictionary over a
-    * high-cardinality key should switch to hash ids or [[Rank.groupRanks]]
-    * instead; this operator intentionally matches the reference's
-    * sorted-rank contract.
+    * dimension-cardinality inputs (5 priorities, 25 nations, ~2.4k dates
+    * here; the distinct() shuffle reduces to that before the index pass sees
+    * it). The id is a codegen projection: in the one partition (index 0)
+    * `monotonically_increasing_id()` is the row's 0-based position. Being
+    * nondeterministic, that projection also keeps `EliminateSorts` from
+    * dropping the sort when the dictionary feeds a broadcast join (the
+    * barrier [[Rank]]'s rankedParts relies on too). A high-cardinality key
+    * wants hash ids or [[Rank.groupRanks]] instead; this operator matches
+    * the reference's bounded sorted-rank contract.
     */
-  def dictionary(df: DataFrame, column: String, idName: String, nameName: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    val distinctVals = df.select(col(column).as(nameName))
-      .where(col(nameName).isNotNull)
-      .distinct()
-    val outSchema = StructType(
-      StructField(idName, IntegerType, nullable = false) +: distinctVals.schema.fields)
+  def dictionary(df: DataFrame, column: String, idName: String, nameName: String): DataFrame =
     // coalesce, not repartition: a narrow merge of the distinct's output
     // partitions into the one id-assignment task — no extra exchange round
     // (measured ~0.2 s per dictionary in stage overhead). No trailing
@@ -111,52 +104,12 @@ object Parity {
     // explicit sort (driver rule: total ORDER BY at the output boundary),
     // while plan-internal callers (broadcast dim joins) would pay a range
     // exchange for nothing.
-    distinctVals
+    df.select(col(column).as(nameName))
+      .where(col(nameName).isNotNull)
+      .distinct()
       .coalesce(1)
       .sortWithinPartitions(col(nameName))
-      .mapPartitions { it =>
-        var i = 0
-        it.map { row => i += 1; Row.fromSeq(i +: row.toSeq) }
-      }(Encoders.row(outSchema))
-  }
-
-  /** [[dictionary]] for UNBOUNDED-cardinality columns: same (id, name)
-    * contract (dense 1-based ids in sorted order), but the rank comes from
-    * [[Rank.groupRanks]]' distributed prefix sum — range-partitioned, no
-    * single-task id assignment anywhere. Use when the dictionary column is
-    * not a bounded dimension (user ids, URLs, doc fingerprints at corpus
-    * scale); the default stays `coalesce(1)` because for true dims the
-    * merge task is cheaper than an extra range exchange (measured ~0.2 s
-    * per dictionary). Row-identical to [[dictionary]] (spec-asserted). */
-  def dictionaryScalable(df: DataFrame, column: String, idName: String,
-      nameName: String): DataFrame =
-    Rank.groupRanks(
-        df.select(col(column).as(nameName))
-          .where(col(nameName).isNotNull)
-          .distinct(),
-        Seq.empty, Seq(col(nameName)))
-      .select(col("rank").cast("int").as(idName), col(nameName))
-
-  /** Session conf key selecting the dictionary build for operators that
-    * don't pin one: `true` (the default) → [[dictionaryScalable]]'s
-    * distributed rank, `false` → [[dictionary]]'s one-task merge. */
-  val ScalableDictionariesConf = "spark.graft.scalableDictionaries"
-
-  /** [[dictionary]] / [[dictionaryScalable]] dispatch: an explicit
-    * `scalable` wins; otherwise [[ScalableDictionariesConf]] decides
-    * (default TRUE — the exposed dictionary builds should run the path
-    * that survives a high-cardinality column, and for bounded dims the
-    * extra range exchange costs ~0.2 s, not correctness). Both paths are
-    * row-identical (spec-asserted and both oracled); plan-internal callers
-    * that broadcast a provably tiny dim pin `Some(false)` for the cheaper
-    * merge task. */
-  def dictionaryAuto(df: DataFrame, column: String, idName: String,
-      nameName: String, scalable: Option[Boolean] = None): DataFrame = {
-    val useScalable = scalable.getOrElse(
-      df.sparkSession.conf.get(ScalableDictionariesConf, "true").toBoolean)
-    if (useScalable) dictionaryScalable(df, column, idName, nameName)
-    else dictionary(df, column, idName, nameName)
-  }
+      .select((monotonically_increasing_id() + 1).cast("int").as(idName), col(nameName))
 
   /** P5 (`MapReduceJobBase.getKeyDate`/`formatKey`): normalize a timestamp to
     * the reference's `yyyy/MM/dd` sort-stable string key. */

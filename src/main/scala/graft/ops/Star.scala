@@ -28,35 +28,29 @@ object Star {
       .join(broadcast(nation.select("n_nationkey", "n_name")),
         col("c_nationkey") === col("n_nationkey"))
 
-  /** Category dimension: 1-based sorted-rank ids (LoadStarDB.java:186-195).
-    * Dictionary build dispatches on [[Parity.ScalableDictionariesConf]]
-    * (default: the distributed-rank path — no one-task merge in the plan);
-    * pass `scalable = Some(false)` to pin the bounded-dim merge. */
-  def dimCategory(orders: DataFrame,
-      scalable: Option[Boolean] = None): DataFrame =
-    Parity.dictionaryAuto(orders, "o_orderpriority", "category_id", "name",
-      scalable)
+  /** Category dimension: 1-based sorted-rank ids (LoadStarDB.java:186-195),
+    * built by the bounded one-task [[Parity.dictionary]]. */
+  def dimCategory(orders: DataFrame): DataFrame =
+    Parity.dictionary(orders, "o_orderpriority", "category_id", "name")
 
   /** District dimension over nation names. */
-  def dimDistrict(nation: DataFrame,
-      scalable: Option[Boolean] = None): DataFrame =
-    Parity.dictionaryAuto(nation, "n_name", "district_id", "name", scalable)
+  def dimDistrict(nation: DataFrame): DataFrame =
+    Parity.dictionary(nation, "n_name", "district_id", "name")
 
   /** Time dimension: distinct order dates decomposed to
     * (year, month, week-of-month, day) — the `timeperiod` table
     * (starschema.sql:2-6). The reference assigns `time_id` by first-seen file
-    * order (nondeterministic); here it is `row_number` over the date order —
+    * order (nondeterministic); here it is the date's sorted rank —
     * deterministic, documented delta (SURVEY.md §3.3). Months are 1-based
     * (documented delta from the reference's raw Calendar.MONTH persistence).
     */
-  def dimTime(orders: DataFrame, scalable: Option[Boolean] = None): DataFrame = {
+  def dimTime(orders: DataFrame): DataFrame = {
     // native codegen week_of_month (graft.plans.WeekOfMonth) — proven equal
     // to the column formula in ExpressionsSpec, and this keeps the custom
     // expression on the oracle-gated path
     graft.plans.GraftExtensions.ensureRegistered(orders.sparkSession)
-    Parity.dictionaryAuto(
-        orders.select(to_date(col("o_orderdate")).as("d")), "d", "time_id", "d",
-        scalable)
+    Parity.dictionary(
+        orders.select(to_date(col("o_orderdate")).as("d")), "d", "time_id", "d")
       .select(
         col("time_id"), col("d"),
         year(col("d")).as("year"),
@@ -70,15 +64,8 @@ object Star {
     * from the dims — `fact(crimes, district_id, category_id, time_id)`.
     * Aggregates FIRST (shrinking to cube cardinality), then broadcast-joins
     * ids onto the aggregate — the fact-source scan shuffles exactly once.
-    */
-  def fact(orders: DataFrame, customer: DataFrame, nation: DataFrame): DataFrame =
-    factParts(orders, customer, nation)._1
-      .select("crimes", "district_id", "category_id", "time_id")
-      .orderBy("time_id", "category_id", "district_id")
-
-  /** The fact aggregate with surrogate ids resolved, plus the three dims —
-    * the ETL build behind [[fact]] (the sum reports aggregate straight from
-    * the source instead; see [[sumByCategory]]).
+    * (The sum reports aggregate straight from the source instead; see
+    * [[sumByCategory]].)
     *
     * The dictionaries come from their own single-column scans of the
     * source, deliberately: deriving them from the post-join aggregate
@@ -88,30 +75,25 @@ object Star {
     * +0.7 s on star_fact at sf0.1). A pruned one-column scan + distinct
     * reads only that column's bytes in any columnar format — that IS the
     * cheap path at 100 TB. */
-  private[ops] def factParts(orders: DataFrame, customer: DataFrame,
-      nation: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+  def fact(orders: DataFrame, customer: DataFrame, nation: DataFrame): DataFrame = {
     val src = ordersWithDistrict(orders, customer, nation)
       .select(
         to_date(col("o_orderdate")).as("d"),
         col("o_orderpriority").as("category"),
         col("n_name").as("district"))
     val agg = src.groupBy("d", "category", "district").agg(count(lit(1)).as("crimes"))
-    // plan-internal broadcast dims pinned to the one-task merge: these are
-    // bounded by construction (5 priorities / 25 nations / ~2.4k dates) and
-    // the distributed-rank path would add a range exchange + offset pass
-    // per dictionary for the same 5-row broadcast
-    val catDict = dimCategory(orders, scalable = Some(false))
-    val distDict = dimDistrict(nation, scalable = Some(false))
+    val catDict = dimCategory(orders)
+    val distDict = dimDistrict(nation)
     val timeDict = Parity.dictionary(
       orders.select(to_date(col("o_orderdate")).as("d")), "d", "time_id", "td")
-    val withIds = agg
+    agg
       .join(broadcast(catDict), agg("category") === col("name"))
       .drop("name")
       .join(broadcast(distDict), agg("district") === col("name"))
       .drop("name")
       .join(broadcast(timeDict), agg("d") === col("td"))
-      .drop("td")
-    (withIds, catDict, distDict, timeDict)
+      .select("crimes", "district_id", "category_id", "time_id")
+      .orderBy("time_id", "category_id", "district_id")
   }
 
   /** A5 / bycategory.mdx: sum of the measure by category for one year slice —
@@ -119,9 +101,10 @@ object Star {
     *
     * The year predicate is applied to the fact SOURCE by hand: Catalyst
     * cannot push a filter on `dimTime.year` back through the fact build
-    * (the row_number window is a pushdown barrier), so filtering `orders`
-    * first is the manual equivalent — the aggregate then sees only the
-    * slice (7× less input on TESTDATA's seven-year span).
+    * (the dictionary's nondeterministic id projection is a pushdown
+    * barrier), so filtering `orders` first is the manual equivalent — the
+    * aggregate then sees only the slice (7× less input on TESTDATA's
+    * seven-year span).
     *
     * Aggregate-first: the fact source collapses straight to |categories|
     * rows, then the (broadcast, 5-row) dimension resolves the canonical dim
@@ -132,7 +115,7 @@ object Star {
   def sumByCategory(orders: DataFrame, customer: DataFrame, nation: DataFrame,
       yearSlice: Int): DataFrame = {
     val ordersY = orders.where(Relational.inYear(col("o_orderdate"), yearSlice))
-    val catDict = dimCategory(ordersY, scalable = Some(false)) // 5-row broadcast dim
+    val catDict = dimCategory(ordersY) // 5-row broadcast dim
     ordersY.select(col("o_orderpriority").as("name"))
       .groupBy("name")
       .agg(count(lit(1)).as("crimes"))
@@ -147,7 +130,7 @@ object Star {
   def sumByDistrict(orders: DataFrame, customer: DataFrame, nation: DataFrame,
       yearSlice: Int): DataFrame = {
     val ordersY = orders.where(Relational.inYear(col("o_orderdate"), yearSlice))
-    val distDict = dimDistrict(nation, scalable = Some(false)) // 25-row broadcast dim
+    val distDict = dimDistrict(nation) // 25-row broadcast dim
     ordersWithDistrict(ordersY, customer, nation)
       .select(col("n_name").as("name"))
       .groupBy("name")

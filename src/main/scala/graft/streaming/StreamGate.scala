@@ -71,20 +71,17 @@ object StreamGate {
     s
   }
 
-  /** See [[gateSession]]. `SPARK_GRAFT_STREAM_STATE_PARTITIONS` pins the
-    * count for probes/experiments. */
+  /** See [[gateSession]]. */
   private def statePartitions(spark: SparkSession, dir: String,
-      table: String): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS").map(_.toInt)
-      .getOrElse {
-        val f = new java.io.File(Tables.path(dir, table))
-        val bytes =
-          if (f.isDirectory)
-            Option(f.listFiles).map(_.map(_.length).sum).getOrElse(0L)
-          else f.length
-        val cores = spark.sparkContext.defaultParallelism
-        math.max(4L, math.min(cores.toLong, bytes / (16L << 20))).toInt
-      }
+      table: String): Int = {
+    val f = new java.io.File(Tables.path(dir, table))
+    val bytes =
+      if (f.isDirectory)
+        Option(f.listFiles).map(_.map(_.length).sum).getOrElse(0L)
+      else f.length
+    val cores = spark.sparkContext.defaultParallelism
+    math.max(4L, math.min(cores.toLong, bytes / (16L << 20))).toInt
+  }
 
   /** Gate scratch space: tmpfs when the host has one. Checkpoint commits
     * fsync every micro-batch — on-disk temp dirs made the gates pay real

@@ -338,25 +338,16 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("star dims: default dictionary path is distributed (no one-task merge)") {
-    val orders = Tables.orders(spark, TestSpark.sf0001)
-    val nation = Tables.nation(spark, TestSpark.sf0001)
-    // conf default (scalableDictionaries=true): no Coalesce(1) anywhere —
-    // the id assignment is the range-partitioned rank, and the two paths
-    // are proven row-identical here and by the shared oracle SQL
-    for (df <- Seq(Star.dimCategory(orders), Star.dimDistrict(nation),
-        Star.dimTime(orders))) {
-      val p = plan(df)
-      // the one-task merge plans as the physical node "Coalesce 1" (the
-      // lowercase coalesce() EXPRESSION and AQE's "coalesced" reads are
-      // different things and allowed)
-      assert(!p.contains("Coalesce 1"),
-        s"default dim build must not funnel into one task:\n$p")
+  test("A6 dictionary: ids are a codegen projection, no object round trip") {
+    // Parity.dictionary assigns ids in the plan itself; an Encoders.row
+    // mapPartitions scan would show up as the deserialize / map /
+    // serialize node triple in every dictionary-built star query
+    for (name <- Seq("star_dim_category", "star_dim_time", "star_fact",
+        "a3_daily_cube_indexed")) {
+      val p = plan(SparkEntry.queries(name)(spark, TestSpark.sf0001))
+      for (node <- Seq("DeserializeToObject", "MapPartitions", "SerializeFromObject"))
+        assert(!p.contains(node), s"$name plans a $node:\n$p")
     }
-    val defaultRows = Star.dimCategory(orders).orderBy("category_id").collect()
-    val onetaskRows = Star.dimCategory(orders, scalable = Some(false))
-      .orderBy("category_id").collect()
-    assert(defaultRows.map(_.toSeq).toSeq == onetaskRows.map(_.toSeq).toSeq)
   }
 
   test("full inventory: no unbounded single-partition window, no cartesian product") {

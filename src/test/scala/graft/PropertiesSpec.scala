@@ -41,6 +41,20 @@ class PropertiesSpec extends AnyFunSuite {
   }
 
   test("property: dictionary ids are a permutation-invariant function of the value set") {
+    // the same rows however the input is partitioned and whether or not
+    // AQE re-plans the distinct's shuffle: ids come from the one merged,
+    // sorted partition, never from the input's layout
+    val sessions = Seq("false", "true").map { aqe =>
+      val s = spark.newSession()
+      s.conf.set("spark.sql.adaptive.enabled", aqe)
+      s
+    }
+    def ids(s: org.apache.spark.sql.SparkSession, vs: Seq[String],
+        parts: Int): Seq[(Int, String)] = {
+      import s.implicits._
+      Parity.dictionary(vs.toDF("v").repartition(parts), "v", "id", "name")
+        .collect().map(r => r.getInt(0) -> r.getString(1)).toSeq
+    }
     val values = Gen.listOfN(30, Gen.oneOf("ant", "bee", "cat", "dog", "elk", "fox"))
     forAll(values, runs = 6) { vs =>
       {
@@ -51,6 +65,9 @@ class PropertiesSpec extends AnyFunSuite {
         assert(base == shuffled)
         assert(base.map(_._2) == base.map(_._2).sorted)        // rank = sorted order
         assert(base.map(_._1) == (1 to base.length))           // dense 1-based
+        for (s <- sessions; parts <- Seq(1, 7, 64))
+          assert(ids(s, vs, parts) == base,
+            s"parts=$parts aqe=${s.conf.get("spark.sql.adaptive.enabled")}")
       }
     }
   }

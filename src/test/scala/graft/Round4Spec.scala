@@ -327,21 +327,6 @@ class Round4Spec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
-  // ---- Parity.dictionaryScalable -------------------------------------------
-
-  test("dictionaryScalable: row-identical to the coalesce(1) dictionary, no funnel") {
-    val df = (1 to 5000).map(i => s"v${i % 997}").toDF("c")
-    val small = graft.ops.Parity.dictionary(df, "c", "id", "name").collect()
-      .map(r => (r.getInt(0), r.getString(1))).toSeq.sortBy(_._1)
-    val big = graft.ops.Parity.dictionaryScalable(df.repartition(7), "c", "id", "name")
-      .collect().map(r => (r.getInt(0), r.getString(1))).toSeq.sortBy(_._1)
-    assert(big == small && big.size == 997)
-    // and the scalable form must not contain a single-partition funnel
-    val p = graft.ops.Parity.dictionaryScalable(df, "c", "id", "name")
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("Coalesce 1") && !p.contains("Exchange SinglePartition"), p)
-  }
-
   // ---- Multimodal structural parsers ---------------------------------------
 
   test("PNG parse is structural: reads IHDR via chunk walk, rejects corruption") {
