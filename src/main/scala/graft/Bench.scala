@@ -3,7 +3,18 @@ package graft
 /** Benchmark main (driver contract): times every SparkEntry query at the
   * SPARK_GRAFT_SF_DIR scale factor and prints ONE JSON line. */
 object Bench {
+  val Reps = "SPARK_GRAFT_BENCH_REPS"
+
+  /** Timed runs per query, [[Reps]] (default 3); Bench reports their
+    * median. A single run is hostage to machine-load noise: one recorded
+    * run doubled two queries that a run minutes earlier timed at half,
+    * purely from co-tenant load. The median discards one bad
+    * draw per side while staying cheap; `1` restores single-shot for the
+    * (slow) full-inventory sweep. */
+  def reps(env: Map[String, String]): Int = Session.positiveInt(env, Reps).getOrElse(3)
+
   def main(args: Array[String]): Unit = {
+    val reps = Bench.reps(sys.env)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.build()
     spark.sparkContext.setLogLevel("WARN")
@@ -34,9 +45,9 @@ object Bench {
       val ord = Tables.orders(spark, sfDir).limit(64).cache()
       ops.Relational.topUrgentOrders(
         Tables.customer(spark, sfDir).limit(64), ord, li).count()
-      // distributed-rank + session-window paths: their mapPartitions/
-      // MergingSessions codegen is another ~2 s of one-time cost that
-      // otherwise lands on whichever rank/window query runs first
+      // distributed-rank + session-window paths: their range-partition,
+      // per-slice window and MergingSessions codegen is more one-time
+      // cost that otherwise lands on whichever rank/window query runs first
       ops.Relational.priorityPriceRanks(ord).count()
       li.unpersist(); ord.unpersist()
     }
@@ -56,13 +67,6 @@ object Bench {
       case Some(only) => only.split(",").toSeq.filter(SparkEntry.queries.contains)
       case None => names0
     }
-    // median of `reps` timed runs per query (default 3): a single run is
-    // hostage to machine-load noise — the r04 driver recording doubled two
-    // queries that the builder's run minutes earlier timed at half, purely
-    // from co-tenant load. The median discards one bad draw per side while
-    // staying cheap; SPARK_GRAFT_BENCH_REPS=1 restores single-shot for the
-    // (slow) full-inventory sweep.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // carried ACROSS queries, not per-query: a heavy query's final rep
     // leaves its shuffle garbage behind just like an intermediate rep
     // does, and the next query's first timed rep would otherwise pay for
@@ -101,7 +105,7 @@ object Bench {
         // dedup_prefix_filter median-of-5 read 76.9 s vs 54.5 s single-shot
         // PURELY from this accumulation, turning a linear 1.98x octave
         // into a phantom 3.3x. Gated on the previous rep's cost: a full
-        // GC on a 48 GB heap is ~1-2 s, and the 210-query inventory at
+        // GC on a 48 GB heap is ~1-2 s, and the 209-query inventory at
         // sf0.1 would pay ~630 of them for reps whose shuffles are a few
         // MB — only a rep heavy enough to have spilled real shuffle data
         // (>5 s, the serial-wall floor convention) warrants the sweep.

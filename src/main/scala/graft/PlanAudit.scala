@@ -2,7 +2,9 @@ package graft
 
 /** Plan-shape audit over the whole query inventory: per query, the counts
   * that matter at 100× scale — shuffle exchanges, broadcasts, nested-loop /
-  * cartesian joins, window operators — plus the custom-operator markers.
+  * cartesian joins, window operators — plus the custom-operator markers
+  * and Spark's sort-based `WindowGroupLimit` (`wgl=`), which a top-k that
+  * missed the heap rewrite plans instead.
   * Run with one or more query-name substrings to print the matching
   * queries' `explain("formatted")` plans instead (PushedFilters reaching
   * the scan, WholeStageCodegen spans, broadcast vs shuffle joins).
@@ -63,7 +65,8 @@ object PlanAudit {
             "cart=" + c("CartesianProduct"),
             "win=" + c("Window ["),
             "globalWin=" + globalWin,
-            "topk=" + c("TopKPerKey"))
+            "topk=" + c("TopKPerKey"),
+            "wgl=" + c("WindowGroupLimit"))
           println(f"$name%-34s ${flags.mkString(" ")}")
         }
       } catch { case e: Throwable =>

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.SparkSession
+import graft.plans.GraftExtensions
 
 /** The one SparkSession factory for every graft main and the tests, so
   * Verify, Bench, StageProbe and the rest always run under the same
@@ -21,8 +22,9 @@ import org.apache.spark.sql.SparkSession
   * A knob that is not set pins nothing: a builder `.config` overrides a
   * `-Dspark.*` JVM property, and `tools/invariance.sh small-splits` passes
   * the split size exactly that way. The session is always UTC with the UI
-  * off. The effective posture goes to stderr once per session, keeping
-  * stdout free for Bench's one JSON line.
+  * off, and graft's planner extensions are installed on it
+  * ([[GraftExtensions.ensureRegistered]]). The effective posture goes to
+  * stderr once per session, keeping stdout free for Bench's one JSON line.
   */
 object Session {
   val Cpus = "SPARK_GRAFT_CPUS"
@@ -36,9 +38,7 @@ object Session {
       nproc: Int = Runtime.getRuntime.availableProcessors): Map[String, String] = {
     def bad(knob: String, want: String): Nothing =
       throw new IllegalArgumentException(s"$knob must be $want, got '${env(knob)}'")
-    def positiveInt(knob: String): Option[Int] = env.get(knob).map(
-      _.toIntOption.filter(_ > 0).getOrElse(bad(knob, "a positive integer")))
-    val cores = positiveInt(Cpus).getOrElse(math.min(32, nproc))
+    val cores = positiveInt(env, Cpus).getOrElse(math.min(32, nproc))
     val aqe = env.get(Aqe).map {
       case "1" => "true"
       case "0" => "false"
@@ -53,17 +53,25 @@ object Session {
     Map(
       "spark.master" -> s"local[$cores]",
       "spark.sql.shuffle.partitions" ->
-        positiveInt(ShufflePartitions).getOrElse(cores).toString,
+        positiveInt(env, ShufflePartitions).getOrElse(cores).toString,
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false") ++
       aqe.map("spark.sql.adaptive.enabled" -> _) ++
       split.map("spark.sql.files.maxPartitionBytes" -> _)
   }
 
-  /** Build (or return) the session for `env`'s posture plus `extra` confs. */
+  /** `knob`'s value in `env` as a positive integer, if set; throws
+    * IllegalArgumentException naming the knob on any other value. */
+  def positiveInt(env: Map[String, String], knob: String): Option[Int] =
+    env.get(knob).map(v => v.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(s"$knob must be a positive integer, got '$v'")))
+
+  /** Build (or return) the session for `env`'s posture plus `extra` confs,
+    * with graft's planner extensions installed. */
   def build(extra: Map[String, String] = Map.empty,
       env: Map[String, String] = sys.env): SparkSession = {
     val spark = SparkSession.builder().config(resolve(env) ++ extra).getOrCreate()
+    GraftExtensions.ensureRegistered(spark)
     System.err.println(posture(spark))
     spark
   }

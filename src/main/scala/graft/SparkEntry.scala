@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, sum}
 import graft.ops._
+import graft.plans.GraftExtensions
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -34,7 +35,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.pricingSummary(Tables.lineitem(spark, "/root/testdata/sf0.001"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every named query. A build first installs graft's planner extensions
+    * on the session it is handed ([[GraftExtensions.ensureRegistered]]), so
+    * a query plans the same on a caller-built session as on one from
+    * [[Session.build]], whatever ran before it. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    inventory.map { case (name, build) =>
+      name -> { (s: SparkSession, d: String) =>
+        GraftExtensions.ensureRegistered(s)
+        build(s, d)
+      }
+    }
+
+  private def inventory: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- reference parity: SanFranciscoCrime / PrepOlap / awk (SURVEY §2.3)
     "a2_weekly_histogram" -> ((s, d) =>
       Parity.weeklyHistogram(Tables.events(s, d), col("event_type"), "event_type", 1 to 6)),
@@ -83,16 +96,6 @@ object SparkEntry {
       Relational.customersWithoutOrders(Tables.customer(s, d), Tables.orders(s, d))),
     "win_top3_orders_per_customer" -> ((s, d) =>
       Relational.topOrdersPerCustomer(Tables.orders(s, d), 3)),
-    "win_top3_native" -> ((s, d) => {
-      // custom LogicalPlan + SparkStrategy + heap-based physical operator
-      // (graft.plans.TopKPerKey*) — same results/oracle as the window form
-      val ranked = TopK.perKey(
-        Tables.orders(s, d).select("o_custkey", "o_orderkey", "o_totalprice"),
-        keys = Seq("o_custkey"),
-        orderSpec = Seq(("o_totalprice", true), ("o_orderkey", false)),
-        k = 3)
-      ranked.orderBy("o_custkey", "rn")
-    }),
     "win_order_deltas" -> ((s, d) => Relational.orderDeltas(Tables.orders(s, d))),
     "win_ntile_priority" -> ((s, d) => Relational.priorityPriceRanks(Tables.orders(s, d))),
     "set_ops_priority" -> ((s, d) => Relational.setOps(Tables.orders(s, d))),
@@ -1106,12 +1109,6 @@ object SparkEntry {
         |  WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
         |ORDER BY c_custkey""".stripMargin,
     "win_top3_orders_per_customer" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    CAST(row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey) AS INT) AS rn
-        |  FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-    "win_top3_native" ->
       """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    CAST(row_number() OVER (PARTITION BY o_custkey

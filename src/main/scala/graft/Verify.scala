@@ -306,7 +306,17 @@ object Verify {
       s" '0') AS hash_sum FROM ($inner) fp_t"
   }
 
+  val FpSampleMod = "SPARK_GRAFT_FP_SAMPLE_MOD"
+
+  /** The SPARK_GRAFT_FP queries' sample modulus: [[FpSampleMod]], default 1
+    * (exact). Values above 1 switch to the SAMPLED fingerprint (exact n_rows
+    * + 1-in-mod hashed sample), the replica-scale posture that retires the
+    * md5-bound SKIPs. */
+  def sampleMod(env: Map[String, String]): Long =
+    Session.positiveInt(env, FpSampleMod).getOrElse(1).toLong
+
   def main(args: Array[String]): Unit = {
+    val sampleMod = Verify.sampleMod(sys.env)
     // optional 3rd arg: comma-separated query-name filter (local iteration;
     // the driver always runs the full surface)
     val (sfDir, outDir) = (args(0), args(1))
@@ -326,12 +336,6 @@ object Verify {
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     val fp: Set[String] = sys.env.get("SPARK_GRAFT_FP")
       .map(_.split(",").toSet).getOrElse(Set.empty)
-    // >1 switches the SPARK_GRAFT_FP queries to the SAMPLED fingerprint
-    // (exact n_rows + 1-in-mod hashed sample) — the replica-scale posture
-    // that retires the md5-bound SKIPs; unset/1 keeps the exact form so
-    // every existing sweep artifact's semantics are unchanged
-    val sampleMod: Long = sys.env.get("SPARK_GRAFT_FP_SAMPLE_MOD")
-      .map(_.toLong).getOrElse(1L)
     // pre-fingerprint result schemas, captured while each query runs: the
     // oracle-JSON writer must NOT re-invoke the builder to learn the schema
     // (several builders do eager driver work at construction — the idf

@@ -208,15 +208,6 @@ object GraftFunctions {
   def hamming64(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
 
-  /** Order-sensitive rolling document fingerprint: left fold hashing the
-    * running state with each token (`xxhash64(acc, t)`), so permuted token
-    * order yields a different print. xxhash64 is closed over Long — no
-    * overflow, so it stays legal under Spark 4's default ANSI mode (a plain
-    * polynomial `acc * p + h` rolling hash would throw ARITHMETIC_OVERFLOW).
-    */
-  def doc_fingerprint(toks: Column): Column =
-    aggregate(toks, lit(0L), (acc, t) => xxhash64(acc, t))
-
   /** Order-sensitive polynomial (Rabin–Karp-style) rolling fingerprint over
     * the characters of the space-joined token stream: two independent
     * residues
@@ -226,9 +217,8 @@ object GraftFunctions {
     *
     * packed as `h1 * 2^31 + h2` (62 effective bits — collision odds at
     * 100 TB doc counts comparable to a single 64-bit hash). Every
-    * intermediate stays below 2^39, so it is ANSI-overflow-safe, and unlike
-    * the xxhash64 fold in [[doc_fingerprint]] it is plain integer arithmetic
-    * any engine reproduces exactly — this is the cross-engine-verifiable
+    * intermediate stays below 2^39, so it is ANSI-overflow-safe, and it is
+    * plain integer arithmetic any engine reproduces exactly — this is the cross-engine-verifiable
     * variant (oracled in `text_fingerprint`).
     */
   def doc_fingerprint_poly(toks: Column): Column =

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.plans.Natives
 import graft.functions.GraftFunctions._
 
 /** Corpus-assembly operators for a training-data pipeline (SURVEY.md §2.6 /
@@ -38,7 +39,6 @@ object Corpus {
   def cdcChunks(documents: DataFrame, window: Int = 4,
       mask: Int = 32): DataFrame = {
     require(window >= 1 && mask >= 1, s"bad CDC params: $window, $mask")
-    graft.plans.GraftExtensions.ensureRegistered(documents.sparkSession)
     // the fingerprint fold is applied PER EXPLODED ROW, not nested inside a
     // transform lambda over the cuts array: with the nested form the
     // optimizer's inferred not-null/size filter below the Generate inlines
@@ -64,7 +64,7 @@ object Corpus {
       .withColumn("n", size(col("toks")))
       // fused native shingle-hash loop (graft.plans.ShingleHashArray):
       // window build + polynomial fold in one pass, no shingle-string array
-      .withColumn("hs", call_function("shingle_hash_arr", col("toks"), lit(window)))
+      .withColumn("hs", Natives.shingleHashArr(col("toks"), window))
       // cut positions are EXCLUSIVE token end-counts; a cut at n would
       // duplicate the final boundary, so it is excluded and appended once
       .withColumn("cuts",
@@ -221,7 +221,6 @@ object Corpus {
       "(na + nb - n_shared) AS BIGINT)")
 
   def sourceOverlap(documents: DataFrame, n: Int = 3): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(documents.sparkSession)
     // bucket-then-pair (the Dedup.bucketPairs shape), not a self-join, and
     // ONE corpus-sized shuffle total: collect_set dedups per gram (no
     // separate global distinct pass), per-source gram counts come from the
@@ -234,7 +233,7 @@ object Corpus {
     val spread = Spread.toCores(documents)
     val gramSrcs = spread
       .select(col("source"), explode(array_distinct(
-          call_function("shingles", tokens(col("text")), lit(n))))
+          Natives.shingles(tokens(col("text")), n)))
         .as("gram"))
       .groupBy("gram")
       .agg(array_sort(collect_set(col("source"))).as("srcs"))
@@ -267,7 +266,6 @@ object Corpus {
     // discipline + fused native shingles): the single-projection form
     // re-ran the regex split for each check and the shingle chain for
     // both sides of the repetition ratio
-    graft.plans.GraftExtensions.ensureRegistered(documents.sparkSession)
     val toks = col("_toks")
     val stop = array(Seq("the", "a", "and", "of", "to", "in", "is", "on").map(lit): _*)
     val g2 = col("_g2")
@@ -289,7 +287,7 @@ object Corpus {
     documents
       .select(col("doc_id"), col("text"), tokens(col("text")).as("_toks"))
       .select(col("doc_id"), col("text"), col("_toks"),
-        call_function("shingles", col("_toks"), lit(2)).as("_g2"))
+        Natives.shingles(col("_toks"), 2).as("_g2"))
       .select(col("doc_id"), reason.as("reject_reasons"))
       .withColumn("keep", (col("reject_reasons") === 0).cast("int"))
       .orderBy("doc_id")
@@ -303,10 +301,9 @@ object Corpus {
     * O(matching shingles), never corpus × benchmark. */
   def decontaminate(documents: DataFrame, benchMaxDocId: Long = 5,
       n: Int = 4): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(documents.sparkSession)
     // fused native shingles (codegen) - identical output to the HOF form
     val grams = array_distinct(
-      call_function("shingles", tokens(col("text")), lit(n)))
+      Natives.shingles(tokens(col("text")), n))
     val bench = documents.where(col("doc_id") < benchMaxDocId)
       .select(explode(grams).as("gram")).distinct()
     val corpus = documents.where(col("doc_id") >= benchMaxDocId)
@@ -331,8 +328,7 @@ object Corpus {
     * fingerprints come along as cheap spot-check anchors. The residue keeps
     * the sum below 2^44 at any realistic doc count — ANSI-overflow-safe. */
   def checksum(documents: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(documents.sparkSession)
-    val h = call_function("poly_fp", col("text"))
+    val h = Natives.polyFp(col("text"))
     documents
       .select(col("source"), (h % 2147483647L).as("hr"))
       .groupBy("source")
@@ -356,9 +352,8 @@ object Corpus {
     * from the measured gram cardinality) — no UDF anywhere on the path. */
   def decontaminateBloom(documents: DataFrame, benchMaxDocId: Long = 5,
       n: Int = 4): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(documents.sparkSession)
     val grams = array_distinct(
-      call_function("shingles", tokens(col("text")), lit(n)))
+      Natives.shingles(tokens(col("text")), n))
     val bench = documents.where(col("doc_id") < benchMaxDocId)
       .select(explode(grams).as("gram")).distinct()
       .transform(Materialize.once) // read three times: filter build (×2), join
@@ -582,11 +577,10 @@ object Corpus {
     * span stream, the same bound as [[Dedup.sharedGramPairs]]' index. */
   def duplicateSpans(documents: DataFrame, spanTokens: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.GraftExtensions.ensureRegistered(documents.sparkSession)
     Spread.toCores(documents)
       .select(col("doc_id"),
         explode(array_distinct(
-          call_function("shingles", tokens(col("text")), lit(spanTokens))))
+          Natives.shingles(tokens(col("text")), spanTokens)))
           .as("span"))
       .withColumn("df", count(lit(1)).over(Window.partitionBy("span")))
       .groupBy("doc_id")
@@ -663,7 +657,6 @@ object Corpus {
     require(den >= 1 && estDen >= 1 && estNum >= 0 && minMatch >= 1,
       s"hardNegatives: bad params den=$den est=$estNum/$estDen minMatch=$minMatch")
     val k = 32
-    graft.plans.GraftExtensions.ensureRegistered(documents.sparkSession)
     // one persisted projection feeds the band rows (sig) and both exact-
     // verify sides (toks_d, n_toks); Spread first — a single-file scan
     // would tokenize and minhash the whole corpus on one core
@@ -673,7 +666,7 @@ object Corpus {
       .select(col("doc_id"), tokens(col("text")).as("_t"))
       .select(
         col("doc_id"),
-        call_function("minhash_sig", col("_t"), lit(3), lit(k)).as("sig"),
+        Natives.minhashSig(col("_t"), 3, k).as("sig"),
         array_distinct(col("_t")).as("toks_d"))
       .withColumn("n_toks", size(col("toks_d")))
       .transform(Materialize.once)
@@ -718,13 +711,12 @@ object Corpus {
     * window). The token projection feeds three consumers on different keys,
     * so it persists once, the minhashLsh discipline. */
   def stripDuplicateSpans(documents: DataFrame, spanTokens: Int = 8): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(documents.sparkSession)
     val toksDf = Spread.toCores(documents)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .transform(Materialize.once)
     val spans = toksDf.select(col("doc_id"),
       least(lit(spanTokens), size(col("toks"))).as("span_len"),
-      posexplode(call_function("shingles", col("toks"), lit(spanTokens)))
+      posexplode(Natives.shingles(col("toks"), spanTokens))
         .as(Seq("pos", "span")))
     val dup = spans.select("doc_id", "span").distinct()
       .groupBy("span").agg(count(lit(1)).as("df"))

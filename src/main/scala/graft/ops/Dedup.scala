@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
-import graft.plans.GraftExtensions
+import graft.plans.Natives
 
 /** Deduplication family (SURVEY.md §2.6 / BASELINE north star): exact,
   * MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -89,7 +89,7 @@ object Dedup {
       // fused native expression (graft.plans.MinHashSignature): one loop
       // from token array to k-slot signature, no intermediate arrays
       .withColumn("sig",
-        call_function("minhash_sig", col("toks"), lit(shingleSize), lit(k)))
+        Natives.minhashSig(col("toks"), shingleSize, k))
       .select(col("doc_id"),
         posexplode(minhash_bands(col("sig"), bands, r, k))
           .as(Seq("band_idx", "band_hash")))
@@ -122,7 +122,6 @@ object Dedup {
       .transform(Materialize.once)
     // shingles/signature each materialized ONCE per row (withColumn), then
     // only (doc_id, band) pairs — not token arrays — enter the shuffle
-    GraftExtensions.ensureRegistered(documents.sparkSession)
     val bandRows = minhashBandRows(toksDf, shingleSize, k, bands)
     // bucket-then-pair instead of self-join: one pass over the signatures,
     // one shuffle; pairs colliding in several bands dedupe via distinct
@@ -152,14 +151,13 @@ object Dedup {
   /** (doc_id, fp, chunk_idx, chunk) rows — the pigeonhole bucketing key
     * stream shared by [[simhashNearDup]] and [[capCensus]]. */
   private def simhashChunkRows(documents: DataFrame): DataFrame = {
-    GraftExtensions.ensureRegistered(documents.sparkSession)
     val chunks = 4
     // simhash64 is the most CPU-dense per-row expression in the dedup
     // family (per-token dual-residue hash + 64 bit-votes): spread an
     // under-split scan first, same rationale as gramRows/minhashLsh
     Spread.toCores(documents)
       .select(col("doc_id"),
-        call_function("simhash64", tokens(col("text"))).as("fp"))
+        Natives.simhash64(tokens(col("text"))).as("fp"))
       .withColumn("chunk_idx", explode(sequence(lit(0), lit(chunks - 1))))
       .withColumn("chunk",
         call_function("shiftright", col("fp"), col("chunk_idx") * 16)
@@ -194,14 +192,13 @@ object Dedup {
     // yields fewer partitions than cores (single small file locally — a
     // parquet row group cannot be split); never fires on a real many-split
     // scan
-    GraftExtensions.ensureRegistered(documents.sparkSession)
     val spread = Spread.toCores(documents)
     // fused native shingles (graft.plans.NgramShingles, codegen): one loop
     // per doc instead of the interpreted transform+slice+concat_ws HOF —
     // identical output including the short-doc whole-document collapse
     spread.select(col("doc_id"),
       explode(array_distinct(
-        call_function("shingles", tokens(col("text")), lit(n)))).as("gram"))
+        Natives.shingles(tokens(col("text")), n))).as("gram"))
   }
 
   def sharedGramPairs(documents: DataFrame, n: Int = 4, minShared: Int = 2,
@@ -227,13 +224,11 @@ object Dedup {
     * the ratio — integer output keeps the oracle exact). */
   def minhashJaccardEstimate(documents: DataFrame, shingleSize: Int = 3,
       k: Int = 32): DataFrame = {
-    GraftExtensions.ensureRegistered(documents.sparkSession)
     // two join sides on different keys — persist or the corpus is
     // tokenized + signed twice per run (the minhashLsh discipline); the
     // signature frame is k longs per doc, far smaller than the tokens
     val sigs = documents.select(col("doc_id"),
-      call_function("minhash_sig", tokens(col("text")),
-        lit(shingleSize), lit(k)).as("sig"))
+      Natives.minhashSig(tokens(col("text")), shingleSize, k).as("sig"))
       .transform(Materialize.once)
     sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"))
       .join(sigs.select((col("doc_id") - 1).as("doc_a"),
@@ -258,11 +253,9 @@ object Dedup {
     * capped drops are observable the [[capCensus]] way via `maxFpDf`. */
   def winnowedPairs(documents: DataFrame, shingleSize: Int = 4,
       window: Int = 3, minShared: Int = 2, maxFpDf: Int = 100): DataFrame = {
-    GraftExtensions.ensureRegistered(documents.sparkSession)
     val spread = Spread.toCores(documents)
     val fps = spread.select(col("doc_id"),
-      explode(call_function("winnow_fps", tokens(col("text")),
-        lit(shingleSize), lit(window))).as("fp"))
+      explode(Natives.winnowFps(tokens(col("text")), shingleSize, window)).as("fp"))
     val buckets = fps.groupBy("fp")
       .agg(collect_list("doc_id").as("ids"))
       .where(size(col("ids")).between(2, maxFpDf))
@@ -287,7 +280,6 @@ object Dedup {
       bands: Int = 8, gramN: Int = 4, maxGramDf: Int = 100,
       winnowShingle: Int = 4, winnowWindow: Int = 3,
       maxFpDf: Int = 100): DataFrame = {
-    GraftExtensions.ensureRegistered(documents.sparkSession)
     val toksDf = documents.select(col("doc_id"), tokens(col("text")).as("toks"))
       .where(col("toks").isNotNull)
     def census(path: String, keyed: DataFrame, keys: Seq[String], cap: Int) =
@@ -306,8 +298,8 @@ object Dedup {
     // parameters mirror winnowedPairs' — a census over a different config
     // than the operator ran would audit buckets the operator never formed
     val winnowFps = documents.select(col("doc_id"),
-      explode(call_function("winnow_fps", tokens(col("text")),
-        lit(winnowShingle), lit(winnowWindow))).as("fp"))
+      explode(Natives.winnowFps(tokens(col("text")),
+        winnowShingle, winnowWindow)).as("fp"))
     census("minhash_band",
         minhashBandRows(toksDf, shingleSize, k, bands),
         Seq("band_idx", "band_hash"), MaxBucket)
@@ -496,10 +488,9 @@ object Dedup {
     * the SQL-expressible ground truth the LSH variants approximate, and the
     * DuckDB-oracle anchor for the similarity math. */
   def ngramJaccardAdjacent(documents: DataFrame, n: Int = 2): DataFrame = {
-    GraftExtensions.ensureRegistered(documents.sparkSession)
     val shingled = documents.select(col("doc_id"),
       array_distinct(
-        call_function("shingles", tokens(col("text")), lit(n))).as("grams"))
+        Natives.shingles(tokens(col("text")), n)).as("grams"))
     val a = shingled.select(col("doc_id").as("doc_a"), col("grams").as("grams_a"))
     val b = shingled.select((col("doc_id") - 1).as("doc_a"),
       col("doc_id").as("doc_b"), col("grams").as("grams_b"))
@@ -516,12 +507,11 @@ object Dedup {
     val a = embeddings.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
     val b = embeddings.select((col("vec_id") - 1).as("vec_a"),
       col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
-    GraftExtensions.ensureRegistered(embeddings.sparkSession)
     a.join(b, "vec_a")
       // native codegen cosine; rounded to 6 decimals so engine-level
       // summation-order noise (~1e-16) can't flip the oracle comparison
       .select(col("vec_a"), col("vec_b"),
-        round(call_function("cosine_sim", col("emb_a"), col("emb_b")), 6).as("cos"))
+        round(Natives.cosineSim(col("emb_a"), col("emb_b")), 6).as("cos"))
       .where(col("cos") >= threshold)
       .orderBy("vec_a")
   }
@@ -566,14 +556,13 @@ object Dedup {
 
   def fuzzyLinkBlocked(customer: DataFrame, keySpan: Int = 100,
       maxEdits: Int = 1): DataFrame = {
-    GraftExtensions.ensureRegistered(customer.sparkSession)
     blockedNamePairs(customer, keySpan)
       .groupBy("block")
       .agg(count(lit(1)).as("n_candidates"),
         // banded native verify: O(k·len) per pair vs the built-in's full
         // O(len²) DP — decides exactly the same <= maxEdits set
-        count(when(call_function("lev_bounded",
-            col("name_a"), col("name_b"), lit(maxEdits)) <= maxEdits, 1))
+        count(when(
+          Natives.levBounded(col("name_a"), col("name_b"), maxEdits) <= maxEdits, 1))
           .as("n_matches"))
       .orderBy("block")
   }
@@ -588,10 +577,9 @@ object Dedup {
     * cannot give. */
   def fuzzyEntityClusters(customer: DataFrame, keySpan: Int = 100,
       maxEdits: Int = 1): DataFrame = {
-    GraftExtensions.ensureRegistered(customer.sparkSession)
     val pairs = blockedNamePairs(customer, keySpan)
-      .where(call_function("lev_bounded",
-        col("name_a"), col("name_b"), lit(maxEdits)) <= maxEdits)
+      .where(
+        Natives.levBounded(col("name_a"), col("name_b"), maxEdits) <= maxEdits)
       .select(col("key_a").as("doc_a"), col("key_b").as("doc_b"))
     connectedComponents(pairs)
       .groupBy("cluster_id")
@@ -643,11 +631,9 @@ object Dedup {
     // minhashLsh persist discipline, or the corpus re-shingles 3× per run;
     // Spread first: shingling is CPU-bound row-local work and a small
     // parquet scan is ONE partition (measured 6.3 s → sub-second at sf0.1)
-    GraftExtensions.ensureRegistered(documents.sparkSession)
     val sets = Spread.toCores(documents)
       .select(col("doc_id"),
-        array_distinct(call_function("shingle_hash_arr",
-          tokens(col("text")), lit(n))).as("hs"))
+        array_distinct(Natives.shingleHashArr(tokens(col("text")), n)).as("hs"))
       .transform(Materialize.once)
     val exploded = sets
       .select(col("doc_id"), size(col("hs")).as("len"),

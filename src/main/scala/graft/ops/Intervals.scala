@@ -69,12 +69,12 @@ object Intervals {
       incidentsOf(events), "i_start", "i_end"))
 
   /** The SAME query written as the naive inequality join — no bucket
-    * plumbing in user code. [[graft.plans.OverlapJoinRewrite]] rebuilds the
-    * plan into the bucket equi-join automatically; this query keeps the
-    * rule itself on the oracle-gated path. */
-  def sessionIncidentOverlapAuto(events: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(events.sparkSession)
+    * plumbing in user code. On a session with graft's rules installed
+    * (`graft.Session`, `SparkEntry.queries`),
+    * [[graft.plans.OverlapJoinRewrite]] rebuilds the plan into the bucket
+    * equi-join automatically; this query keeps the rule itself on the
+    * oracle-gated path. */
+  def sessionIncidentOverlapAuto(events: DataFrame): DataFrame =
     overlapOut(sessionsOf(events).join(incidentsOf(events),
       col("s_start") < col("i_end") && col("i_start") < col("s_end")))
-  }
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.GraftExtensions
+import graft.plans.Natives
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.6).
   *
@@ -19,14 +19,6 @@ import graft.plans.GraftExtensions
   *     not the corpus size — bounds the pair work.
   */
 object SimSearch {
-
-  /** Native codegen cosine (graft.plans.CosineSimilarity) — registered on
-    * the DataFrame's own session so ops work on caller-provided sessions.
-    * Bit-identical to the higher-order-function formulation, ~5× faster. */
-  private def cosineNative(df: DataFrame)(a: Column, b: Column): Column = {
-    GraftExtensions.ensureRegistered(df.sparkSession)
-    call_function("cosine_sim", a, b)
-  }
 
   /** Exact cosine top-k neighbors for each query vector (vec_id < nQueries,
     * self-match excluded). Output: (query_id, neighbor_id, rank). */
@@ -46,7 +38,7 @@ object SimSearch {
       // neighbor_id identically in any engine, making top-k deterministic
       // cross-engine (raw doubles could rank-swap on ~1e-16 noise)
       .select(col("query_id"), col("neighbor_id"),
-        round(cosineNative(embeddings)(col("q_emb"), col("embedding")), 6).as("cos"))
+        round(Natives.cosineSim(col("q_emb"), col("embedding")), 6).as("cos"))
     scored
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id")
@@ -103,14 +95,13 @@ object SimSearch {
     // empty result — a parameter misuse, not a defined degenerate
     require(nCells >= 1, s"ivfTopK: nCells must be >= 1, got $nCells")
     require(nProbe >= 1, s"ivfTopK: nProbe must be >= 1, got $nProbe")
-    val cos = cosineNative(embeddings) _
     val centroids = embeddings.where(col("vec_id") < nCells)
       .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
     val assigned = ivfAssign(embeddings, nCells)
     val queryProbes = embeddings.where(col("vec_id") < nQueries)
       .crossJoin(broadcast(centroids))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"), col("cell"),
-        round(cos(col("embedding"), col("c_emb")), 6).as("c_cos"))
+        round(Natives.cosineSim(col("embedding"), col("c_emb")), 6).as("c_cos"))
       .withColumn("cr", row_number().over(
         Window.partitionBy("query_id").orderBy(col("c_cos").desc, col("cell"))))
       .where(col("cr") <= nProbe)
@@ -121,7 +112,7 @@ object SimSearch {
       .join(broadcast(queryProbes), "cell")
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cos(col("q_emb"), col("embedding")), 6).as("cos"))
+        round(Natives.cosineSim(col("q_emb"), col("embedding")), 6).as("cos"))
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id")
           .orderBy(col("cos").desc, col("neighbor_id"))).cast("int"))
@@ -139,7 +130,6 @@ object SimSearch {
     * formulation shuffled the full corpus (×nCells expanded) to compute
     * this same per-row value. */
   private[graft] def ivfAssign(embeddings: DataFrame, nCells: Int): DataFrame = {
-    val cos = cosineNative(embeddings) _
     val codebook: Array[(Int, Array[Float])] = embeddings
       .where(col("vec_id") < nCells)
       .select(col("vec_id"), col("embedding")).collect()
@@ -155,7 +145,7 @@ object SimSearch {
     // greatest() requires ≥ 2 children
     val bestCell = if (codebook.length == 1) lit(codebook.head._1)
     else greatest(codebook.toIndexedSeq.map { case (cellId, cEmb) =>
-      struct(round(cos(col("embedding"), typedlit(cEmb)), 6).as("c"),
+      struct(round(Natives.cosineSim(col("embedding"), typedlit(cEmb)), 6).as("c"),
         lit(-cellId).as("neg"), lit(cellId).as("id"))
     }: _*).getField("id")
     // spread before the per-row argmax: nCells inlined cosines per row on a
@@ -215,7 +205,7 @@ object SimSearch {
       // rounded to 6 before ranking, as in bruteForceTopK: ties then break
       // on neighbor_id identically in any engine
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosineNative(embeddings)(col("q_emb"), col("embedding")), 6).as("cos"))
+        round(Natives.cosineSim(col("q_emb"), col("embedding")), 6).as("cos"))
       .groupBy("query_id", "neighbor_id")
       .agg(max("cos").as("cos"))
     candidates
@@ -245,7 +235,6 @@ object SimSearch {
     * both scores makes the oracle verify the quantization path itself AND
     * exposes the quantization error for threshold tuning. */
   def quantizedCosineAdjacent(embeddings: DataFrame): DataFrame = {
-    GraftExtensions.ensureRegistered(embeddings.sparkSession)
     val asDouble = transform(col("embedding"), x => x.cast("double"))
     // spread before the interpreted-HOF quantization (single-split scan)
     val base = Spread.toCores(embeddings).select(col("vec_id"), col("embedding"),
@@ -258,7 +247,7 @@ object SimSearch {
       aggregate(zip_with(x, y, (p, r) => p * r), lit(0L), (acc, v) => acc + v)
     a.join(b, "vec_a")
       .select(col("vec_a"), col("vec_b"),
-        round(call_function("cosine_sim", col("emb_a"), col("emb_b")), 6)
+        round(Natives.cosineSim(col("emb_a"), col("emb_b")), 6)
           .as("cos_exact"),
         {
           val denom = sqrt(idot(col("q_a"), col("q_a")).cast("double")) *
@@ -329,7 +318,6 @@ object SimSearch {
     // all m argmin codes per row — the composed aggregate(zip_with(slice))
     // form built m × nCentroids interpreted HOF trees per row and its
     // codegen/planning cost alone dominated the query
-    GraftExtensions.ensureRegistered(embeddings.sparkSession)
     val flatCodebook: Seq[Seq[Long]] =
       (0 until m).flatMap(s => codebook(s).map(_.toSeq))
     // spread the RAW scan, then quantize + encode ABOVE the exchange:
@@ -343,19 +331,15 @@ object SimSearch {
       transform(col("embedding"),
         x => round(x.cast("double") * 100).cast("long")).as("qv"))
       .select(col("vec_id"),
-        call_function("pq_codes", col("qv"), lit(subDim),
-          lit(seeds.length), typedlit(flatCodebook)).as("codes"))
+        Natives.pqCodes(col("qv"), subDim, seeds.length, flatCodebook).as("codes"))
     // ONE corpus scan for all queries: the query dimension is an exploded
     // literal (per-query union branches would rescan the corpus nQueries
     // times), and ADC scoring is the fused native expression
     // (graft.plans.PqAdc) — the previous 3-level element_at literal-lookup
     // tree re-materialized the full distance-table literal per subspace and
     // its planning/codegen cost alone was ~3 s per run
-    val qdLit = typedlit(queries.map { case (qid, _) =>
-      qd(qid).map(_.toSeq).toSeq
-    }.toSeq)
-    val adc = call_function("pq_adc", col("codes"),
-      col("q_idx").cast("int"), qdLit)
+    val tables = queries.toSeq.map { case (qid, _) => qd(qid).toSeq.map(_.toSeq) }
+    val adc = Natives.pqAdc(col("codes"), col("q_idx").cast("int"), tables)
     encoded
       .select(col("vec_id"), col("codes"),
         posexplode(typedlit(queries.map(_._1).toSeq)).as(Seq("q_idx", "query_id")))
@@ -392,7 +376,6 @@ object SimSearch {
     require(nProbe >= 1, s"ivfPqTopK: nProbe must be >= 1, got $nProbe")
     require(m >= 1, s"ivfPqTopK: m must be >= 1, got $m")
     require(nCentroids >= 1, s"ivfPqTopK: nCentroids must be >= 1, got $nCentroids")
-    GraftExtensions.ensureRegistered(embeddings.sparkSession)
     val q = embeddings.select(col("vec_id"),
       transform(col("embedding"),
         x => round(x.cast("double") * 100).cast("long")).as("qv"))
@@ -423,17 +406,15 @@ object SimSearch {
       transform(col("embedding"),
         x => round(x.cast("double") * 100).cast("long")).as("qv"))
       .withColumn("cell",
-        element_at(call_function("pq_codes", col("qv"), lit(dim),
-          lit(cellSeeds.length),
-          typedlit(cellSeeds.map(_.toSeq).toSeq)), 1))
+        element_at(Natives.pqCodes(col("qv"), dim, cellSeeds.length,
+          cellSeeds.toSeq.map(_.toSeq)), 1))
     val codebook: Array[Array[Array[Long]]] =
       Array.tabulate(m, pqSeeds.length)((s, c) =>
         pqSeeds(c).slice(s * subDim, (s + 1) * subDim))
     val flatCodebook: Seq[Seq[Long]] =
       (0 until m).flatMap(s => codebook(s).map(_.toSeq))
     val encoded = assigned.withColumn("codes",
-      call_function("pq_codes", col("qv"), lit(subDim),
-        lit(pqSeeds.length), typedlit(flatCodebook)))
+      Natives.pqCodes(col("qv"), subDim, pqSeeds.length, flatCodebook))
     val queries = q.where(col("vec_id") < nQueries).orderBy("vec_id")
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
     // per-query probe list: nProbe nearest cells by exact integer L2,
@@ -442,12 +423,11 @@ object SimSearch {
       cellSeeds.indices.map(c => (sq(qv, cellSeeds(c)), c))
         .sorted.take(nProbe).map(_._2)
     }
-    val qdLit = typedlit(queries.toSeq.map { case (_, qv) =>
+    val tables = queries.toSeq.map { case (_, qv) =>
       (0 until m).map(s => pqSeeds.indices.map(c =>
         sq(qv.slice(s * subDim, (s + 1) * subDim), codebook(s)(c))))
-    })
-    val adc = call_function("pq_adc", col("codes"),
-      col("q_idx").cast("int"), qdLit)
+    }
+    val adc = Natives.pqAdc(col("codes"), col("q_idx").cast("int"), tables)
     encoded
       .select(col("vec_id"), col("cell"), col("codes"),
         posexplode(typedlit(queries.map(_._1).toSeq))
@@ -564,7 +544,7 @@ object SimSearch {
       // round-6 quantization before ranking: the brute-force discipline —
       // ties then break on neighbor_id identically in any engine
       .select(col("query_id"), col("neighbor_id"),
-        round(cosineNative(embeddings)(col("q_emb"), col("embedding")), 6).as("cos"),
+        round(Natives.cosineSim(col("q_emb"), col("embedding")), 6).as("cos"),
         round(aggregate(
           zip_with(col("q_emb"), col("embedding"),
             (x, y) => (x.cast("double") - y.cast("double")) *

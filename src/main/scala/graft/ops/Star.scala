@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
+import graft.plans.Natives
 
 /** Star-schema ETL + OLAP queries (SURVEY.md §2.1-S5/S6, §2.3-A5, §3.3).
   *
@@ -48,14 +49,13 @@ object Star {
     // native codegen week_of_month (graft.plans.WeekOfMonth) — proven equal
     // to the column formula in ExpressionsSpec, and this keeps the custom
     // expression on the oracle-gated path
-    graft.plans.GraftExtensions.ensureRegistered(orders.sparkSession)
     Parity.dictionary(
         orders.select(to_date(col("o_orderdate")).as("d")), "d", "time_id", "d")
       .select(
         col("time_id"), col("d"),
         year(col("d")).as("year"),
         month(col("d")).as("month"),
-        call_function("week_of_month", col("d")).as("week"),
+        Natives.weekOfMonth(col("d")).as("week"),
         dayofmonth(col("d")).as("day"))
       .orderBy("time_id")
   }

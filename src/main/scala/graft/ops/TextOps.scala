@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
+import graft.plans.Natives
 
 /** Text-analysis operators (SURVEY.md §2.6): token stats, quality scoring,
   * language-ID heuristic, document fingerprinting, corpus doc-frequency.
@@ -103,17 +104,14 @@ object TextOps {
   /** Rolling-hash document fingerprint: docs with equal prints are
     * byte-identical token streams (mod collisions). Uses the polynomial
     * dual-residue roll ([[graft.functions.GraftFunctions.doc_fingerprint_poly]])
-    * — plain integer arithmetic a DuckDB oracle recomputes exactly, unlike
-    * the engine-native xxhash64 fold (`doc_fingerprint`, spec-covered),
-    * whose values are engine-specific. */
+    * — plain integer arithmetic a DuckDB oracle recomputes exactly. */
   def fingerprint(documents: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(documents.sparkSession)
     documents
       // native fused fold (graft.plans.PolyFingerprint) — bit-identical to
       // the HOF composition doc_fingerprint_poly, without its per-char
       // UTF8String array
       .select(col("doc_id"),
-        call_function("poly_fp", concat_ws(" ", tokens(col("text")))).as("fp"))
+        Natives.polyFp(concat_ws(" ", tokens(col("text")))).as("fp"))
       .orderBy("doc_id")
   }
 
@@ -152,12 +150,11 @@ object TextOps {
     // separate (non-cheap, multi-referenced aliases), so g2/g3 are plain
     // attribute reads in the ratio projection. Same expressions, same
     // output, fewer evaluations.
-    graft.plans.GraftExtensions.ensureRegistered(documents.sparkSession)
     Spread.toCores(documents)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), size(col("toks")).as("n_tokens"),
-        call_function("shingles", col("toks"), lit(2)).as("g2"),
-        call_function("shingles", col("toks"), lit(3)).as("g3"))
+        Natives.shingles(col("toks"), 2).as("g2"),
+        Natives.shingles(col("toks"), 3).as("g3"))
       .select(col("doc_id"), col("n_tokens"),
         size(col("g2")).as("n_2grams"),
         (lit(1.0) - size(array_distinct(col("g2"))).cast("double")
@@ -227,10 +224,9 @@ object TextOps {
     * co-occurrence statistic behind phrase mining / tokenizer-merge rules.
     * Shingling is per-row; only (gram, partial-count) rows shuffle. */
   def ngramCounts(documents: DataFrame, n: Int = 2, minCount: Long = 3): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(documents.sparkSession)
     documents
       .select(explode(
-        call_function("shingles", tokens(col("text")), lit(n))).as("gram"))
+        Natives.shingles(tokens(col("text")), n)).as("gram"))
       .where(size(split(col("gram"), " ")) === n)  // drop short-doc collapse rows
       .groupBy("gram")
       .agg(count(lit(1)).as("n"))
@@ -398,13 +394,12 @@ object TextOps {
 
   def tfidfSimilarPairs(documents: DataFrame, n: Int = 3, minDf: Long = 2,
       maxDf: Long = 100, minScore: Double = 0.1): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(documents.sparkSession)
     val nDocs = documents.agg(count(lit(1)).as("n_docs"))
     // CPU-bound shingle explode: spread an under-split scan first (the
     // sharedGramPairs discipline; no-op on a real many-split scan)
     val spread = Spread.toCores(documents)
     val grams = spread.select(col("doc_id"),
-      explode(call_function("shingles", tokens(col("text")), lit(n))).as("gram"))
+      explode(Natives.shingles(tokens(col("text")), n)).as("gram"))
     // ONE tokenize+shingle pass, not two: df is derivable from tf (tf has
     // exactly one row per (doc, gram), so count-per-gram over tf IS the
     // document frequency) — the old separate distinct+groupBy branch
@@ -633,7 +628,7 @@ object TextOps {
       .groupBy("w").agg(count(lit(1)).as("cu"))
     val vocab = uni.agg(count(lit(1)).as("v"))
     val db = t.select(col("doc_id"),
-      explode(call_function("shingles", col("toks"), lit(2))).as("bg"))
+      explode(Natives.shingles(col("toks"), 2)).as("bg"))
       .withColumn("w1", substring_index(col("bg"), " ", 1))
     val bi = db.groupBy("bg").agg(count(lit(1)).as("cb"))
     db.join(bi, "bg")

@@ -1,23 +1,21 @@
 package graft.plans
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Registers the graft native expressions as SQL functions.
+/** Installs graft's planner extensions: the top-k planner strategy and the
+  * window top-k and overlap-join optimizer rules. The native expressions
+  * need no installation; they are typed Columns ([[Natives]]).
   *
   * Two entry points:
   *   - config-time: `--conf spark.sql.extensions=graft.plans.GraftExtensions`
   *     (the standard SparkSessionExtensions hook);
-  *   - runtime: [[GraftExtensions.ensureRegistered]] for sessions the
-  *     library did not build — graft ops call it with `df.sparkSession`
-  *     before emitting a `call_function` on one of these names, so queries
-  *     work on any caller-provided session (the driver harness builds its
-  *     own).
+  *   - runtime: [[GraftExtensions.ensureRegistered]], called once per
+  *     session by `graft.Session.build` and by `graft.SparkEntry.queries`
+  *     for sessions the library did not build (the driver harness builds
+  *     its own).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
     ext.injectOptimizerRule(_ => WindowTopKRewrite)
     ext.injectOptimizerRule(_ => OverlapJoinRewrite)
@@ -25,112 +23,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft.plans", name, usage)
-
-  /** Extract a required integer-literal argument with a proper analysis
-    * message (a bare `eval().asInstanceOf[Int]` would surface as
-    * ClassCastException on BIGINT literals or an unresolved-eval internal
-    * error on column arguments). */
-  private def intLiteral(fn: String, arg: String, e: Expression): Int = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    e match {
-      case Literal(v: Int, IntegerType) => v
-      case Literal(v: Long, LongType) => v.toInt
-      case _ => throw new IllegalArgumentException(
-        s"$fn: argument '$arg' must be an integer literal, got $e")
-    }
-  }
-
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("week_of_month"),
-      info("WeekOfMonth", "week_of_month(date) - Calendar.WEEK_OF_MONTH, US locale"),
-      (args: Seq[Expression]) => WeekOfMonth(args.head)),
-    (FunctionIdentifier("cosine_sim"),
-      info("CosineSimilarity", "cosine_sim(a, b) - cosine of two float vectors"),
-      (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))),
-    (FunctionIdentifier("simhash64"),
-      info("SimHash64", "simhash64(tokens) - 64-bit SimHash fingerprint"),
-      (args: Seq[Expression]) => SimHash64(args.head)),
-    (FunctionIdentifier("shingles"),
-      info("NgramShingles", "shingles(tokens, n) - word n-gram strings"),
-      (args: Seq[Expression]) => NgramShingles(args(0),
-        intLiteral("shingles", "n", args(1)))),
-    (FunctionIdentifier("shingle_hash_arr"),
-      info("ShingleHashArray",
-        "shingle_hash_arr(tokens, n) - n-gram shingles hashed to int64"),
-      (args: Seq[Expression]) => ShingleHashArray(args(0),
-        intLiteral("shingle_hash_arr", "n", args(1)))),
-    (FunctionIdentifier("minhash_sig"),
-      info("MinHashSignature",
-        "minhash_sig(tokens, shingleSize, k) - fused shingle+MinHash signature"),
-      (args: Seq[Expression]) => MinHashSignature(args(0),
-        intLiteral("minhash_sig", "shingleSize", args(1)),
-        intLiteral("minhash_sig", "k", args(2)))),
-    (FunctionIdentifier("poly_fp"),
-      info("PolyFingerprint",
-        "poly_fp(string) - dual-residue polynomial rolling fingerprint"),
-      (args: Seq[Expression]) => PolyFingerprint(args.head)),
-    (FunctionIdentifier("lev_bounded"),
-      info("BoundedLevenshtein",
-        "lev_bounded(a, b, k) - banded edit distance capped at k+1"),
-      (args: Seq[Expression]) => BoundedLevenshtein(args(0), args(1),
-        intLiteral("lev_bounded", "k", args(2)))),
-    (FunctionIdentifier("winnow_fps"),
-      info("WinnowFingerprints",
-        "winnow_fps(tokens, shingleSize, window) - winnowing fingerprint set"),
-      (args: Seq[Expression]) => WinnowFingerprints(args(0),
-        intLiteral("winnow_fps", "shingleSize", args(1)),
-        intLiteral("winnow_fps", "window", args(2)))),
-    (FunctionIdentifier("pq_codes"),
-      info("PqEncode",
-        "pq_codes(qv, subDim, nCentroids, codebook) - PQ subspace codes"),
-      (args: Seq[Expression]) => {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        import org.apache.spark.sql.catalyst.util.ArrayData
-        import org.apache.spark.sql.types.{ArrayType, LongType}
-        val cb = args(3) match {
-          case Literal(v: ArrayData, ArrayType(ArrayType(LongType, _), _)) =>
-            Seq.tabulate(v.numElements())(i => v.getArray(i).toLongArray().toSeq)
-          case e => throw new IllegalArgumentException(
-            s"pq_codes: codebook must be an ARRAY<ARRAY<BIGINT>> literal, got $e")
-        }
-        PqEncode(args(0), intLiteral("pq_codes", "subDim", args(1)),
-          intLiteral("pq_codes", "nCentroids", args(2)), cb)
-      }),
-    (FunctionIdentifier("pq_adc"),
-      info("PqAdc",
-        "pq_adc(codes, q_idx, tables) - PQ asymmetric-distance score"),
-      (args: Seq[Expression]) => {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        import org.apache.spark.sql.catalyst.util.ArrayData
-        import org.apache.spark.sql.types.{ArrayType, LongType}
-        val tbl = args(2) match {
-          case Literal(v: ArrayData,
-              ArrayType(ArrayType(ArrayType(LongType, _), _), _)) =>
-            Seq.tabulate(v.numElements()) { q =>
-              val sub = v.getArray(q)
-              Seq.tabulate(sub.numElements())(s => sub.getArray(s).toLongArray().toSeq)
-            }
-          case e => throw new IllegalArgumentException(
-            s"pq_adc: tables must be an ARRAY<ARRAY<ARRAY<BIGINT>>> literal, got $e")
-        }
-        PqAdc(args(0), args(1), tbl)
-      }))
-
-  /** Idempotent runtime registration into an existing session: SQL
-    * functions via the registry, the top-k planner strategy via the public
-    * `experimental.extraStrategies` hook. Synchronized: the underlying
-    * SimpleFunctionRegistry map is not thread-safe, and ops may call this
-    * from concurrently-built queries (e.g. a parallel Verify). */
+  /** Idempotent runtime installation into an existing session through the
+    * public `experimental` hooks. Synchronized: sessions may be handed to
+    * concurrently-built queries (e.g. a parallel Verify). */
   def ensureRegistered(spark: SparkSession): Unit = synchronized {
-    val registry = spark.sessionState.functionRegistry
-    functions.foreach { case (ident, inf, builder) =>
-      if (!registry.functionExists(ident))
-        registry.registerFunction(ident, inf, builder)
-    }
     val experimental =
       org.apache.spark.sql.GraftBridge.classicSession(spark).experimental
     if (!experimental.extraStrategies.contains(TopKPerKeyStrategy))

@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * where composing built-ins is either impossible (`W` pattern rejected by
   * Spark 3+, SURVEY §4.3) or measurably slow (higher-order-function lambdas
   * are interpreted per element with boxing; these loops codegen to tight
-  * scalar Java). Registered as SQL functions by [[GraftExtensions]].
+  * scalar Java). Built as typed Columns by [[Natives]].
   */
 
 /** Static helpers referenced from generated code (stable JVM names). */
@@ -518,9 +518,9 @@ case class WinnowFingerprints(child: Expression, shingleSize: Int, window: Int)
 /** `pq_codes(qv, subDim, nCentroids, flatCodebook)`: product-quantization
   * encoding fused into one loop — for each of the m = len(qv)/subDim
   * subspaces, the index of the nearest codebook subvector (exact int64
-  * squared distance, ties to the lowest index). The codebook arrives as an
-  * ARRAY<ARRAY<BIGINT>> literal, row-major `[s * nCentroids + c]`, captured
-  * at build time into a plain JVM array — the composed formulation
+  * squared distance, ties to the lowest index). The codebook is a
+  * row-major `[s * nCentroids + c]` Scala Seq, captured at build time into
+  * a plain JVM array — the composed formulation
   * (`aggregate(zip_with(slice(...)))` × m × nCentroids) builds 128
   * interpreted HOF trees per row and dominates the PQ query's runtime with
   * codegen/planning cost alone. */

@@ -28,8 +28,10 @@ import org.apache.spark.sql.types.IntegerType
   * the window form on 600k-row lineitem top-2-per-order at sf0.1 (k=2,
   * ~4 rows/key — the margin grows with rows per key).
   *
-  * Results are asserted identical to the window formulation AND
-  * hash-matched against the DuckDB oracle (`win_top3_native`).
+  * Its one way into a plan is [[WindowTopKRewrite]] over the idiomatic
+  * window form; results are asserted identical to Spark's Window and
+  * hash-matched against the DuckDB oracle (`win_top3_orders_per_customer`,
+  * `samp_n_per_group`).
   */
 case class TopKPerKeyPlan(
     keyNames: Seq[String],
@@ -40,8 +42,8 @@ case class TopKPerKeyPlan(
   extends UnaryNode {
   // k <= 0 would SILENTLY emit one row per key: the exec's first-row branch
   // seeds each key's heap unconditionally, and only subsequent rows check
-  // the limit. (The WindowTopKRewrite path already guards kv >= 1; this
-  // covers direct construction through ops.TopK.)
+  // the limit. (WindowTopKRewrite already guards kv >= 1; this guards
+  // any other construction.)
   require(k >= 1, s"top_k_per_key: k must be >= 1, got $k")
   override def output: Seq[Attribute] = child.output :+ rankAttr
   // rn is GENERATED here, not consumed from the child — without this the

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.plans.Natives
 
 /** Structured Streaming surface (SURVEY.md §2.6). The reference is pure
   * batch — its "Previous Three Months" dataset implies re-execution-as-
@@ -111,11 +112,10 @@ object Streaming {
     * cross-engine polynomial `poly_fp` (one long per doc — the only column
     * of the corpus that ships). */
   def dedupAgainstCorpus(docs: DataFrame, corpus: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(corpus.sparkSession)
     val corpusFps = corpus
-      .select(call_function("poly_fp", col("text")).as("fp")).distinct()
+      .select(Natives.polyFp(col("text")).as("fp")).distinct()
     docs
-      .withColumn("fp", call_function("poly_fp", col("text")))
+      .withColumn("fp", Natives.polyFp(col("text")))
       .join(broadcast(corpusFps), Seq("fp"), "left_anti")
       .drop("fp")
   }

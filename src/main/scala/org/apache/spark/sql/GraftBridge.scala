@@ -1,18 +1,20 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Minimal bridge into `private[sql]` constructors the extension API does
-  * not expose: building a DataFrame from a custom logical plan node. This is
-  * the standard third-party-extension technique (a one-object file in the
-  * org.apache.spark.sql package); everything else in graft uses public API.
+/** Minimal bridge into `private[sql]` conversions the extension API does
+  * not expose: a Column's catalyst expression and back, and the classic
+  * session behind the public one. This is the standard third-party-extension
+  * technique (a one-object file in the org.apache.spark.sql package);
+  * everything else in graft uses public API.
   */
 object GraftBridge {
-  def ofRows(spark: classic.SparkSession, plan: LogicalPlan): classic.DataFrame =
-    classic.Dataset.ofRows(spark, plan)
+  def expression(c: Column): Expression = classic.ColumnConversions.expression(c)
 
-  def analyzedPlan(df: Dataset[Row]): LogicalPlan =
-    df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
+  def column(e: Expression): Column = {
+    import classic.ClassicConversions._
+    Column(e)
+  }
 
   def classicSession(spark: SparkSession): classic.SparkSession =
     spark.asInstanceOf[classic.SparkSession]

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
+import graft.plans.Natives
 
 /** The polynomial-hash cross-engine contract on NON-ASCII text: native
   * expression, HOF composition, and the oracle's `ord()` fold (replicated
@@ -39,10 +40,9 @@ class CrossEnginePolySpec extends AnyFunSuite {
     "")
 
   test("poly_fp: native == HOF == oracle ord() fold on non-ASCII") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val rows = fixtures.toDF("s")
       .select(col("s"),
-        call_function("poly_fp", col("s")).as("native"),
+        Natives.polyFp(col("s")).as("native"),
         GraftFunctions.string_fingerprint_poly(col("s")).as("hof"))
       .collect()
     rows.foreach { r =>
@@ -56,7 +56,6 @@ class CrossEnginePolySpec extends AnyFunSuite {
   }
 
   test("lev_bounded: empty/short second string returns the true distance") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     // the band loop is empty when len(b) = 0; before the rowMin fix the
     // early-exit fired and returned k+1 even though the true distance
     // (pure deletions) was <= k
@@ -69,7 +68,7 @@ class CrossEnginePolySpec extends AnyFunSuite {
       ("abc", "", 2, 3))   // true distance 3 > k: capped at k+1
     cases.zipWithIndex.foreach { case ((a, b, k, want), i) =>
       val got = Seq((a, b)).toDF("a", "b")
-        .select(call_function("lev_bounded", col("a"), col("b"), lit(k)))
+        .select(Natives.levBounded(col("a"), col("b"), k))
         .collect().head.getInt(0)
       assert(got == want, s"case $i: lev_bounded('$a','$b',$k) = $got, want $want")
     }
@@ -80,7 +79,7 @@ class CrossEnginePolySpec extends AnyFunSuite {
     val pairs = Seq.tabulate(300)(_ => (word(), word())).toDF("a", "b")
     for (k <- 0 to 3) {
       val diff = pairs.select(
-          call_function("lev_bounded", col("a"), col("b"), lit(k)).as("bounded"),
+          Natives.levBounded(col("a"), col("b"), k).as("bounded"),
           least(levenshtein(col("a"), col("b")), lit(k + 1)).as("expected"))
         .where(col("bounded") =!= col("expected")).count()
       assert(diff == 0L, s"k=$k")

@@ -4,7 +4,7 @@ import java.sql.Date
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
-import graft.plans.GraftExtensions
+import graft.plans.Natives
 
 /** Native codegen expressions must be value-identical to their composed
   * higher-order-function formulations (which the DuckDB oracle already
@@ -13,24 +13,16 @@ class ExpressionsSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
 
-  GraftExtensions.ensureRegistered(spark)
-
   test("week_of_month native == column formula over four decades") {
     val start = java.time.LocalDate.of(1990, 1, 1)
     val days = (0L until 14975L by 7L).map(d => Date.valueOf(start.plusDays(d)))
     val mismatches = days.toDF("d")
       .select(
         GraftFunctions.week_of_month(col("d")).as("formula"),
-        call_function("week_of_month", col("d")).as("native"))
+        Natives.weekOfMonth(col("d")).as("native"))
       .where(col("formula") =!= col("native"))
       .count()
     assert(mismatches == 0)
-  }
-
-  test("week_of_month usable from SQL via extension registration") {
-    val got = spark.sql("SELECT week_of_month(DATE '2013-03-31') AS w")
-      .collect().head.getInt(0)
-    assert(got == 6)  // the six-week-month edge
   }
 
   test("cosine_sim native is bit-identical to the HOF composition") {
@@ -39,7 +31,7 @@ class ExpressionsSpec extends AnyFunSuite {
       .crossJoin(emb.select(col("embedding").as("b")).limit(5))
     val diffs = pairs.select(
         GraftFunctions.cosine_similarity(col("a"), col("b")).as("hof"),
-        call_function("cosine_sim", col("a"), col("b")).as("native"))
+        Natives.cosineSim(col("a"), col("b")).as("native"))
       .where(col("hof") =!= col("native"))  // exact double equality
       .count()
     assert(diffs == 0)
@@ -47,7 +39,7 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("cosine_sim guards zero norms to 0.0") {
     val got = Seq((Array(0f, 0f), Array(1f, 2f))).toDF("a", "b")
-      .select(call_function("cosine_sim", col("a"), col("b")))
+      .select(Natives.cosineSim(col("a"), col("b")))
       .collect().head.getDouble(0)
     assert(got == 0.0)
   }
@@ -58,7 +50,7 @@ class ExpressionsSpec extends AnyFunSuite {
     val diffs = docs.select(
         GraftFunctions.minhash_slots(
           GraftFunctions.shingle_hashes(GraftFunctions.shingles(toks, 3)), 32).as("hof"),
-        call_function("minhash_sig", toks, lit(3), lit(32)).as("native"))
+        Natives.minhashSig(toks, 3, 32).as("native"))
       .where(col("hof") =!= col("native"))
       .count()
     assert(diffs == 0)
@@ -71,7 +63,7 @@ class ExpressionsSpec extends AnyFunSuite {
     val toks = GraftFunctions.tokens(col("text"))
     val diffs = docs.select(
         GraftFunctions.shingles(toks, 3).as("hof"),
-        call_function("shingles", toks, lit(3)).as("native"))
+        Natives.shingles(toks, 3).as("native"))
       .where(col("hof") =!= col("native"))
       .count()
     assert(diffs == 0)
@@ -82,7 +74,7 @@ class ExpressionsSpec extends AnyFunSuite {
     val toks = GraftFunctions.tokens(col("text"))
     val diffs = docs.select(
         GraftFunctions.simhash64(toks).as("hof"),
-        call_function("simhash64", toks).as("native"))
+        Natives.simhash64(toks).as("native"))
       .where(col("hof") =!= col("native"))
       .count()
     assert(diffs == 0)
@@ -96,7 +88,7 @@ class ExpressionsSpec extends AnyFunSuite {
     val toks = GraftFunctions.tokens(col("text"))
     val diffs = corpus.select(
         GraftFunctions.shingle_hashes(GraftFunctions.shingles(toks, 3)).as("hof"),
-        call_function("shingle_hash_arr", toks, lit(3)).as("native"))
+        Natives.shingleHashArr(toks, 3).as("native"))
       .where(col("hof") =!= col("native"))
       .count()
     assert(diffs == 0)
@@ -111,7 +103,7 @@ class ExpressionsSpec extends AnyFunSuite {
     val toks = GraftFunctions.tokens(col("text"))
     val diffs = corpus.select(
         GraftFunctions.doc_fingerprint_poly(toks).as("hof"),
-        call_function("poly_fp", concat_ws(" ", toks)).as("native"))
+        Natives.polyFp(concat_ws(" ", toks)).as("native"))
       .where(col("hof") =!= col("native"))
       .count()
     assert(diffs == 0)

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.plans.Natives
 
 /** Operator-level specs on tiny inline fixtures (SURVEY §5.2-1). */
 class OpsSpec extends AnyFunSuite {
@@ -444,14 +445,14 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("SQL surface: the same query through spark.sql over temp views + graft functions") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
-    Tables.orders(spark, TestSpark.sf0001).createOrReplaceTempView("orders_v")
-    // the A2-style bucket histogram in pure SQL, using the registered
-    // native week_of_month — the path a SQL-only user of the engine takes
+    // the view carries graft's native week_of_month as a column; the
+    // A2-style bucket histogram over it is pure SQL
+    Tables.orders(spark, TestSpark.sf0001)
+      .withColumn("week", Natives.weekOfMonth(to_date(col("o_orderdate"))))
+      .createOrReplaceTempView("orders_v")
     val viaSql = spark.sql(
       """SELECT o_orderpriority,
-        |  CAST((month(o_orderdate) - 1) * 5
-        |    + week_of_month(CAST(o_orderdate AS DATE)) AS INT) AS bucket,
+        |  CAST((month(o_orderdate) - 1) * 5 + week AS INT) AS bucket,
         |  count(*) AS n
         |FROM orders_v GROUP BY 1, 2 ORDER BY o_orderpriority, bucket""".stripMargin)
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap

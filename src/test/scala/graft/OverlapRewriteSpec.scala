@@ -33,7 +33,6 @@ class OverlapRewriteSpec extends AnyFunSuite {
   private val expected = Set((1L, 10L), (2L, 12L), (4L, 13L))
 
   test("rewrites the nested-loop overlap join to a bucket equi-join, same result") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val df = naiveJoin
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
@@ -47,7 +46,6 @@ class OverlapRewriteSpec extends AnyFunSuite {
   }
 
   test("disabled by conf: the naive plan comes back, results unchanged") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     spark.conf.set("spark.graft.overlapJoin.enabled", "false")
     try {
       val df = naiveJoin
@@ -60,7 +58,6 @@ class OverlapRewriteSpec extends AnyFunSuite {
   }
 
   test("closed bounds (<=): touching intervals DO match, still bucket-planned") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val df = left.join(right,
       col("ls") <= col("re") && col("rs") <= col("le"))
     val p = df.queryExecution.executedPlan.toString
@@ -73,7 +70,6 @@ class OverlapRewriteSpec extends AnyFunSuite {
   }
 
   test("equi-joins and mixed conditions are left alone") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val l2 = left.withColumn("k", col("lid") % 2)
     val r2 = right.withColumn("k", col("rid") % 2)
     val df = l2.join(r2, l2("k") === r2("k") && col("ls") < col("re") && col("rs") < col("le"))
@@ -81,7 +77,6 @@ class OverlapRewriteSpec extends AnyFunSuite {
   }
 
   test("null endpoints never join (matches the naive predicate)") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val lNull = Seq((9L, Option.empty[Timestamp], Option(ts("2024-01-01 11:00:00"))))
       .toDF("lid", "ls", "le")
     val got = lNull.join(right, col("ls") < col("re") && col("rs") < col("le"))

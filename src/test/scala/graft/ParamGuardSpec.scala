@@ -164,11 +164,6 @@ class ParamGuardSpec extends AnyFunSuite {
       graft.functions.GraftFunctions.minhash_bands(col("sig"), 65536, 65536, 32))
     intercept[IllegalArgumentException](
       graft.ops.Profile.profile(docs, Seq.empty))
-    // the heap top-k operator seeds each key's heap with the first row
-    // unconditionally — k = 0 would emit one row per key, so the plan
-    // rejects it at construction
-    intercept[IllegalArgumentException](
-      graft.ops.TopK.perKey(docs, Seq("source"), Seq(("doc_id", false)), 0))
   }
 
   test("valueOutliers: zero/undefined variance groups flag nothing") {

@@ -167,7 +167,6 @@ class PropertiesSpec extends AnyFunSuite {
   }
 
   test("property: heap top-k == Scala sort-and-take on random tied data") {
-    import graft.ops.TopK
     // heavy ties in the value column (domain 0..4) + a unique id tiebreak:
     // the partial/final heap split must agree with a plain sort for ANY
     // input partitioning — the partial pass prunes per (key, partition),
@@ -179,8 +178,9 @@ class PropertiesSpec extends AnyFunSuite {
         Gen.choose(1, 13)), runs = 6) { case (rows0, k, parts) =>
       val rows = rows0.zipWithIndex.map { case ((g, v), i) => (g, v, i.toLong) }
       val df = rows.toDF("g", "v", "id").repartition(parts)
-      val got = TopK.perKey(df, Seq("g"), Seq(("v", true), ("id", false)), k)
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
+      val top = TopKSpec.windowTopK(df, Seq("g"), Seq(("v", true), ("id", false)), k)
+      assert(top.queryExecution.executedPlan.toString.contains("TopKPerKeyPartial"))
+      val got = top.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
           r.getInt(3))).sortBy(t => (t._1, t._4)).toSeq
       val want = rows.groupBy(_._1).toSeq.flatMap { case (g, grp) =>
         grp.sortBy(t => (-t._2, t._3)).take(k).zipWithIndex

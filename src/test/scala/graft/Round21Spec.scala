@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
+import graft.plans.Natives
 
 /** Round-21 optimization regression tests: every change this round
   * restructured HOW an operator computes (materialize-once fan-outs,
@@ -107,7 +108,6 @@ class Round21Spec extends AnyFunSuite {
   // ---- native shingles == HOF shingles at the swapped call sites ------------
 
   test("fused native shingles equals the HOF formulation on edge docs") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     import graft.functions.GraftFunctions
     val docs = Seq(
       (0L, "a b c d e"),      // normal
@@ -120,7 +120,7 @@ class Round21Spec extends AnyFunSuite {
       val both = docs.select(
         GraftFunctions.shingles(GraftFunctions.tokens(col("text")), n)
           .as("hof"),
-        call_function("shingles", GraftFunctions.tokens(col("text")), lit(n))
+        Natives.shingles(GraftFunctions.tokens(col("text")), n)
           .as("native"))
         .collect()
       both.foreach { r =>

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops._
+import graft.plans.Natives
 
 /** Round-3 operators: chunking, k-means, PageRank, blocked fuzzy linkage. */
 class Round3Spec extends AnyFunSuite {
@@ -136,7 +137,6 @@ class Round3Spec extends AnyFunSuite {
   // ---- BoundedLevenshtein ---------------------------------------------------
 
   test("lev_bounded == min(levenshtein, k+1) over random string pairs") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val rng = new scala.util.Random(42)
     def word() = (0 until 1 + rng.nextInt(12))
       .map(_ => ('a' + rng.nextInt(4)).toChar).mkString // small alphabet: close pairs
@@ -144,7 +144,7 @@ class Round3Spec extends AnyFunSuite {
       .toDF("id", "a", "b")
     for (k <- 0 to 3) {
       val diff = pairs.select(
-        call_function("lev_bounded", col("a"), col("b"), lit(k)).as("bounded"),
+        Natives.levBounded(col("a"), col("b"), k).as("bounded"),
         least(levenshtein(col("a"), col("b")), lit(k + 1)).as("expected"))
         .where(col("bounded") =!= col("expected")).count()
       assert(diff == 0L, s"k=$k")
@@ -152,11 +152,10 @@ class Round3Spec extends AnyFunSuite {
   }
 
   test("lev_bounded: empty strings and exact-k edges") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val got = Seq(("", "", 0), ("", "abc", 1), ("abc", "abd", 2), ("abc", "xyz", 3))
       .toDF("a", "b", "id")
       .select(col("id"),
-        call_function("lev_bounded", col("a"), col("b"), lit(2)).as("d"))
+        Natives.levBounded(col("a"), col("b"), 2).as("d"))
       .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
     assert(got(0) == 0) // "" vs ""
     assert(got(1) == 3) // distance 3 capped at k+1

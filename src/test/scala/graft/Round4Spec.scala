@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.functions.{col, filter, length, split}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Corpus, Dedup, Ml, Multimodal}
+import graft.plans.Natives
 
 /** Round-4 hardening specs: loud-failure guards and replay semantics. */
 class Round4Spec extends AnyFunSuite {
@@ -206,8 +208,6 @@ class Round4Spec extends AnyFunSuite {
   // ---- winnowing fingerprints ----------------------------------------------
 
   test("winnow_fps equals the brute-force reference (hash all, window mins, distinct)") {
-    import graft.plans.GraftExtensions
-    GraftExtensions.ensureRegistered(spark)
     val k = 4; val w = 3
     def ref(toks: Seq[String]): Seq[Long] = {
       val shs =
@@ -227,8 +227,8 @@ class Round4Spec extends AnyFunSuite {
     )
     val got = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
-      .selectExpr("doc_id",
-        s"winnow_fps(filter(split(text, '\\\\s+'), x -> length(x) > 0), $k, $w) AS fps")
+      .select(col("doc_id"), Natives.winnowFps(
+        filter(split(col("text"), "\\s+"), x => length(x) > 0), k, w).as("fps"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
     docs.zipWithIndex.foreach { case (t, i) =>
       val toks = t.split("\\s+").filter(_.nonEmpty).toSeq
@@ -249,8 +249,6 @@ class Round4Spec extends AnyFunSuite {
   }
 
   test("winnow_fps property: 200 seeded-random docs match the reference fold") {
-    import graft.plans.GraftExtensions
-    GraftExtensions.ensureRegistered(spark)
     val k = 4; val w = 3
     def ref(toks: Seq[String]): Seq[Long] = {
       val shs =
@@ -269,8 +267,8 @@ class Round4Spec extends AnyFunSuite {
     }
     val got = docs.map { case (id, t) => (id, t.mkString(" ")) }
       .toDF("doc_id", "text")
-      .selectExpr("doc_id",
-        s"winnow_fps(filter(split(text, '\\\\s+'), x -> length(x) > 0), $k, $w) AS fps")
+      .select(col("doc_id"), Natives.winnowFps(
+        filter(split(col("text"), "\\s+"), x => length(x) > 0), k, w).as("fps"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
     docs.foreach { case (id, toks) =>
       assert(got(id) == ref(toks), s"doc $id (${toks.length} toks)")

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Multimodal
+import graft.plans.Natives
 
 /** Round-5 specs: real PNG pixel decode (IDAT inflate + filter
   * reconstruction), RIFF pad-byte walking, and PQ loud-failure guards. */
@@ -99,15 +100,13 @@ class Round5Spec extends AnyFunSuite {
 
   test("pq_codes: ragged embedding row fails loudly instead of mis-ranking") {
     import org.apache.spark.sql.functions._
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     // 8-long codebook rows (m=2, subDim=4, nc=1); one 6-long data row
     val df = Seq(
       (0L, Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L)),
       (1L, Seq(1L, 2L, 3L, 4L, 5L, 6L))).toDF("vec_id", "qv")
     val cb = Seq(Seq(1L, 2L, 3L, 4L), Seq(5L, 6L, 7L, 8L))
     val e = intercept[Exception] {
-      df.select(call_function("pq_codes", col("qv"), lit(4), lit(1),
-        typedlit(cb))).collect()
+      df.select(Natives.pqCodes(col("qv"), 4, 1, cb)).collect()
     }
     // the IllegalArgumentException may arrive wrapped (task failure → Spark
     // exception): search the cause chain for the loud pq_codes message
@@ -468,14 +467,13 @@ class Round5Spec extends AnyFunSuite {
 
   test("pq_adc: scores equal driver-side table lookups on the fused path") {
     import org.apache.spark.sql.functions._
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     // 2 queries x 2 subspaces x 3 centroids
     val tables = Seq(
       Seq(Seq(10L, 20L, 30L), Seq(1L, 2L, 3L)),
       Seq(Seq(100L, 200L, 300L), Seq(7L, 8L, 9L)))
     val df = Seq((Seq(0, 2), 0), (Seq(1, 1), 1)).toDF("codes", "q")
-    val got = df.select(call_function("pq_adc", col("codes"),
-      col("q"), typedlit(tables)).as("adc")).collect().map(_.getLong(0)).toSeq
+    val got = df.select(Natives.pqAdc(col("codes"), col("q"), tables).as("adc"))
+      .collect().map(_.getLong(0)).toSeq
     assert(got == Seq(10L + 3L, 200L + 8L))
   }
 }

@@ -3,18 +3,21 @@ package graft
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.scalatest.Tag
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Dedup, Rank, TopK}
+import graft.ops.{Dedup, Rank}
 
 /** Tag for the heavier synthetic-scale tests (run by default; filter with
   * `testOnly -- -l graft.SlowStress` when iterating elsewhere). */
 object SlowStress extends Tag("graft.SlowStress")
 
-/** Empirical scale-stress checks: the comments in Rank/TopK/Dedup argue
+/** Empirical scale-stress checks: the comments in Rank/top-k/Dedup argue
   * their plans stay bounded under skew — these specs MEASURE it on a
   * 10×-sf0.1-sized synthetic with one hot key at 20 %, using real task
   * metrics from a SparkListener. A straggler (one task reading ≫ the
@@ -26,6 +29,12 @@ class ScaleStressSpec extends AnyFunSuite {
 
   private class TaskStats extends SparkListener {
     val byStage = TrieMap[Int, ArrayBuffer[Long]]()
+    val submitted = new AtomicInteger
+    val completed = new AtomicInteger
+    override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+      submitted.incrementAndGet()
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      completed.incrementAndGet()
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
       val m = t.taskMetrics
       if (m != null)
@@ -39,8 +48,13 @@ class ScaleStressSpec extends AnyFunSuite {
   private def shuffleStages(action: => Unit): Seq[Seq[Long]] = {
     val l = new TaskStats
     spark.sparkContext.addSparkListener(l)
-    try { action; Thread.sleep(2000) } // let the listener bus drain
-    finally spark.sparkContext.removeSparkListener(l)
+    try {
+      action
+      // a stage's completion follows its task ends on the listener bus
+      assert(StageProbe.drain(() => l.submitted.get(), () => l.completed.get(),
+        System.nanoTime() + 30L * 1000 * 1000 * 1000),
+        "listener bus did not drain")
+    } finally spark.sparkContext.removeSparkListener(l)
     l.byStage.values.map(_.toSeq).filter(_.exists(_ > 0)).toSeq
   }
 
@@ -88,8 +102,9 @@ class ScaleStressSpec extends AnyFunSuite {
     val inputParts = skewedEvents.rdd.getNumPartitions
     var checked = false
     val stages = shuffleStages {
-      val top = TopK.perKey(skewedEvents, Seq("k"), Seq(("v", true)), k)
-        .collect()
+      val ranked = TopKSpec.windowTopK(skewedEvents, Seq("k"), Seq(("v", true)), k)
+      assert(ranked.queryExecution.executedPlan.toString.contains("TopKPerKeyPartial"))
+      val top = ranked.collect()
       // hot key's top-5 by value desc is exactly the 5 largest hot ids
       val hotTop = top.filter(_.getString(0) == "hot")
         .map(r => (r.getInt(2), r.getLong(1))).sorted.toSeq

@@ -55,6 +55,20 @@ class SessionSpec extends AnyFunSuite {
     }
   }
 
+  test("Bench reps and Verify's fingerprint sample modulus reject bad values by knob name") {
+    assert(Bench.reps(Map.empty) == 3)
+    assert(Bench.reps(Map(Bench.Reps -> "5")) == 5)
+    assert(Verify.sampleMod(Map.empty) == 1L)
+    assert(Verify.sampleMod(Map(Verify.FpSampleMod -> "64")) == 64L)
+    val parsers = Seq[(String, Map[String, String] => Any)](
+      Bench.Reps -> Bench.reps, Verify.FpSampleMod -> Verify.sampleMod)
+    for ((knob, parse) <- parsers; v <- Seq("0", "-3", "abc", "")) {
+      val e = intercept[IllegalArgumentException](parse(Map(knob -> v)))
+      assert(!e.isInstanceOf[NumberFormatException], e)
+      assert(e.getMessage.contains(knob), e.getMessage)
+    }
+  }
+
   test("TestSpark runs local[4], 4 shuffle partitions, UTC, UI off") {
     val spark = TestSpark.spark
     assert(spark.sparkContext.master == "local[4]")

@@ -1,42 +1,50 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.{Relational, TopK}
+import org.scalatest.funsuite.AnyFunSuite
+import graft.ops.Relational
 
-/** The custom heap-based top-k operator must agree row-for-row with the
-  * window formulation, and its physical plan must contain the custom exec
-  * with NO window/sort doing the ranking. */
+/** The heap-based top-k operator, entered through its one planner path
+  * (`WindowTopKRewrite` over the idiomatic window form), must agree
+  * row-for-row with the window formulation's row_number semantics, and its
+  * physical plan must contain the custom exec with NO window/sort doing the
+  * ranking. */
 class TopKSpec extends AnyFunSuite {
   import TestSpark.spark
+  import TopKSpec.windowTopK
+
+  private def ordersTop3 = windowTopK(
+    Tables.orders(spark, TestSpark.sf0001)
+      .select("o_custkey", "o_orderkey", "o_totalprice"),
+    keys = Seq("o_custkey"),
+    orderSpec = Seq(("o_totalprice", true), ("o_orderkey", false)), k = 3)
 
   test("heap top-k == window row_number top-k on real data") {
     val orders = Tables.orders(spark, TestSpark.sf0001)
-    val viaWindow = Relational.topOrdersPerCustomer(orders, 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    val viaHeap = TopK.perKey(
-        orders.select("o_custkey", "o_orderkey", "o_totalprice"),
-        keys = Seq("o_custkey"),
-        orderSpec = Seq(("o_totalprice", true), ("o_orderkey", false)), k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    assert(viaHeap == viaWindow)
+    val viaWindow = orders.select("o_custkey", "o_orderkey", "o_totalprice")
+      // a nulls-last ascending key (o_orderkey has no nulls) is outside the
+      // rewrite's safe shape, so this side really runs Spark's Window
+      .withColumn("rn", row_number().over(Window.partitionBy("o_custkey")
+        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc_nulls_last)))
+      .where(col("rn") <= 3)
+    val windowPlan = viaWindow.queryExecution.executedPlan.toString
+    assert(windowPlan.contains("Window [") && !windowPlan.contains("TopKPerKey"))
+    val viaHeap = ordersTop3
+    assert(viaHeap.queryExecution.executedPlan.toString.contains("TopKPerKey"))
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+    assert(rows(viaHeap) == rows(viaWindow))
   }
 
   test("physical plan uses TopKPerKeyExec with no Window operator") {
-    val ranked = TopK.perKey(
-      Tables.orders(spark, TestSpark.sf0001)
-        .select("o_custkey", "o_orderkey", "o_totalprice"),
-      keys = Seq("o_custkey"),
-      orderSpec = Seq(("o_totalprice", true), ("o_orderkey", false)), k = 3)
-    val plan = org.apache.spark.sql.GraftBridge
-      .analyzedPlan(ranked).toString + "\n" +
-      ranked.queryExecution.executedPlan.toString
+    val plan = ordersTop3.queryExecution.executedPlan.toString
     assert(plan.contains("TopKPerKey"))
-    assert(!ranked.queryExecution.executedPlan.toString.contains("Window"))
+    assert(!plan.contains("Window"))
   }
 
   test("optimizer rule rewrites the idiomatic window top-k into the heap operator") {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val viaWindow = Relational.topOrdersPerCustomer(
       Tables.orders(spark, TestSpark.sf0001), 3)
     val plan = viaWindow.queryExecution.executedPlan.toString
@@ -51,7 +59,7 @@ class TopKSpec extends AnyFunSuite {
   }
 
   test("partial heap pass prunes below the exchange (map-side top-k)") {
-    val ranked = TopK.perKey(
+    val ranked = windowTopK(
       Tables.orders(spark, TestSpark.sf0001)
         .select("o_custkey", "o_orderkey", "o_totalprice")
         .repartition(8), // force a genuinely multi-partition child
@@ -79,12 +87,27 @@ class TopKSpec extends AnyFunSuite {
     import spark.implicits._
     val tiny = Seq((1L, 10L, 5.0), (1L, 11L, 7.0), (2L, 20L, 1.0))
       .toDF("k", "id", "v")
-    val got = TopK.perKey(tiny, Seq("k"), Seq(("v", true), ("id", false)), k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+    val top = windowTopK(tiny, Seq("k"), Seq(("v", true), ("id", false)), k = 5)
+    assert(top.queryExecution.executedPlan.toString.contains("TopKPerKey"))
+    val got = top.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     assert(got == Set((1L, 11L, 1), (1L, 10L, 2), (2L, 20L, 1)))
     val err = intercept[Exception] {
-      TopK.perKey(tiny, Seq("nope"), Seq(("v", true)), k = 1).collect()
+      windowTopK(tiny, Seq("nope"), Seq(("v", true)), k = 1).collect()
     }
     assert(err.getMessage.contains("nope"))
+  }
+}
+
+object TopKSpec {
+  /** Top `k` rows per key group in the idiomatic window form, ranked 1..k
+    * by `orderSpec` ((column, descending) pairs) into an integer column
+    * `rn` appended to `df`'s columns; `WindowTopKRewrite` plans it as the
+    * heap operator. */
+  def windowTopK(df: DataFrame, keys: Seq[String],
+      orderSpec: Seq[(String, Boolean)], k: Int): DataFrame = {
+    val order = orderSpec.map { case (c, desc) => if (desc) col(c).desc else col(c) }
+    df.withColumn("rn", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(order: _*)))
+      .where(col("rn") <= k)
   }
 }
