@@ -443,8 +443,6 @@ object SparkEntry {
       Profile.kAnonymity(Tables.customer(s, d))),
     "join_interval_overlap" -> ((s, d) =>
       Intervals.sessionIncidentOverlap(Tables.events(s, d))),
-    "join_overlap_auto" -> ((s, d) =>
-      Intervals.sessionIncidentOverlapAuto(Tables.events(s, d))),
     "diag_hot_keys" -> ((s, d) =>
       Profile.hotKeys(Tables.events(s, d), "user_id", k = 5)),
     "diag_heavy_hitters" -> ((s, d) =>
@@ -3194,25 +3192,6 @@ object SparkEntry {
     // the overlap join itself is the plain inequality join (the engine's
     // bucket-first plan must produce exactly its result)
     "join_interval_overlap" ->
-      """WITH g AS (SELECT user_id, ts,
-        |  CASE WHEN lag(ts) OVER w IS NULL
-        |         OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_s
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |s AS (SELECT user_id, ts, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM g),
-        |sess AS (SELECT user_id, min(ts) AS s_start,
-        |           max(ts) + INTERVAL 30 MINUTE AS s_end
-        |         FROM s GROUP BY user_id, sid),
-        |inc AS (SELECT event_id AS incident_id, ts AS i_start,
-        |          ts + INTERVAL 1 HOUR AS i_end
-        |        FROM events WHERE event_type = 'error')
-        |SELECT sess.user_id, sess.s_start, inc.incident_id,
-        |  epoch_us(least(s_end, i_end)) - epoch_us(greatest(s_start, i_start)) AS overlap_us
-        |FROM sess JOIN inc ON s_start < i_end AND i_start < s_end
-        |ORDER BY user_id, s_start, incident_id""".stripMargin,
-    // identical semantics, different ENGINE plan (the OverlapJoinRewrite
-    // optimizer rule builds the bucket join from the naive inequality form)
-    "join_overlap_auto" ->
       """WITH g AS (SELECT user_id, ts,
         |  CASE WHEN lag(ts) OVER w IS NULL
         |         OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_s

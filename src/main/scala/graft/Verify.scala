@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
   *
   * `SPARK_GRAFT_FP=<q1,q2>` switches the named queries to AGGREGATE
   * FINGERPRINT comparison: instead of materializing the full result (the
-  * two interval-overlap joins are inherently QUADRATIC in ScaleUp replica
+  * interval-overlap join is inherently QUADRATIC in ScaleUp replica
   * count — 4·10⁹ rows at 32×, which no row-level comparator can hold),
   * the engine emits one row `(n_rows, hash_sum)` — count plus the
   * commutative decimal(38) sum of a 56-bit md5-derived hash of each

@@ -2,11 +2,18 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.plans.Natives
 
 /** Column-level building blocks for the engine. Everything here is composed
-  * from `org.apache.spark.sql.functions._` built-ins (all codegen'd inside
-  * whole-stage codegen) — no Scala UDFs, so filters/projections around these
-  * stay push-down- and codegen-friendly.
+  * from `org.apache.spark.sql.functions._` built-ins and graft's natives (all
+  * codegen'd inside whole-stage codegen) — no Scala UDFs, so
+  * filters/projections around these stay push-down- and codegen-friendly.
+  *
+  * Where a graft native computes the same value, the column formula here is
+  * the reference the tests compare the native against, and the ops call the
+  * native: [[week_of_month]] for `Natives.weekOfMonth`, and
+  * [[string_fingerprint_poly]] / [[doc_fingerprint_poly]] for
+  * `Natives.polyFp`.
   */
 object GraftFunctions {
 
@@ -30,12 +37,12 @@ object GraftFunctions {
 
   /** The reference's histogram bucket: `Calendar.MONTH * 5 + weekOfMonth`
     * (`SanFranciscoCrime.java:177-187`; Calendar.MONTH is 0-based, hence
-    * `month(d) - 1`). Known aliasing at month boundaries (week 6 of month m
-    * collides with week 1 of month m+1) is preserved knowingly — see
-    * SURVEY.md §2.3-A2.
+    * `month(d) - 1`), with the week from the native `Natives.weekOfMonth`.
+    * Known aliasing at month boundaries (week 6 of month m collides with
+    * week 1 of month m+1) is preserved knowingly — see SURVEY.md §2.3-A2.
     */
   def month_week_bucket(d: Column): Column =
-    ((month(d) - lit(1)) * lit(5) + week_of_month(d)).cast("int")
+    (month(d) - lit(1)) * lit(5) + Natives.weekOfMonth(d)
 
   // -------------------------------------------------------------- vectors --
 

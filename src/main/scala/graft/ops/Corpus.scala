@@ -27,10 +27,9 @@ object Corpus {
     * engines can reproduce as pure column math, and chunk-size outliers
     * are visible in the census rather than silently rewritten). Chunk
     * content is fingerprinted with the dual-residue polynomial
-    * ([[graft.functions.GraftFunctions.string_fingerprint_poly]], 62
-    * effective bits), and the census reports, per document, its chunk
-    * count and how many of its chunks also appear in ANOTHER document —
-    * the sub-document duplication signal.
+    * ([[graft.plans.Natives.polyFp]], 62 effective bits), and the census
+    * reports, per document, its chunk count and how many of its chunks also
+    * appear in ANOTHER document — the sub-document duplication signal.
     *
     * Scale shape: cuts and chunk strings are row-local HOFs over the token
     * array (no shuffle, [[Spread.toCores]] pre-spread); the only shuffles
@@ -86,7 +85,7 @@ object Corpus {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val chunks = chunked
       .select(col("doc_id"), explode(col("chunks")).as("cstr"))
-      .select(col("doc_id"), string_fingerprint_poly(col("cstr")).as("chash"))
+      .select(col("doc_id"), Natives.polyFp(col("cstr")).as("chash"))
     val dup = chunks.groupBy("chash")
       .agg(countDistinct("doc_id").as("nd"))
       .where(col("nd") >= 2).select("chash")

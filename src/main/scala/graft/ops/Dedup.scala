@@ -559,8 +559,9 @@ object Dedup {
     blockedNamePairs(customer, keySpan)
       .groupBy("block")
       .agg(count(lit(1)).as("n_candidates"),
-        // banded native verify: O(k·len) per pair vs the built-in's full
-        // O(len²) DP — decides exactly the same <= maxEdits set
+        // banded native verify: O(k·len) per pair, decides exactly the
+        // same set as levenshtein(a, b) <= maxEdits (see BoundedLevenshtein
+        // for why not Spark's own banded levenshtein(a, b, k))
         count(when(
           Natives.levBounded(col("name_a"), col("name_b"), maxEdits) <= maxEdits, 1))
           .as("n_matches"))

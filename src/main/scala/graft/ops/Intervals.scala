@@ -22,7 +22,9 @@ object Intervals {
 
   /** All (left, right) row pairs whose [start, end) intervals overlap.
     * `bucketSeconds` trades candidate volume against bucket-explode fanout —
-    * pick it near the typical interval length. */
+    * pick it near the typical interval length. A row with a NULL endpoint
+    * explodes to no bucket and joins nothing, as under the inequality
+    * predicate. */
   def overlapJoin(left: DataFrame, lStart: String, lEnd: String,
       right: DataFrame, rStart: String, rEnd: String,
       bucketSeconds: Long = 3600L): DataFrame = {
@@ -44,37 +46,23 @@ object Intervals {
       .drop("_b")
   }
 
-  private def sessionsOf(events: DataFrame) = events
-    .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
-    .agg(count(lit(1)).as("n_events"))
-    .select(col("user_id"), col("w.start").as("s_start"), col("w.end").as("s_end"))
-
-  private def incidentsOf(events: DataFrame) = events
-    .where(col("event_type") === "error")
-    .select(col("event_id").as("incident_id"), col("ts").as("i_start"),
-      (col("ts") + expr("INTERVAL 1 HOUR")).as("i_end"))
-
-  private def overlapOut(joined: DataFrame) = joined
-    .select(col("user_id"), col("s_start"), col("incident_id"),
-      (unix_micros(least(col("s_end"), col("i_end")))
-        - unix_micros(greatest(col("s_start"), col("i_start")))).as("overlap_us"))
-    .orderBy("user_id", "s_start", "incident_id")
-
   /** The query: 30-minute user sessions (session_window semantics — end =
     * last event + gap) overlapped against 1-hour incident windows opened by
     * every error event. Emits the exact overlap length in microseconds —
     * integer arithmetic the oracle reproduces bit-for-bit. */
-  def sessionIncidentOverlap(events: DataFrame): DataFrame =
-    overlapOut(overlapJoin(sessionsOf(events), "s_start", "s_end",
-      incidentsOf(events), "i_start", "i_end"))
-
-  /** The SAME query written as the naive inequality join — no bucket
-    * plumbing in user code. On a session with graft's rules installed
-    * (`graft.Session`, `SparkEntry.queries`),
-    * [[graft.plans.OverlapJoinRewrite]] rebuilds the plan into the bucket
-    * equi-join automatically; this query keeps the rule itself on the
-    * oracle-gated path. */
-  def sessionIncidentOverlapAuto(events: DataFrame): DataFrame =
-    overlapOut(sessionsOf(events).join(incidentsOf(events),
-      col("s_start") < col("i_end") && col("i_start") < col("s_end")))
+  def sessionIncidentOverlap(events: DataFrame): DataFrame = {
+    val sessions = events
+      .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"), col("w.start").as("s_start"), col("w.end").as("s_end"))
+    val incidents = events
+      .where(col("event_type") === "error")
+      .select(col("event_id").as("incident_id"), col("ts").as("i_start"),
+        (col("ts") + expr("INTERVAL 1 HOUR")).as("i_end"))
+    overlapJoin(sessions, "s_start", "s_end", incidents, "i_start", "i_end")
+      .select(col("user_id"), col("s_start"), col("incident_id"),
+        (unix_micros(least(col("s_end"), col("i_end")))
+          - unix_micros(greatest(col("s_start"), col("i_start")))).as("overlap_us"))
+      .orderBy("user_id", "s_start", "incident_id")
+  }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
+import graft.plans.Natives
 
 /** Reference-parity operators (SURVEY.md §2.1-§2.3), re-expressed Spark-first
   * over the TESTDATA tables. The role mapping (FIXTURES.md §A): `events.ts` ↔
@@ -28,7 +29,7 @@ object Parity {
   def weeklyHistogram(events: DataFrame, key: Column, keyName: String,
       buckets: Seq[Int]): DataFrame =
     events
-      .select(key.as(keyName), week_of_month(to_date(col("ts"))).as("w"))
+      .select(key.as(keyName), Natives.weekOfMonth(to_date(col("ts"))).as("w"))
       .groupBy(col(keyName))
       .pivot("w", buckets)
       .count()

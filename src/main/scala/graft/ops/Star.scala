@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions._
 import graft.plans.Natives
 
 /** Star-schema ETL + OLAP queries (SURVEY.md §2.1-S5/S6, §2.3-A5, §3.3).
@@ -46,9 +45,8 @@ object Star {
     * (documented delta from the reference's raw Calendar.MONTH persistence).
     */
   def dimTime(orders: DataFrame): DataFrame = {
-    // native codegen week_of_month (graft.plans.WeekOfMonth) — proven equal
-    // to the column formula in ExpressionsSpec, and this keeps the custom
-    // expression on the oracle-gated path
+    // native week_of_month (graft.plans.WeekOfMonth): equal to the column
+    // formula (ExpressionsSpec) and, unlike it, non-null on a non-null date
     Parity.dictionary(
         orders.select(to_date(col("o_orderdate")).as("d")), "d", "time_id", "d")
       .select(
@@ -148,7 +146,7 @@ object Star {
       .select(
         year(col("o_orderdate")).as("year"),
         month(col("o_orderdate")).as("month"),
-        week_of_month(to_date(col("o_orderdate"))).as("week"),
+        Natives.weekOfMonth(to_date(col("o_orderdate"))).as("week"),
         dayofmonth(col("o_orderdate")).as("day"))
       .rollup("year", "month", "week", "day")
       .agg(count(lit(1)).as("crimes"), grouping_id().as("gid"))

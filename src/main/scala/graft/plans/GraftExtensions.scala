@@ -3,8 +3,8 @@ package graft.plans
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** Installs graft's planner extensions: the top-k planner strategy and the
-  * window top-k and overlap-join optimizer rules. The native expressions
-  * need no installation; they are typed Columns ([[Natives]]).
+  * window top-k optimizer rule. The native expressions need no
+  * installation; they are typed Columns ([[Natives]]).
   *
   * Two entry points:
   *   - config-time: `--conf spark.sql.extensions=graft.plans.GraftExtensions`
@@ -18,7 +18,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
     ext.injectOptimizerRule(_ => WindowTopKRewrite)
-    ext.injectOptimizerRule(_ => OverlapJoinRewrite)
   }
 }
 
@@ -34,8 +33,5 @@ object GraftExtensions {
     if (!experimental.extraOptimizations.contains(WindowTopKRewrite))
       experimental.extraOptimizations =
         experimental.extraOptimizations :+ WindowTopKRewrite
-    if (!experimental.extraOptimizations.contains(OverlapJoinRewrite))
-      experimental.extraOptimizations =
-        experimental.extraOptimizations :+ OverlapJoinRewrite
   }
 }

@@ -186,11 +186,12 @@ object ExprUtil {
     * contribute to a distance ≤ k, so only the 2k+1-wide band is computed,
     * and the row exits early once the whole band exceeds k. For a linkage
     * verify with k=1..2 this is ~len/k times less work per pair than the
-    * full DP (Spark's built-in `levenshtein` has a threshold variant, but
-    * no SQL surface for it pre-4.0's three-arg form; this pins the banded
-    * semantics and stays available to the optimizer as one codegen'd
-    * call). Exact agreement with the full distance whenever that distance
-    * is ≤ k — property-tested against the built-in. */
+    * full DP. Spark 4's three-argument `levenshtein(a, b, k)` bands the
+    * same way, but matches characters as UTF-8 byte slices in every cell;
+    * on the 742,500 blocked `c_name` pairs of sf0.1 at k = 1 its verify
+    * cost about twice this one's (4 cores), and `er_fuzzy_clusters` ran
+    * ~1 s slower with it. Exact agreement with the full distance whenever
+    * that distance is ≤ k — property-tested against the built-in. */
   def boundedLevenshtein(a: UTF8String, b: UTF8String, k: Int): Int = {
     val s = a.toString
     val t = b.toString

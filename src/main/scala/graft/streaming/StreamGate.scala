@@ -1,6 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,7 +23,9 @@ import graft.Tables
   *
   * Each run uses fresh temp checkpoint/output dirs: the gate must be
   * re-runnable in one session without state collisions (the driver runs
-  * Verify, then specs may run the same queries again).
+  * Verify, then specs may run the same queries again). A gate deletes its
+  * checkpoint and input dirs before it returns; the end-state dir, which
+  * the returned frame reads lazily, is deleted at JVM exit.
   */
 object StreamGate {
 
@@ -88,11 +91,24 @@ object StreamGate {
     * disk latency for durability that a drain-a-bounded-source gate does
     * not need (a production job points checkpointLocation at durable
     * storage; this is gate plumbing, not the operator). */
-  private def tmpBase: java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
+  private[graft] def tmpBase: Path = {
+    val shm = Paths.get("/dev/shm")
     if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
-    else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    else Paths.get(System.getProperty("java.io.tmpdir"))
   }
+
+  /** Delete `dir` and everything under it, if it exists. */
+  private def deleteTree(dir: Path): Unit =
+    if (Files.exists(dir))
+      // Using.resource: Files.walk holds a directory handle until closed
+      scala.util.Using.resource(Files.walk(dir))(
+        _.sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => Files.deleteIfExists(p)))
+
+  /** End-state dirs still read by returned frames, deleted at JVM exit:
+    * `/dev/shm` is RAM, and a long-lived JVM runs many gates. */
+  private val endStateDirs = ConcurrentHashMap.newKeySet[Path]()
+  sys.addShutdownHook(endStateDirs.forEach(deleteTree(_)))
 
   /** Runs the query to completion and returns the engine's own late-data
     * accounting: the sum of `numRowsDroppedByWatermark` over every state
@@ -102,32 +118,38 @@ object StreamGate {
   private def run(writer: DataStreamWriter[Row],
       ck0: Option[String] = None): Long = {
     // ck0: the checkpoint-recovery gate reuses ONE checkpoint across two
-    // query lifetimes; every other gate gets a fresh one
+    // query lifetimes and deletes it itself; every other gate gets a fresh
+    // one, deleted once the query stops
     val ck = ck0.getOrElse(
       Files.createTempDirectory(tmpBase, "graft_stream_ck").toString)
-    // AvailableNow: drain everything available, then STOP — versus
-    // processAllAvailable on the default trigger, which keeps the
-    // micro-batch scheduler polling (empty-batch planning cycles) until
-    // the explicit stop. Same end state, less machinery.
-    val q = writer
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ck).start()
     try {
-      q.awaitTermination()
-      q.recentProgress.iterator
-        .flatMap(_.stateOperators.iterator)
-        .map(_.numRowsDroppedByWatermark).sum
-    } finally q.stop()
+      // AvailableNow: drain everything available, then STOP — versus
+      // processAllAvailable on the default trigger, which keeps the
+      // micro-batch scheduler polling (empty-batch planning cycles) until
+      // the explicit stop. Same end state, less machinery.
+      val q = writer
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .option("checkpointLocation", ck).start()
+      try {
+        q.awaitTermination()
+        q.recentProgress.iterator
+          .flatMap(_.stateOperators.iterator)
+          .map(_.numRowsDroppedByWatermark).sum
+      } finally q.stop()
+    } finally if (ck0.isEmpty) deleteTree(Paths.get(ck))
   }
 
-  private def freshOut(): String =
-    Files.createTempDirectory(tmpBase, "graft_stream_out").toString + "/end_state"
+  private def freshOut(): String = {
+    val dir = Files.createTempDirectory(tmpBase, "graft_stream_out")
+    endStateDirs.add(dir)
+    dir.toString + "/end_state"
+  }
 
   /** One single-file parquet per arrival batch into `inDir`; the file
     * source orders by modification time, pinned explicitly so arrival
     * order is fixed. Shared by the late-census and checkpoint-recovery
     * gates (any gate that must control WHICH rows each micro-batch sees). */
-  private def writeArrival(inDir: java.nio.file.Path, df: DataFrame,
+  private def writeArrival(inDir: Path, df: DataFrame,
       name: String, mtimeSec: Long): Unit = {
     val tmp = inDir.resolve(s"_tmp_$name")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -138,10 +160,8 @@ object StreamGate {
         .filter(p => p.endsWith(".parquet") && p.contains("part-")))
     require(parts.length == 1, s"$name: expected 1 part, got ${parts.length}")
     val dst = inDir.resolve(s"$name.parquet")
-    Files.move(java.nio.file.Paths.get(parts.head), dst)
-    scala.util.Using.resource(Files.walk(tmp))(
-      _.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p)))
+    Files.move(Paths.get(parts.head), dst)
+    deleteTree(tmp)
     Files.setLastModifiedTime(dst,
       java.nio.file.attribute.FileTime.fromMillis(mtimeSec * 1000))
   }
@@ -415,18 +435,20 @@ object StreamGate {
     val out = freshOut()
     val ev = Tables.events(spark, dir)
     val inDir = Files.createTempDirectory(tmpBase, "graft_stream_late")
-    writeArrival(inDir, ev.where(col("event_id") % 20 =!= 0), "b0", 1000L)
-    writeArrival(inDir, ev.where(col("event_id") % 40 === 0), "b1", 2000L)
-    writeArrival(inDir, ev.where(col("event_id") % 40 === 20), "b2", 3000L)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    val agg = Streaming.tumblingCounts(stream, "1 day",
-      s"$delayMs milliseconds")
-    val droppedByEngine = run(agg.writeStream.outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(out)
-      })
+    val droppedByEngine = try {
+      writeArrival(inDir, ev.where(col("event_id") % 20 =!= 0), "b0", 1000L)
+      writeArrival(inDir, ev.where(col("event_id") % 40 === 0), "b1", 2000L)
+      writeArrival(inDir, ev.where(col("event_id") % 40 === 20), "b2", 3000L)
+      val stream = spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
+      val agg = Streaming.tumblingCounts(stream, "1 day",
+        s"$delayMs milliseconds")
+      run(agg.writeStream.outputMode("update")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          batch.withColumn("batch_id", lit(batchId))
+            .write.mode("append").parquet(out)
+        })
+    } finally deleteTree(inDir)
     val snaps = spark.read.parquet(out)
     val latest = snaps.groupBy("w_start", "event_type")
       .agg(max("batch_id").as("batch_id"))
@@ -516,10 +538,12 @@ object StreamGate {
           batch.write.mode("overwrite").parquet(out)
       }, Some(ck))
     }
-    writeArrival(inDir, ev.where(col("event_id") % 2 === 0), "b0", 1000L)
-    val dropped1 = drain()
-    writeArrival(inDir, ev.where(col("event_id") % 2 =!= 0), "b1", 2000L)
-    val dropped2 = drain()
+    val (dropped1, dropped2) = try {
+      writeArrival(inDir, ev.where(col("event_id") % 2 === 0), "b0", 1000L)
+      val d1 = drain()
+      writeArrival(inDir, ev.where(col("event_id") % 2 =!= 0), "b1", 2000L)
+      (d1, drain())
+    } finally { deleteTree(inDir); deleteTree(Paths.get(ck)) }
     require(dropped1 + dropped2 == 0,
       s"recovery gate dropped ${dropped1 + dropped2} rows by watermark — " +
         "the 10-year delay should make every row on-time")

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.TextOps
+import graft.plans.{TopKPerKeyStrategy, WindowTopKRewrite}
 
 /** Each graft extension has one way into a plan: natives are typed Columns
   * that run on any session, and the planner rules arrive with
@@ -21,5 +22,12 @@ class ExtensionEntrySpec extends AnyFunSuite {
       assert(plan.contains("TopKPerKey"), s"$name plans no heap top-k:\n$plan")
       assert(!plan.contains("WindowGroupLimit"), s"$name plans Spark's group limit:\n$plan")
     }
+  }
+
+  test("Session.build installs exactly the heap top-k strategy and rule") {
+    val experimental = org.apache.spark.sql.GraftBridge
+      .classicSession(TestSpark.spark).experimental
+    assert(experimental.extraStrategies == Seq(TopKPerKeyStrategy))
+    assert(experimental.extraOptimizations == Seq(WindowTopKRewrite))
   }
 }

@@ -404,17 +404,23 @@ class OpsSpec extends AnyFunSuite {
     val left = Seq(
       (1L, ts("2024-01-01 10:00:00"), ts("2024-01-01 11:00:00")),
       (2L, ts("2024-01-01 23:30:00"), ts("2024-01-02 00:30:00")), // crosses buckets
-      (3L, ts("2024-01-05 10:00:00"), ts("2024-01-05 11:00:00"))
+      (3L, ts("2024-01-05 10:00:00"), ts("2024-01-05 11:00:00")),
+      // null endpoints never join, as under the inequality predicate
+      (4L, null, ts("2024-01-01 11:00:00")),
+      (5L, ts("2024-01-01 10:00:00"), null)
     ).toDF("lid", "ls", "le")
     val right = Seq(
       (10L, ts("2024-01-01 10:30:00"), ts("2024-01-01 10:45:00")), // inside 1
       (11L, ts("2024-01-01 11:00:00"), ts("2024-01-01 12:00:00")), // TOUCHES 1: no overlap (half-open)
       (12L, ts("2024-01-02 00:00:00"), ts("2024-01-02 00:10:00")), // overlaps 2 across midnight
-      (13L, ts("2024-03-01 00:00:00"), ts("2024-03-01 01:00:00"))  // far away
+      (13L, ts("2024-03-01 00:00:00"), ts("2024-03-01 01:00:00")), // far away
+      (14L, null, ts("2024-01-01 10:45:00"))                       // null start
     ).toDF("rid", "rs", "re")
-    val got = Intervals.overlapJoin(left, "ls", "le", right, "rs", "re")
-      .select("lid", "rid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("lid", "rid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = pairs(Intervals.overlapJoin(left, "ls", "le", right, "rs", "re"))
     assert(got == Set((1L, 10L), (2L, 12L)))
+    assert(got == pairs(left.join(right, col("ls") < col("re") && col("rs") < col("le"))))
   }
 
   test("profile: nulls, distincts, min/max per column in one pass") {

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.Streaming
+import graft.streaming.{StreamGate, Streaming}
 
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long, event_type: String)
 case class TopKIn(event_type: String, event_id: Long, value: Double)
@@ -390,5 +390,21 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(spark.table("stream_dedup").count() == 2)
     } finally q.stop()
+  }
+
+  test("StreamGate leaves only its end-state dir behind") {
+    import scala.jdk.CollectionConverters._
+    def scratch() = scala.util.Using.resource(
+        java.nio.file.Files.list(StreamGate.tmpBase))(_.iterator.asScala
+      .map(_.getFileName.toString).filter(_.startsWith("graft_stream_")).toSet)
+    val before = scratch()
+    // the late-census gate makes all three kinds: checkpoint, a copy of
+    // events as its arrival batches, and the end state
+    val census = StreamGate.lateCensusEndState(spark, TestSpark.sf0001)
+    val left = scratch() -- before
+    assert(left.size == 1 && left.head.startsWith("graft_stream_out"), left)
+    // the returned frame still reads its end state; that dir is deleted at
+    // JVM exit, which this in-process test cannot observe
+    assert(census.count() > 0)
   }
 }

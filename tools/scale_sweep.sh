@@ -34,15 +34,15 @@ if [ ! -f "$DATA/lineitem.parquet" ]; then
     >"$LOG.scaleup" 2>&1 || { echo "ScaleUp failed — see $LOG.scaleup"; exit 1; }
 fi
 
-echo "=== Verify full surface at ${COPIES}x (fingerprint: interval joins) ==="
+echo "=== Verify full surface at ${COPIES}x (fingerprint: interval join) ==="
 rm -rf "$OUT"
 vrc=0
-# SWEEP_FP_MOD (default 1): >1 switches the interval fingerprints to the
+# SWEEP_FP_MOD (default 1): >1 switches the interval fingerprint to the
 # SAMPLED form (exact n_rows + 1-in-mod hashed sample) — the posture that
 # retires the >=128x md5-bound SKIPs; md5 volume drops by the modulus
 # while the row COUNT check stays exact. At <=64x the default exact
 # fingerprint remains the recorded posture (SWEEP_64X.json precedent).
-SPARK_GRAFT_FP=join_interval_overlap,join_overlap_auto \
+SPARK_GRAFT_FP=join_interval_overlap \
 SPARK_GRAFT_FP_SAMPLE_MOD="${SWEEP_FP_MOD:-1}" \
   java $JO -Xmx48g -cp "$CP" graft.Verify "$DATA" "$OUT" >"$LOG" 2>&1 || vrc=$?
 if [ $vrc -ne 0 ]; then echo "Verify crashed (exit $vrc) — see $LOG"; exit 1; fi
