@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 /** Benchmark main (driver contract): times every SparkEntry query at the
   * SPARK_GRAFT_SF_DIR scale factor and prints ONE JSON line. */
 object Bench {
@@ -12,6 +14,12 @@ object Bench {
     * draw per side while staying cheap; `1` restores single-shot for the
     * (slow) full-inventory sweep. */
   def reps(env: Map[String, String]): Int = Session.positiveInt(env, Reps).getOrElse(3)
+
+  /** Runs `df` to completion and discards the rows — the timed action, and
+    * the warm-up's. Every output column is computed, as a consumer that
+    * writes or collects the result computes it; a `count()` would let
+    * Catalyst prune every column the count does not read. */
+  private def drain(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
   def main(args: Array[String]): Unit = {
     val reps = Bench.reps(sys.env)
@@ -28,33 +36,29 @@ object Bench {
       try body catch { case e: Throwable =>
         System.err.println(s"[bench] warm-up $step FAILED: ${e.getMessage}")
       }
-    Tables.names.foreach(n => warmUp(s"table $n")(Tables.table(spark, sfDir, n).count()))
+    Tables.names.foreach(n => warmUp(s"table $n")(drain(Tables.table(spark, sfDir, n))))
     warmUp("signatures") {
-      val docs = Tables.documents(spark, sfDir).limit(64).cache()
-      val emb = Tables.embeddings(spark, sfDir).limit(64).cache()
-      ops.Dedup.simhashNearDup(docs).count()
-      ops.Dedup.minhashLsh(docs).count()
-      ops.SimSearch.bruteForceTopK(emb, 2, 3).count()
-      ops.SimSearch.lshTopK(emb, 2, 3).count()
-      docs.unpersist(); emb.unpersist()
+      val docs = Tables.documents(spark, sfDir).limit(64)
+      val emb = Tables.embeddings(spark, sfDir).limit(64)
+      drain(ops.Dedup.simhashNearDup(docs))
+      drain(ops.Dedup.minhashLsh(docs))
+      drain(ops.SimSearch.bruteForceTopK(emb, 2, 3))
+      drain(ops.SimSearch.lshTopK(emb, 2, 3))
     }
     warmUp("join-rank") {
       // join/aggregate codegen warmup on 64-row slices: the first timed join
       // query otherwise pays ~0.5 s of one-time whole-stage compilation
-      val li = Tables.lineitem(spark, sfDir).limit(64).cache()
-      val ord = Tables.orders(spark, sfDir).limit(64).cache()
-      ops.Relational.topUrgentOrders(
-        Tables.customer(spark, sfDir).limit(64), ord, li).count()
+      val li = Tables.lineitem(spark, sfDir).limit(64)
+      val ord = Tables.orders(spark, sfDir).limit(64)
+      drain(ops.Relational.topUrgentOrders(
+        Tables.customer(spark, sfDir).limit(64), ord, li))
       // distributed-rank + session-window paths: their range-partition,
       // per-slice window and MergingSessions codegen is more one-time
       // cost that otherwise lands on whichever rank/window query runs first
-      ops.Relational.priorityPriceRanks(ord).count()
-      li.unpersist(); ord.unpersist()
+      drain(ops.Relational.priorityPriceRanks(ord))
     }
     warmUp("session-window") {
-      val ev = Tables.events(spark, sfDir).limit(64).cache()
-      ops.Relational.sessionCounts(ev).count()
-      ev.unpersist()
+      drain(ops.Relational.sessionCounts(Tables.events(spark, sfDir).limit(64)))
     }
     // headline set by default (the driver contract's "headline queries");
     // SPARK_GRAFT_BENCH_ALL=1 times the whole inventory
@@ -76,26 +80,14 @@ object Bench {
       // a failed query reports -1, NOT its elapsed time — a regression must
       // show up as broken, never as "fast"
       val times = (1 to reps).map { _ =>
-        // drop persisted data between reps: operators that persist an
-        // intermediate (minhashLsh's token projection) would otherwise hand
-        // reps 2+ a warm cache and the median would report a number no
-        // cold run can reproduce
-        spark.catalog.clearCache()
-        // clearCache only empties the Dataset-level CacheManager;
-        // localCheckpoint(true) blocks (tfidfSimilarPairs' weight frame,
-        // robustOutliers' ranked parts, Ml's quantized grid) are RDD-level
-        // and otherwise accumulate across reps until the ContextCleaner's
-        // GC happens to fire — at replica scales the residue evicts live
-        // blocks and the later reps (so the median) pay for state no
-        // single cold run carries. Unpersisting BETWEEN reps never forces
-        // a truncated-lineage recompute: the next rep rebuilds its whole
-        // plan from the source tables. blocking = true: eviction runs
-        // OUTSIDE the timed window (t0 is taken after this line), so the
-        // synchronous wait is free — an async unpersist could still be
-        // evicting blocks when the next rep's clock starts, re-admitting
-        // exactly the cross-rep interference this cleanup exists to stop
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        // drop stored intermediates between reps: `Materialize` blocks left
+        // by earlier reps would otherwise hand later reps a warm cache, or
+        // (until the ContextCleaner's GC fires) evict their live blocks, and
+        // the median would report a number no cold run can reproduce. The
+        // next rep rebuilds its whole plan from the source tables, so no
+        // truncated lineage is recomputed. The release blocks OUTSIDE the
+        // timed window (t0 is taken below)
+        ops.Materialize.releaseAll(spark)
         // ... and release the PREVIOUS rep's shuffle files: Spark frees a
         // shuffle's disk blocks only when the ContextCleaner notices its
         // ShuffleDependency is unreachable, which needs a JVM GC — without
@@ -105,7 +97,7 @@ object Bench {
         // dedup_prefix_filter median-of-5 read 76.9 s vs 54.5 s single-shot
         // PURELY from this accumulation, turning a linear 1.98x octave
         // into a phantom 3.3x. Gated on the previous rep's cost: a full
-        // GC on a 48 GB heap is ~1-2 s, and the 209-query inventory at
+        // GC on a 48 GB heap is ~1-2 s, and the 207-query inventory at
         // sf0.1 would pay ~630 of them for reps whose shuffles are a few
         // MB — only a rep heavy enough to have spilled real shuffle data
         // (>5 s, the serial-wall floor convention) warrants the sweep.
@@ -114,7 +106,7 @@ object Bench {
         if (prevRepSec > 5.0) System.gc()
         val t0 = System.nanoTime()
         try {
-          fn(spark, sfDir).count()
+          drain(fn(spark, sfDir))
           prevRepSec = (System.nanoTime() - t0) / 1e9
           prevRepSec
         } catch {

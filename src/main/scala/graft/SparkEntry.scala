@@ -196,8 +196,6 @@ object SparkEntry {
       Relational.brandAffinity(Tables.lineitem(s, d), Tables.part(s, d))),
     "hist_price_bins" -> ((s, d) =>
       Relational.priceHistogram(Tables.orders(s, d))),
-    "corpus_decontaminate_bloom" -> ((s, d) =>
-      Corpus.decontaminateBloom(Tables.documents(s, d))),
     "corpus_decontaminate_semantic" -> ((s, d) =>
       Corpus.decontaminateSemantic(Tables.embeddings(s, d))),
     "corpus_strip_boilerplate" -> ((s, d) =>
@@ -2678,19 +2676,6 @@ object SparkEntry {
          |  CAST(off % 2048 AS INT) AS offset_in_pack
          |FROM o ORDER BY source, doc_id""".stripMargin,
     "corpus_decontaminate" ->
-      s"""WITH g AS (SELECT doc_id, list_distinct(
-         |    CASE WHEN len(toks) < 4 THEN [array_to_string(toks, ' ')]
-         |         ELSE [array_to_string(toks[i:i+3], ' ') for i in range(1, len(toks)-2)]
-         |    END) AS grams
-         |  FROM (SELECT doc_id, $toksSql AS toks FROM documents)),
-         |bench AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id < 5),
-         |tr AS (SELECT doc_id, unnest(grams) AS gram FROM g WHERE doc_id >= 5)
-         |SELECT tr.doc_id, count(*) AS n_hits
-         |FROM tr JOIN bench USING (gram)
-         |GROUP BY tr.doc_id ORDER BY tr.doc_id""".stripMargin,
-    // the bloom prefilter only PRUNES before the exact confirm join, so the
-    // result is identical to corpus_decontaminate — same oracle SQL
-    "corpus_decontaminate_bloom" ->
       s"""WITH g AS (SELECT doc_id, list_distinct(
          |    CASE WHEN len(toks) < 4 THEN [array_to_string(toks, ' ')]
          |         ELSE [array_to_string(toks[i:i+3], ' ') for i in range(1, len(toks)-2)]

@@ -114,11 +114,6 @@ object Tables {
     walk(new java.io.File(p), 17L)
   }
 
-  /** Drop all memoized probe results (tests / long-lived sessions that
-    * regenerate testdata can call this; the mtime/size keying already
-    * handles the common rewrite case without it). */
-  def resetCaches(): Unit = tsTypeCache.clear()
-
   /** Raw scan of the events table, WITHOUT the ts normalization — the
     * shared entry point for [[events]] and the streaming gate (which needs
     * the raw schema for `readStream.schema(...)` before normalizing).

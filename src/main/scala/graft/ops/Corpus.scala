@@ -44,20 +44,16 @@ object Corpus {
     // the whole chunk+fingerprint chain into a Filter predicate that is
     // re-evaluated per row on top of the Generate's own evaluation — a
     // measured ~200× blowup at sf0.001. Per-row expressions after the
-    // explode keep every fold single-evaluation, and the persist barrier
-    // (the minhashLsh discipline: two consumers, no exchange reuse) stops
-    // any downstream rule from re-deriving the chunk computation.
+    // explode keep every fold single-evaluation.
     //
-    // LAZY persist here, deliberately NOT the round-22 eager
-    // materialization the sibling fan-outs use: the census branch hangs
-    // off the final select through a LEFT join on unique keys, so a
-    // count-shaped consumer (the bench's timed action) legitimately prunes
-    // the whole census — and an eager pre-materialization would force the
-    // full chunk-string computation that pruning skips (256×-measured:
-    // eager 749 vs lazy 152 taskSec under count; interleaved bench medians
-    // 65 vs 18 s). The concurrent-consumer cache race only costs when the
-    // full result is actually consumed, and is bounded by one extra chunk
-    // pass there — the smaller trade.
+    // The chunk table has two consumers (the per-doc chunk count and the
+    // chunk-hash census), so it is materialized once like the sibling
+    // fan-outs: a lineage cut stops any downstream rule from re-deriving
+    // the chunk computation, and both consumers read the stored blocks.
+    // Timed on the full result at sf0.1 (4 cores, 10 interleaved pairs)
+    // it ran in 1.14 s median against 1.21 s for the lazy cache it
+    // replaces; an earlier 256× reading that favoured the lazy cache was
+    // taken under `count()`, which prunes the census branch entirely.
     val chunked = Spread.toCores(documents)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .withColumn("n", size(col("toks")))
@@ -82,7 +78,7 @@ object Corpus {
         concat_ws(" ", slice(col("toks"), prev + 1, c - prev))
       }))
       .select(col("doc_id"), size(col("cuts")).as("n_chunks"), col("chunks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.once)
     val chunks = chunked
       .select(col("doc_id"), explode(col("chunks")).as("cstr"))
       .select(col("doc_id"), Natives.polyFp(col("cstr")).as("chash"))
@@ -338,42 +334,6 @@ object Corpus {
       .orderBy("source")
   }
 
-  /** [[decontaminate]] with a Bloom-filter prefilter — the 100 TB form. A
-    * Bloom filter over the benchmark's grams is a few hundred KB where the
-    * exact gram set is GBs, so it ships to every task for free and drops
-    * ~(1-fpp) of non-matching corpus grams BEFORE they reach the join; the
-    * exact broadcast join then runs only on survivors and removes the false
-    * positives, so the result is IDENTICAL to [[decontaminate]] (the oracle
-    * runs the same SQL for both). This is the pattern Spark's own runtime
-    * bloom-filter join rule automates; built explicitly here because the
-    * benchmark set is known up front. The probe is the shared codegen'd
-    * literal-word-array predicate ([[Relational.bloomMightContain]], sized
-    * from the measured gram cardinality) — no UDF anywhere on the path. */
-  def decontaminateBloom(documents: DataFrame, benchMaxDocId: Long = 5,
-      n: Int = 4): DataFrame = {
-    val grams = array_distinct(
-      Natives.shingles(tokens(col("text")), n))
-    val bench = documents.where(col("doc_id") < benchMaxDocId)
-      .select(explode(grams).as("gram")).distinct()
-      .transform(Materialize.once) // read three times: filter build (×2), join
-    // an empty benchmark means nothing can be contaminated
-    if (bench.isEmpty) {
-      return documents.sparkSession.emptyDataFrame
-        .select(lit(0L).as("doc_id"), lit(0L).as("n_hits")).limit(0)
-    }
-    val pass = Relational.bloomMightContain(bench, "gram",
-      castKeyTo = None)(col("gram"))
-    val corpus = documents.where(col("doc_id") >= benchMaxDocId)
-    val spread = Spread.toCores(corpus)
-    spread
-      .select(col("doc_id"), explode(grams).as("gram"))
-      .where(pass)
-      .join(broadcast(bench), "gram")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_hits"))
-      .orderBy("doc_id")
-  }
-
   /** Boilerplate-segment removal — the C4 cleaning rule ("remove any line
     * that appears more than N times in the corpus") adapted to this
     * corpus's segmentation: documents split into consecutive `segTokens`-
@@ -523,17 +483,6 @@ object Corpus {
       .where(col("n_bench_hits") > 0)
       .orderBy("vec_id")
   }
-
-  /** Bloom filter over a gram column, sized from the MEASURED cardinality
-    * rather than a fixed guess: a hardcoded capacity silently saturates on
-    * a larger benchmark (results stay exact — the join removes false
-    * positives — but the prefilter stops filtering, which at 100 TB means
-    * the whole corpus gram stream reaches the join). `count()` on the
-    * benchmark set is one cheap aggregate on a set that is small by
-    * definition. Floor of 64 keeps the sketch well-formed on tiny sets. */
-  private[graft] def sizedBloom(grams: DataFrame, nGrams: Long,
-      fpp: Double): org.apache.spark.util.sketch.BloomFilter =
-    grams.stat.bloomFilter("gram", math.max(nGrams, 64L), fpp)
 
   /** Deterministic epoch shuffle: a reproducible global permutation of the
     * corpus — position = rank in (multiplicative-hash(doc_id + epoch),

@@ -132,10 +132,9 @@ object CrimePipeline {
     * re-sorted on the driver: Spark orders strings by UTF-8 bytes, Scala's
     * `String` ordering by UTF-16 units, and the two differ. */
   def runAll(spark: SparkSession, csvPath: String, outDir: String): Unit = {
-    val tagged = readCrimeCsvTagged(spark, csvPath)
+    val scan = readCrimeCsvTagged(spark, csvPath)
       .select("IncidntNum", "Category", "PdDistrict", "incident_date", "bad_reason")
-      .cache()
-    try {
+    Materialize.during(scan) { tagged =>
       val crime = tagged.where(col("bad_reason").isNull).drop("bad_reason")
       // job 1 for one key column: writes its TSV, returns its keys
       def histogram(keyColumn: String, dir: String): Seq[String] = {
@@ -156,6 +155,6 @@ object CrimePipeline {
         .select(col("IncidntNum"), col("bad_reason"))
         .coalesce(1).write.mode("overwrite").option("sep", "\t")
         .csv(s"$outDir/badrecords")
-    } finally tagged.unpersist()
+    }
   }
 }

@@ -1,15 +1,26 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One-time eager materialization of a fan-out subplan — the shared
-  * discipline behind every "compute once, read N times" intermediate
-  * (connectedComponents' pair list, pagerank/kcore edge extraction,
-  * tfidfSimilarPairs' tf frame, the iterative loops' per-round label
-  * tables, Rank's bounds-consistency checkpoint).
+/** The one owner of stored intermediates: nothing else in `src/main`
+  * persists, caches, checkpoints or releases a frame. Two forms, and the
+  * call site picks by where the reads happen:
   *
-  * Fault-tolerance is PLUGGABLE, not hardcoded (round-22, VERDICT r21
-  * item 1): `localCheckpoint` stores the materialized blocks on
+  *   - [[once]] when the stored frame ESCAPES the function (it is part of
+  *     the returned plan) or feeds a loop — connectedComponents' pair list,
+  *     pagerank/kcore edge extraction, tfidfSimilarPairs' tf frame, the
+  *     iterative loops' per-round tables, Rank's bounds-consistency
+  *     checkpoint. An eager lineage cut: filled before the first consumer
+  *     runs, released by the ContextCleaner once the plan is unreachable.
+  *   - [[during]] when EVERY read happens inside the call — the crime
+  *     pipeline's shared scan, the Bloom build's key set. Spark's in-memory
+  *     columnar cache (Shark, SIGMOD 2013), released when the call returns
+  *     or throws, so no call leaves a cached relation in the session.
+  *
+  * [[releaseAll]] drops everything either form stored (Bench, between reps).
+  *
+  * `once`'s fault-tolerance is PLUGGABLE, not hardcoded (round-22, VERDICT r21
+  * item 1): a local checkpoint stores the materialized blocks on
   * executor-local storage with lineage truncated, so on a cluster an
   * executor loss mid-query makes the RDD unrecoverable and fails the job —
   * acceptable for one-shot local analytics (the bench posture, where the
@@ -31,4 +42,20 @@ object Materialize {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager = true)
     else df.localCheckpoint(eager = true)
+
+  /** Runs `body` over `df` cached at `cache()`'s storage level; the cache
+    * fills on the first action and is released (non-blocking) when `body`
+    * returns or throws. `body` must not return a frame that reads it. */
+  def during[A](df: DataFrame)(body: DataFrame => A): A = {
+    val stored = df.persist()
+    try body(stored) finally stored.unpersist()
+  }
+
+  /** Drops every stored intermediate of the session: the cached relations
+    * and the RDD-level checkpoint blocks, which the cache manager does not
+    * track. Blocking, so no eviction is still running when it returns. */
+  def releaseAll(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
 }

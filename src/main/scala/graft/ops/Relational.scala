@@ -703,36 +703,31 @@ object Relational {
   /** The Bloom-probe predicate of [[bloomPrunedJoin]]: builds the filter
     * from `dim`'s keys (distributed; driver holds only the m-bit word
     * array) and returns the codegen'd membership test over `probeCol`.
-    * `castKeyTo` pins the hash input type on BOTH sides (numeric keys of
-    * different physical widths must hash identically); pass None for
-    * string keys, which hash as-is. */
+    * Both sides hash the key cast to long, so numeric keys of different
+    * physical widths hash identically. */
   private[graft] def bloomMightContain(dim: DataFrame, dimKey: String,
-      hashes: Int = 5, castKeyTo: Option[String] = Some("long"))
-      (probeCol: Column): Column = {
+      hashes: Int = 5)(probeCol: Column): Column = {
     val spark = dim.sparkSession
     import spark.implicits._
-    // one materialization feeds both the sizing count and the position
-    // collect (two dim scans + two distinct shuffles otherwise)
-    val keys = dim.select(dimKey).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nKeys = math.max(1L, keys.count())
-    val mBits = math.min(1L << 24, math.max(1L << 12,
-      java.lang.Long.highestOneBit(16L * nKeys) << 1)).toInt
     // bit position of probe i — the SAME expression on both sides
-    def probe(c0: Column, i: Int): Column = {
-      val c = castKeyTo.map(c0.cast).getOrElse(c0)
-      pmod(xxhash64(c, lit(i)), lit(mBits.toLong)).cast("int")
-    }
-    val positions = keys
-      .select(explode(array((0 until hashes).map(i =>
-        probe(col(dimKey), i)): _*)).as("pos"))
-      .distinct().as[Int].collect()
-    keys.unpersist()
+    def probe(c: Column, mBits: Int, i: Int): Column =
+      pmod(xxhash64(c.cast("long"), lit(i)), lit(mBits.toLong)).cast("int")
+    // one stored key set feeds both the sizing count and the position
+    // collect (two dim scans + two distinct shuffles otherwise)
+    val (mBits, positions) =
+      Materialize.during(dim.select(dimKey).distinct()) { keys =>
+        val nKeys = math.max(1L, keys.count())
+        val m = math.min(1L << 24, math.max(1L << 12,
+          java.lang.Long.highestOneBit(16L * nKeys) << 1)).toInt
+        (m, keys.select(explode(array((0 until hashes).map(i =>
+            probe(col(dimKey), m, i)): _*)).as("pos"))
+          .distinct().as[Int].collect())
+      }
     val words = new Array[Long](mBits / 64)
     positions.foreach(p => words(p >>> 6) |= 1L << (p & 63))
     val wordsLit = typedlit(words.toSeq)
     (0 until hashes).map { i =>
-      val pos = probe(probeCol, i)
+      val pos = probe(probeCol, mBits, i)
       call_function("shiftright",
           element_at(wordsLit, call_function("shiftright", pos, lit(6)) + 1),
           pos.bitwiseAND(lit(63)))

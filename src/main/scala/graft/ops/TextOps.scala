@@ -282,8 +282,8 @@ object TextOps {
     * census shuffles (pair, partial-count) rows only, and the merge apply
     * is a per-row fold. The chosen pair is a 1-row driver literal per
     * round (the IVF-codebook discipline: parameter-bounded, never
-    * corpus-sized); each round's dict persists so round r+1 doesn't replay
-    * the whole merge chain. */
+    * corpus-sized); each round's dict is materialized once so round r+1
+    * doesn't replay the whole merge chain. */
   def bpeMerges(documents: DataFrame, rounds: Int = 3,
       topK: Int = 5): DataFrame = {
     val spark = documents.sparkSession
@@ -294,7 +294,7 @@ object TextOps {
     var syms = dict.select(col("cnt"),
       transform(sequence(lit(1), length(col("word"))),
         i => call_function("substring", col("word"), i, lit(1))).as("syms"))
-      .persist()
+      .transform(Materialize.once)
     val rows = scala.collection.mutable.ArrayBuffer[(Int, Int, String, String, Long)]()
     var r = 1
     var exhausted = false
@@ -314,14 +314,13 @@ object TextOps {
         rows ++= top.zipWithIndex.map { case (row, i) =>
           (r, i + 1, row.getString(0), row.getString(1), row.getLong(2)) }
         val (a, b) = (top.head.getString(0), top.head.getString(1))
-        val next = syms.select(col("cnt"), mergeSyms(a, b).as("syms")).persist()
-        next.count()
-        syms.unpersist()
-        syms = next
+        // the last round's merge would be stored and never read
+        if (r < rounds)
+          syms = syms.select(col("cnt"), mergeSyms(a, b).as("syms"))
+            .transform(Materialize.once)
       }
       r += 1
     }
-    syms.unpersist()
     rows.toSeq.toDF("round", "rank", "sym_a", "sym_b", "n")
       .orderBy("round", "rank")
   }

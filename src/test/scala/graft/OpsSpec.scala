@@ -528,7 +528,6 @@ class OpsSpec extends AnyFunSuite {
     assert(Dedup.survivors(noDocs, noPairs).count() == 0)
     assert(TextOps.tokenEntropy(noDocs).count() == 0)
     assert(Corpus.checksum(noDocs).count() == 0)
-    assert(Corpus.decontaminateBloom(noDocs).count() == 0)
     assert(Relational.valueOutliers(noEventsV).count() == 0)
     assert(Relational.priceHistogram(noOrders).count() == 0)
     assert(Layout.zorderOrders(noOrders).count() == 0)
@@ -589,20 +588,6 @@ class OpsSpec extends AnyFunSuite {
       s"zorder($x, $y)") }
     // quadrant ordering: all-of-lower-left sorts before upper-right
     assert(ref(511, 511, 10) < ref(512, 512, 10))
-  }
-
-  test("corpus: bloom-prefiltered decontaminate equals the exact form") {
-    val docs = (0L until 20L).map { i =>
-      val text =
-        if (i < 5) s"benchmark question number $i about topic ${i % 3} end"
-        else if (i % 4 == 0) s"training doc leaking benchmark question number ${i % 5} about topic ${i % 3} end"
-        else s"clean training document $i with entirely original content here"
-      (i, text, "s", "en")
-    }.toDF("doc_id", "text", "source", "lang")
-    val exact = Corpus.decontaminate(docs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bloom = Corpus.decontaminateBloom(docs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(bloom == exact)
-    assert(exact.nonEmpty)
   }
 
   test("multimodal: stub decode is deterministic and batch-shaped") {

@@ -387,27 +387,6 @@ class Round4Spec extends AnyFunSuite {
     assert(Dedup.sharedGramPairs(flood).count() == 0)
   }
 
-  // ---- Corpus.sizedBloom ---------------------------------------------------
-
-  test("bloom sized from measured cardinality holds its FPP past 65k grams") {
-    val n = 80000 // past the old hardcoded 1<<16 capacity
-    val grams = (0 until n).map(i => s"gram_$i").toDF("gram")
-    val fpp = 0.03
-    val bf = Corpus.sizedBloom(grams, n.toLong, fpp)
-    // all members present (no false negatives, ever)
-    assert((0 until n by 997).forall(i => bf.mightContain(s"gram_$i")))
-    // false-positive rate on 20k definitely-absent probes stays near fpp
-    val probes = 20000
-    val fps = (0 until probes).count(i => bf.mightContain(s"absent_$i"))
-    assert(fps.toDouble / probes <= 2 * fpp,
-      s"measured FPP ${fps.toDouble / probes} vs configured $fpp")
-    // and the OLD fixed capacity demonstrably saturates on the same set:
-    // the prefilter would pass nearly everything through to the join
-    val saturated = grams.stat.bloomFilter("gram", 1 << 16, fpp)
-    val satFps = (0 until probes).count(i => saturated.mightContain(s"absent_$i"))
-    assert(satFps.toDouble / probes > 2 * fpp)
-  }
-
   test("semDedup: in-bound magnitudes still pass the guard") {
     val ok = Seq(
       (0L, Seq.tabulate(64)(d => (d % 5).toFloat)),

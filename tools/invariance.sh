@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Execution-posture invariance sweeps: re-run the full 208-query surface
+# Execution-posture invariance sweeps: re-run the full 207-query surface
 # under a non-default execution posture and hash-compare against the
 # DuckDB oracle. Results must be invariant to HOW Spark executes —
 # partition counts, AQE re-planning, SQL dialect mode, codegen vs

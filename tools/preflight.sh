@@ -5,7 +5,7 @@
 #   tools/preflight.sh            # full: test + verify/oracle + crime check
 #                                 # + bench diff + smoke
 #   tools/preflight.sh --quick    # skip sbt test (just gates + smoke)
-#   tools/preflight.sh --full     # everything + the 208-query inventory bench
+#   tools/preflight.sh --full     # everything + the 207-query inventory bench
 #                                 # vs BENCH_FULL_ANCHOR.json (~10 min extra)
 #
 # Individual pieces are documented in .claude/skills/verify/SKILL.md.
