@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, StructField, StringType}
 import graft.functions.GraftFunctions._
@@ -11,7 +11,10 @@ import scala.jdk.CollectionConverters._
   * `SanFranciscoCrimePrepOlap` (daily sparse triplets with dictionary ids),
   * re-expressed as declarative queries over one pruned, cached CSV scan.
   * As in `runmapreduce.sh`, job 2 takes its dictionaries from job 1's
-  * outputs: the histogram keys, in output order, are the id spaces.
+  * outputs: the histogram keys, in output order, are the id spaces. Each
+  * output costs one aggregate shuffle and is sorted by the one task that
+  * writes it — no range-partitioned global sort — as each reference job
+  * sorts once, in the shuffle that feeds its single reducer.
   *
   * Semantics intentionally preserved from the reference:
   *   - positional 12-column schema, all strings
@@ -27,7 +30,8 @@ import scala.jdk.CollectionConverters._
   *     SURVEY §2.3-A2 — emitted explicitly here);
   *   - dictionary ids = 0-based sorted rank (`DataFile.java:55`);
   *   - output sorted by key, dense CSV vector / sparse triplet shapes
-  *     matching `part-00000`.
+  *     matching `part-00000` (the star triplets sorted on one long key
+  *     that orders them as (date, category id, district id)).
   *
   * Deliberately narrower than the reference: the weekly histograms count
   * buckets 0..16 only. An incident dated April–December (bucket 17 and up)
@@ -80,26 +84,41 @@ object CrimePipeline {
 
   /** A2 / `ReduceByWeek`: dense weekly histogram per key column over buckets
     * 0..16 (reference pre-zeroes 0..15 and leaks 16 on 6-week months).
-    * Output: (key, c0..c16) sorted by key — the `part-00000` row shape. */
+    * Output: (key, c0..c16) sorted by key — the `part-00000` row shape.
+    * One aggregate with one conditional count per bucket (a `pivot` plans
+    * two), and the one task that reads it sorts it: a histogram has one row
+    * per key and the keys are bounded, as at the reference's single reducer.
+    */
   def weeklyCounts(crime: DataFrame, keyColumn: String): DataFrame = {
-    val buckets = 0 to 16
+    val counts = (0 to 16).map(b => count(when(col("b") === b, 1)).as(s"c$b"))
     crime
       .select(col(keyColumn).as("key"),
         month_week_bucket(col("incident_date")).as("b"))
       .groupBy("key")
-      .pivot("b", buckets)
-      .count()
-      .na.fill(0L)
-      .toDF("key" +: buckets.map(b => s"c$b"): _*)
-      .orderBy("key")
+      .agg(counts.head, counts.tail: _*)
+      .coalesce(1)
+      .sortWithinPartitions("key")
   }
 
+  /** The star output's sort key: (day, catIdx, distIdx) packed into one
+    * long, `(unix_date(day) * nCats + catIdx) * nDists + distIdx`. For
+    * `0 <= catIdx < nCats` and `0 <= distIdx < nDists` it orders exactly as
+    * the triple, days before 1970 (negative `unix_date`) included; ANSI
+    * arithmetic throws rather than wraps. A single long key is one that
+    * Spark's sort orders by its prefix alone (the radix path). */
+  def dayCellKey(day: Column, catIdx: Column, distIdx: Column,
+      nCats: Int, nDists: Int): Column =
+    (unix_date(day).cast("long") * nCats + catIdx) * nDists + distIdx
+
   /** A3 / `SanFranciscoCrimePrepOlap`: sparse daily (catIdx, distIdx, count)
-    * triplets keyed by normalized `yyyy/MM/dd` date string. The ids are the
-    * 0-based positions of each key in `categories` and `districts` — job
-    * 1's histogram keys in output order (A6 / `DataFile.extractKeys`) —
-    * joined as broadcast local frames (the reference's static-HashMap side
-    * input made cluster-safe). */
+    * triplets with the day `d` as a `yyyy/MM/dd` string, and `day_key`
+    * ([[dayCellKey]]), which orders them as (d, cat_idx, dist_idx); the rows
+    * are not sorted — the task that writes them sorts on `day_key`. The ids
+    * are the 0-based positions of each key in `categories` and `districts`
+    * — job 1's histogram keys in output order (A6 / `DataFile.extractKeys`)
+    * — joined as broadcast local frames (the reference's static-HashMap side
+    * input made cluster-safe). The aggregate groups on the date itself; the
+    * string is formatted once per output row. */
   def dailyTriplets(crime: DataFrame, categories: Seq[String],
       districts: Seq[String]): DataFrame = {
     val spark = crime.sparkSession
@@ -107,14 +126,14 @@ object CrimePipeline {
     val cats = categories.zipWithIndex.toDF("Category", "cat_idx")
     val dists = districts.zipWithIndex.toDF("PdDistrict", "dist_idx")
     crime
-      .groupBy(
-        date_format(col("incident_date"), "yyyy/MM/dd").as("d"),
-        col("Category"), col("PdDistrict"))
+      .groupBy("incident_date", "Category", "PdDistrict")
       .agg(count(lit(1)).as("n"))
       .join(broadcast(cats), "Category")
       .join(broadcast(dists), "PdDistrict")
-      .select(col("d"), col("cat_idx"), col("dist_idx"), col("n"))
-      .orderBy("d", "cat_idx", "dist_idx")
+      .select(date_format(col("incident_date"), "yyyy/MM/dd").as("d"),
+        col("cat_idx"), col("dist_idx"), col("n"),
+        dayCellKey(col("incident_date"), col("cat_idx"), col("dist_idx"),
+          categories.size, districts.size).as("day_key"))
   }
 
   /** S4: the reference's TSV sink shape — `key TAB v1,v2,...` text rows. */
@@ -123,14 +142,17 @@ object CrimePipeline {
     df.select(concat_ws("\t", col(keyColumn), concat_ws(",", valueCols: _*)).as("line"))
   }
 
-  /** Whole job-1 + job-2 run to TSV files, mirroring `runmapreduce.sh`.
-    * One cached scan of the five columns the outputs read feeds all four
-    * (the reference re-scans the CSV per job). Each weekly histogram is
-    * collected once — one row per key, the bound the reference's PrepOlap
-    * also holds in memory — and written from the driver; its keys, in the
-    * order Spark sorted them, are job 2's dictionaries. They are not
-    * re-sorted on the driver: Spark orders strings by UTF-8 bytes, Scala's
-    * `String` ordering by UTF-16 units, and the two differ. */
+  /** Whole job-1 + job-2 run to TSV files, mirroring `runmapreduce.sh`,
+    * with one aggregate shuffle per output. One cached scan of the five
+    * columns the outputs read feeds all four (the reference re-scans the
+    * CSV per job). Each weekly histogram is collected once — one row per
+    * key, the bound the reference's PrepOlap also holds in memory — and
+    * written from the driver; its keys, in the order Spark sorted them, are
+    * job 2's dictionaries. They are not re-sorted on the driver: Spark orders
+    * strings by UTF-8 bytes, Scala's `String` ordering by UTF-16 units, and
+    * the two differ. The star lines are formatted in the parallel stage
+    * after the aggregate; the one writer task only sorts them on one long
+    * key, `day_key`, and writes them. */
   def runAll(spark: SparkSession, csvPath: String, outDir: String): Unit = {
     val scan = readCrimeCsvTagged(spark, csvPath)
       .select("IncidntNum", "Category", "PdDistrict", "incident_date", "bad_reason")
@@ -146,10 +168,13 @@ object CrimePipeline {
       }
       val categories = histogram("Category", s"$outDir/bycategory")
       val districts = histogram("PdDistrict", s"$outDir/bydistrict")
-      toTsv(dailyTriplets(crime, categories, districts).withColumn("triplet",
-          concat_ws(",", col("cat_idx"), col("dist_idx"), col("n")))
-          .select("d", "triplet"), "d")
-        .coalesce(1).write.mode("overwrite").text(s"$outDir/star")
+      dailyTriplets(crime, categories, districts)
+        .select(col("day_key"), concat_ws("\t", col("d"),
+          concat_ws(",", col("cat_idx"), col("dist_idx"), col("n"))).as("line"))
+        .repartition(1)
+        .sortWithinPartitions("day_key")
+        .select("line")
+        .write.mode("overwrite").text(s"$outDir/star")
       // dropped-row audit (the reference logs every skipped malformed row)
       tagged.where(col("bad_reason").isNotNull)
         .select(col("IncidntNum"), col("bad_reason"))

@@ -6,32 +6,37 @@ import org.apache.spark.sql.functions._
 
 /** Column profiling — the data-quality census a pipeline runs before
   * trusting a new 100 TB drop: per column, null count, distinct count,
-  * min/max, in ONE pass over the table (schema-driven: the aggregate list is
-  * built from the column names, not hand-written per table).
+  * min/max, in two aggregates over the table (schema-driven: the aggregate
+  * lists are built from the column names, not hand-written per table).
   *
   * Scale note: the exact `countDistinct` over N columns plans as an Expand
   * (the scan is replicated per distinct column through one shuffle) — right
-  * for a correctness gate, N× too expensive for a 100 TB census. The HLL
+  * for a correctness gate, N× too expensive for a 100 TB census. So the
+  * exact counts are an aggregate of their own, and the null counts, HLL
+  * sketches and min/max a second, one-pass aggregate: in one aggregate the
+  * Expand carries every HLL buffer through every replicated row. The HLL
   * column is the at-scale path (one pass, mergeable sketches, no expand);
   * the `hll_within_5pct` contract flag — checked against the exact count —
   * is what lets the oracle verify the sketch without replaying it. */
 object Profile {
 
   def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
-    // an empty column list used to die in aggs.head's obscure
+    // an empty column list used to die in exact.head's obscure
     // empty-collection error rather than a parameter message
     require(cols.nonEmpty, "profile: need at least one column")
-    val aggs = cols.flatMap { c =>
+    val exact = cols.map(c => countDistinct(col(c)).as(s"__nd_$c"))
+    val onePass = cols.flatMap { c =>
       Seq(
         count(when(col(c).isNull, lit(1))).as(s"__nulls_$c"),
-        countDistinct(col(c)).as(s"__nd_$c"),
         approx_count_distinct(col(c), 0.02).as(s"__and_$c"),
         // min/max on the NATIVE type, cast at the boundary — min of the
         // string rendering would order "10" < "9"
         min(col(c)).cast("string").as(s"__min_$c"),
         max(col(c)).cast("string").as(s"__max_$c"))
     }
-    val one = df.agg(aggs.head, aggs.tail: _*)
+    // each aggregate is one row; the cross join pairs them
+    val one = df.agg(exact.head, exact.tail: _*)
+      .crossJoin(df.agg(onePass.head, onePass.tail: _*))
     val rows = cols.map { c =>
       struct(
         lit(c).as("column"),

@@ -3,15 +3,25 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.{Calendar, Locale}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.functions.{col, to_date}
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.CrimePipeline
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Differential test of the full reference pipeline on a crime-shaped CSV
   * fixture (FIXTURES.md §B): the expected values are computed by an
   * independent plain-Scala implementation using java.util.Calendar — the
   * same ground truth the reference's awk script provided (SURVEY §5.1). */
-class CrimePipelineSpec extends AnyFunSuite {
+class CrimePipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import TestSpark.spark
 
   // fixture: header, quoted embedded commas, short row, bad date,
@@ -245,5 +255,114 @@ class CrimePipelineSpec extends AnyFunSuite {
       assert(cacheManager.isEmpty)
       assert(sc.getPersistentRDDs.keySet.toSet == persisted)
     } finally Files.delete(file)
+  }
+
+  /** The physical plans of every query `body` executes, final AQE plans
+    * included, in execution order. Listener events arrive asynchronously;
+    * `last` names the output directory of `body`'s last write, whose plan
+    * arrives after all the others. */
+  private def executedPlans(last: String)(body: => Unit): Seq[SparkPlan] = {
+    val seen = mutable.ArrayBuffer[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.synchronized(seen += qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.synchronized(seen.exists(writesTo(_, last))) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    seen.synchronized(seen.toList)
+  }
+
+  /** Whether `plan` writes files into a directory named `name`. */
+  private def writesTo(plan: SparkPlan, name: String): Boolean =
+    collect(plan) {
+      case w: DataWritingCommandExec => w.cmd
+    }.exists {
+      case c: InsertIntoHadoopFsRelationCommand => c.outputPath.getName == name
+      case _ => false
+    }
+
+  test("runAll: one shuffle per output, no range-partitioned sort; " +
+      "the star writer sorts on one long key") {
+    val out = "/tmp/graft_crime_fixture_plans"
+    val plans = executedPlans("badrecords") {
+      CrimePipeline.runAll(spark, fixture, out)
+    }
+    Seq("bycategory", "bydistrict", "star", "badrecords").foreach(name =>
+      assert(plans.exists(writesTo(_, name)), name))
+    val rangeShuffles = plans.flatMap(p => collect(p) {
+      case e: ShuffleExchangeLike
+        if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    })
+    assert(rangeShuffles.isEmpty, rangeShuffles.mkString("\n"))
+    for (p <- plans) {
+      val aggregateShuffles = collect(p) {
+        case e: ShuffleExchangeLike
+          if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+      }
+      assert(aggregateShuffles.length <= 1, p.treeString)
+    }
+    val starPlans = plans.filter(writesTo(_, "star"))
+    assert(starPlans.length == 1)
+    val sorts = collect(starPlans.head) { case s: SortExec => s }
+    assert(sorts.length == 1, starPlans.head.treeString)
+    assert(sorts.head.sortOrder.map(_.dataType) == Seq(LongType),
+      sorts.head.sortOrder.mkString(", "))
+  }
+
+  test("dayCellKey orders rows exactly as (day, cat_idx, dist_idx)") {
+    import spark.implicits._
+    val days = Seq("0001-01-01", "1899-12-31", "1900-01-01", "1969-12-30",
+      "1969-12-31", "1970-01-01", "1970-01-02", "2012-12-31", "2013-01-01",
+      "9999-12-31")
+    for ((nCats, nDists) <- Seq((1, 1), (3, 2), (40, 11), (100000, 100000))) {
+      val ids = (n: Int) => Seq(0, 1, n - 2, n - 1).filter(i => i >= 0 && i < n).distinct
+      val cells = for (d <- days; c <- ids(nCats); t <- ids(nDists)) yield (d, c, t)
+      val keyed = new scala.util.Random(7).shuffle(cells).toDF("day", "c", "t")
+        .select(col("day"), col("c"), col("t"),
+          CrimePipeline.dayCellKey(to_date(col("day")), col("c"), col("t"),
+            nCats, nDists).as("k"))
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2)) -> r.getLong(3))
+      assert(keyed.map(_._2).distinct.length == cells.length)
+      assert(keyed.sortBy(_._2).map(_._1).toSeq == cells.sorted, s"$nCats x $nDists")
+    }
+  }
+
+  test("runAll: days before 1970 and across year boundaries land in star in order") {
+    val header = rows.head
+    def row(id: String, cat: String, date: String, dist: String) =
+      s"$id,$cat,DESC,Monday,$date 10:00,10:00,$dist,NONE,1 Block,-122.4,37.7," +
+        "\"(37.7, -122.4)\""
+    val data = Seq(
+      row("101", "VANDALISM", "01/01/2013", "TARAVAL"),
+      row("102", "ARSON", "12/31/1969", "BAYVIEW"),
+      row("103", "VANDALISM", "12/31/1969", "TARAVAL"),
+      row("104", "ARSON", "01/01/1970", "TARAVAL"),
+      row("105", "ASSAULT", "06/15/1955", "BAYVIEW"),
+      row("106", "VANDALISM", "12/31/2012", "BAYVIEW"),
+      row("107", "ARSON", "12/31/2012", "TARAVAL"),
+      row("108", "ARSON", "12/31/1969", "BAYVIEW"))
+    val csv = Files.createTempFile("graft_crime_epoch", ".csv")
+    try {
+      Files.write(csv, (header +: data).mkString("\n").getBytes("UTF-8"))
+      val out = "/tmp/graft_crime_epoch_run"
+      CrimePipeline.runAll(spark, csv.toString, out)
+      val (clean, _) = expected(data)
+      val cats = clean.map(_.category).distinct.sorted.zipWithIndex.toMap
+      val dists = clean.map(_.district).distinct.sorted.zipWithIndex.toMap
+      val want = clean.groupBy(i => (i.date, cats(i.category), dists(i.district)))
+        .toSeq.map { case ((d, c, t), is) =>
+          val Array(m, dd, y) = d.split("/")
+          (s"$y/$m/$dd", c, t, is.length)
+        }
+        .sorted.map { case (d, c, t, n) => s"$d\t$c,$t,$n" }
+      assert(want.head == "1955/06/15\t1,0,1" && want(1) == "1969/12/31\t0,0,2")
+      assert(outputLines(s"$out/star") == want)
+    } finally Files.delete(csv)
   }
 }

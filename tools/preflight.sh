@@ -17,6 +17,9 @@ step() { echo; echo "=== $1 ==="; }
 step "comparator-tooling selftest (<1 s)"
 python3 tools/selftest.py || rc=1
 
+step "crime CSV generator tests (<1 s)"
+python3 perfbench/test_gen_crime.py || rc=1
+
 if [ "${1:-}" != "--quick" ]; then
   step "sbt test (~6 min)"
   sbt -batch test 2>&1 | tail -4 | grep -E "Tests:|All tests" || rc=1
