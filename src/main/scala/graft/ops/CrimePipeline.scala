@@ -10,6 +10,9 @@ import scala.jdk.CollectionConverters._
   * (SURVEY.md §3): `SanFranciscoCrime` (weekly per-key histograms) and
   * `SanFranciscoCrimePrepOlap` (daily sparse triplets with dictionary ids),
   * re-expressed as declarative queries over one pruned, cached CSV scan.
+  * Each job has one implementation, here: [[denseCounts]] builds every A2
+  * histogram and [[dailyTriplets]] every A3 cell aggregate, and [[Parity]]
+  * runs the same two over `events` through its role mapping.
   * As in `runmapreduce.sh`, job 2 takes its dictionaries from job 1's
   * outputs: the histogram keys, in output order, are the id spaces. Each
   * output costs one aggregate shuffle and is sorted by the one task that
@@ -84,20 +87,28 @@ object CrimePipeline {
 
   /** A2 / `ReduceByWeek`: dense weekly histogram per key column over buckets
     * 0..16 (reference pre-zeroes 0..15 and leaks 16 on 6-week months).
-    * Output: (key, c0..c16) sorted by key — the `part-00000` row shape.
-    * One aggregate with one conditional count per bucket (a `pivot` plans
-    * two), and the one task that reads it sorts it: a histogram has one row
-    * per key and the keys are bounded, as at the reference's single reducer.
-    */
-  def weeklyCounts(crime: DataFrame, keyColumn: String): DataFrame = {
-    val counts = (0 to 16).map(b => count(when(col("b") === b, 1)).as(s"c$b"))
-    crime
-      .select(col(keyColumn).as("key"),
-        month_week_bucket(col("incident_date")).as("b"))
-      .groupBy("key")
+    * Output: (key, c0..c16) sorted by key — the `part-00000` row shape. */
+  def weeklyCounts(crime: DataFrame, keyColumn: String): DataFrame =
+    denseCounts(crime, col(keyColumn), "key", month_week_bucket(col("incident_date")),
+      (0 to 16).map(b => b -> s"c$b"))
+
+  /** The one dense-count builder behind every A2 histogram: one row per
+    * `key` value (named `keyName`) and, for each (bin value, column name)
+    * in `bins`, the count of that key's rows whose `bin` equals the value.
+    * A count is 0, never absent, so the schema is static, and a key whose
+    * rows all miss `bins` (or have a null `bin`) keeps its all-zero row.
+    * One aggregate of conditional counts (a `pivot` plans two), sorted by
+    * the one task that reads it: a histogram has one row per key and the
+    * keys are bounded, as at the reference's single reducer. */
+  def denseCounts(rows: DataFrame, key: Column, keyName: String, bin: Column,
+      bins: Seq[(Any, String)]): DataFrame = {
+    val counts = bins.map { case (v, name) => count(when(col("bin") === v, 1)).as(name) }
+    rows
+      .select(key.as(keyName), bin.as("bin"))
+      .groupBy(keyName)
       .agg(counts.head, counts.tail: _*)
       .coalesce(1)
-      .sortWithinPartitions("key")
+      .sortWithinPartitions(keyName)
   }
 
   /** The star output's sort key: (day, catIdx, distIdx) packed into one
@@ -111,30 +122,23 @@ object CrimePipeline {
     (unix_date(day).cast("long") * nCats + catIdx) * nDists + distIdx
 
   /** A3 / `SanFranciscoCrimePrepOlap`: sparse daily (catIdx, distIdx, count)
-    * triplets with the day `d` as a `yyyy/MM/dd` string, and `day_key`
-    * ([[dayCellKey]]), which orders them as (d, cat_idx, dist_idx); the rows
-    * are not sorted — the task that writes them sorts on `day_key`. The ids
-    * are the 0-based positions of each key in `categories` and `districts`
-    * — job 1's histogram keys in output order (A6 / `DataFile.extractKeys`)
-    * — joined as broadcast local frames (the reference's static-HashMap side
-    * input made cluster-safe). The aggregate groups on the date itself; the
-    * string is formatted once per output row. */
-  def dailyTriplets(crime: DataFrame, categories: Seq[String],
-      districts: Seq[String]): DataFrame = {
-    val spark = crime.sparkSession
-    import spark.implicits._
-    val cats = categories.zipWithIndex.toDF("Category", "cat_idx")
-    val dists = districts.zipWithIndex.toDF("PdDistrict", "dist_idx")
+    * triplets, one per non-zero (incident_date, Category, PdDistrict) cell.
+    * The ids come from the dictionary frames `categories` (Category,
+    * cat_idx) and `districts` (PdDistrict, dist_idx), 0-based, joined as
+    * broadcasts after the aggregate (the reference's static-HashMap side
+    * input made cluster-safe); a cell whose key has no id is dropped. The
+    * aggregate groups on the date itself, and `d`, its `yyyy/MM/dd` string,
+    * is formatted once per output row. Output: (d, cat_idx, dist_idx, n,
+    * incident_date), unsorted — each caller sorts on the date. */
+  def dailyTriplets(crime: DataFrame, categories: DataFrame,
+      districts: DataFrame): DataFrame =
     crime
       .groupBy("incident_date", "Category", "PdDistrict")
       .agg(count(lit(1)).as("n"))
-      .join(broadcast(cats), "Category")
-      .join(broadcast(dists), "PdDistrict")
+      .join(broadcast(categories), "Category")
+      .join(broadcast(districts), "PdDistrict")
       .select(date_format(col("incident_date"), "yyyy/MM/dd").as("d"),
-        col("cat_idx"), col("dist_idx"), col("n"),
-        dayCellKey(col("incident_date"), col("cat_idx"), col("dist_idx"),
-          categories.size, districts.size).as("day_key"))
-  }
+        col("cat_idx"), col("dist_idx"), col("n"), col("incident_date"))
 
   /** S4: the reference's TSV sink shape — `key TAB v1,v2,...` text rows. */
   def toTsv(df: DataFrame, keyColumn: String): DataFrame = {
@@ -150,9 +154,10 @@ object CrimePipeline {
     * written from the driver; its keys, in the order Spark sorted them, are
     * job 2's dictionaries. They are not re-sorted on the driver: Spark orders
     * strings by UTF-8 bytes, Scala's `String` ordering by UTF-16 units, and
-    * the two differ. The star lines are formatted in the parallel stage
-    * after the aggregate; the one writer task only sorts them on one long
-    * key, `day_key`, and writes them. */
+    * the two differ; their output positions are the ids. The star lines are
+    * formatted in the parallel stage after the aggregate; the one writer
+    * task only sorts them on one long key, `day_key` ([[dayCellKey]]), and
+    * writes them. */
   def runAll(spark: SparkSession, csvPath: String, outDir: String): Unit = {
     val scan = readCrimeCsvTagged(spark, csvPath)
       .select("IncidntNum", "Category", "PdDistrict", "incident_date", "bad_reason")
@@ -168,9 +173,13 @@ object CrimePipeline {
       }
       val categories = histogram("Category", s"$outDir/bycategory")
       val districts = histogram("PdDistrict", s"$outDir/bydistrict")
-      dailyTriplets(crime, categories, districts)
-        .select(col("day_key"), concat_ws("\t", col("d"),
-          concat_ws(",", col("cat_idx"), col("dist_idx"), col("n"))).as("line"))
+      import spark.implicits._
+      dailyTriplets(crime, categories.zipWithIndex.toDF("Category", "cat_idx"),
+          districts.zipWithIndex.toDF("PdDistrict", "dist_idx"))
+        .select(dayCellKey(col("incident_date"), col("cat_idx"), col("dist_idx"),
+            categories.size, districts.size).as("day_key"),
+          concat_ws("\t", col("d"),
+            concat_ws(",", col("cat_idx"), col("dist_idx"), col("n"))).as("line"))
         .repartition(1)
         .sortWithinPartitions("day_key")
         .select("line")

@@ -9,6 +9,10 @@ import graft.plans.Natives
   * over the TESTDATA tables. The role mapping (FIXTURES.md §A): `events.ts` ↔
   * incident Date, `event_type` ↔ Category, `user_id % 10` ↔ PdDistrict.
   *
+  * The two reference jobs are not implemented twice: the A2 histograms call
+  * [[CrimePipeline.denseCounts]] and the A3 daily cube with ids calls
+  * [[CrimePipeline.dailyTriplets]], over `events` in those roles.
+  *
   * Every function is DataFrame-in/DataFrame-out and purely declarative so
   * Catalyst plans the whole pipeline (scan-level column pruning, partial
   * aggregation before the shuffle, broadcast dictionary joins).
@@ -20,41 +24,23 @@ object Parity {
     concat(lit("D"), lpad(pmod(userId, lit(10)).cast("string"), 2, "0"))
 
   /** A2 (`SanFranciscoCrime.ReduceByWeek`, SanFranciscoCrime.java:154-210):
-    * weekly incident-count histogram per key, dense buckets. The reference
-    * emits a 16-slot CSV vector; here `pivot` with an explicit bucket domain
-    * restores the dense shape (absent buckets zero-filled), which also keeps
-    * the output schema static for the oracle. One shuffle: the partial/final
-    * HashAggregate pair Hadoop's missing combiner never provided.
-    */
+    * weekly incident-count histogram per key over week-of-month `buckets`,
+    * dense (absent buckets count 0): (keyName, w<b>...) sorted by key. */
   def weeklyHistogram(events: DataFrame, key: Column, keyName: String,
       buckets: Seq[Int]): DataFrame =
-    events
-      .select(key.as(keyName), Natives.weekOfMonth(to_date(col("ts"))).as("w"))
-      .groupBy(col(keyName))
-      .pivot("w", buckets)
-      .count()
-      .na.fill(0L)
-      .toDF(keyName +: buckets.map(b => s"w$b"): _*)
-      .orderBy(col(keyName))
+    CrimePipeline.denseCounts(events, key, keyName,
+      Natives.weekOfMonth(to_date(col("ts"))), buckets.map(b => b -> s"w$b"))
 
   /** The reference's declared-but-never-wired day-of-week mappers
     * (`CategoryMapByDotw`/`DistrictMapByDotw`, SanFranciscoCrime.java:110-126,
     * SURVEY §2.3 "unused-but-present"): histogram per key over day names. */
-  def dotwHistogram(events: DataFrame, key: Column, keyName: String): DataFrame = {
-    val days = Seq("Monday", "Tuesday", "Wednesday", "Thursday", "Friday",
-      "Saturday", "Sunday")
-    events
-      .select(key.as(keyName), date_format(col("ts"), "EEEE").as("dow"))
-      .groupBy(col(keyName))
-      .pivot("dow", days)
-      .count()
-      .na.fill(0L)
-      .toDF(keyName +: days.map(_.toLowerCase): _*)
-      .orderBy(col(keyName))
-  }
+  def dotwHistogram(events: DataFrame, key: Column, keyName: String): DataFrame =
+    CrimePipeline.denseCounts(events, key, keyName, date_format(col("ts"), "EEEE"),
+      Seq("Monday", "Tuesday", "Wednesday", "Thursday", "Friday", "Saturday",
+        "Sunday").map(d => d -> d.toLowerCase))
 
-  /** A2 in long (sparse) form: (key, bucket, n). Same aggregation without the
-    * pivot — the form that scales to arbitrary bucket domains at 100 TB. */
+  /** A2 in long (sparse) form: (key, bucket, n), non-zero cells only — the
+    * form that scales to arbitrary bucket domains at 100 TB. */
   def weeklyHistogramLong(events: DataFrame, key: Column, keyName: String): DataFrame =
     events
       .select(key.as(keyName), month_week_bucket(to_date(col("ts"))).as("bucket"))
@@ -119,33 +105,26 @@ object Parity {
       .select(col("event_id"), date_format(col("ts"), "yyyy/MM/dd").as("d"))
       .orderBy("event_id")
 
-  /** A3 + A6 composed: the OLAP-prep job's full output — daily counts keyed by
-    * dictionary ids rather than names (SanFranciscoCrimePrepOlap.java:161-205).
-    * The reference probes driver-local static HashMaps (single-JVM-only);
-    * here the dictionaries are tiny DataFrames broadcast-joined in, which is
-    * the same hash probe but correct on a real cluster.
+  /** A3 + A6 composed: the OLAP-prep job's full output — daily counts keyed
+    * by 0-based dictionary ids rather than names
+    * (SanFranciscoCrimePrepOlap.java:161-205), sorted on (date, cat_idx,
+    * dist_idx). `events` in the crime roles run through
+    * [[CrimePipeline.dailyTriplets]]; the ids are [[dictionary]]'s sorted
+    * rank, shifted to 0-based.
     */
   def dailyCubeIndexed(events: DataFrame): DataFrame = {
-    val cube = dailyCube(events)
-    // dictionaries from their own single-column scans, NOT from the cube:
-    // deriving them from the aggregate looks cheaper (no second scan) but
-    // each dictionary branch prunes the aggregate differently, so Spark
-    // cannot reuse one exchange across the three branches and the whole
-    // scan+shuffle runs three times (measured +0.7 s on this query at
-    // sf0.1). A one-column pruned scan + distinct is the cheap path in any
-    // columnar format — it reads only that column's bytes.
-    val catDict = dictionary(events, "event_type", "category_id", "event_type")
-    val distDict = dictionary(
-      events.select(districtOf(col("user_id")).as("district")), "district",
-      "district_id", "district")
-    cube
-      .join(broadcast(catDict), "event_type")
-      .join(broadcast(distDict), "district")
-      .select(
-        date_format(col("d"), "yyyy/MM/dd").as("d"),
-        (col("category_id") - 1).as("cat_idx"),
-        (col("district_id") - 1).as("dist_idx"),
-        col("n"))
-      .orderBy("d", "cat_idx", "dist_idx")
+    val crime = events.select(to_date(col("ts")).as("incident_date"),
+      col("event_type").as("Category"), districtOf(col("user_id")).as("PdDistrict"))
+    // each dictionary from its own one-column scan, NOT from the aggregate:
+    // deriving them from it looks cheaper (no second scan) but each branch
+    // prunes the aggregate differently, so Spark cannot reuse one exchange
+    // across the three and the scan+shuffle runs three times (measured
+    // +0.7 s on this query at sf0.1)
+    def ids(column: String, idx: String): DataFrame =
+      dictionary(crime, column, "id", column).select(col(column), (col("id") - 1).as(idx))
+    CrimePipeline.dailyTriplets(crime, ids("Category", "cat_idx"),
+        ids("PdDistrict", "dist_idx"))
+      .orderBy("incident_date", "cat_idx", "dist_idx")
+      .drop("incident_date")
   }
 }

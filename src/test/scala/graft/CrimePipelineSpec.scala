@@ -133,9 +133,11 @@ class CrimePipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("A3/A6: daily triplets carry 0-based sorted-rank dictionary ids") {
     val crime = CrimePipeline.readCrimeCsv(spark, csvPath)
     // job 1's histogram keys, in output order, are job 2's dictionaries
-    def keys(column: String) = CrimePipeline.weeklyCounts(crime, column)
-      .collect().map(_.getString(0)).toSeq
-    val got = CrimePipeline.dailyTriplets(crime, keys("Category"), keys("PdDistrict"))
+    import spark.implicits._
+    def ids(column: String, idx: String) = CrimePipeline.weeklyCounts(crime, column)
+      .collect().map(_.getString(0)).toSeq.zipWithIndex.toDF(column, idx)
+    val got = CrimePipeline.dailyTriplets(crime, ids("Category", "cat_idx"),
+        ids("PdDistrict", "dist_idx"))
       .collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2)) -> r.getLong(3)).toMap
     val cats = incidents.map(_.category).distinct.sorted.zipWithIndex.toMap

@@ -158,6 +158,41 @@ class PlanSpec extends AnyFunSuite {
     assert(factShuffles == 1, s"fact build should shuffle once:\n$p")
   }
 
+  test("A2 histograms: one aggregate exchange, no range sort, no pivot; " +
+      "A3 cube groups and sorts on the date") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.PivotFirst
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.types.{DateType, StringType}
+    object H extends AdaptiveSparkPlanHelper
+    def physical(name: String): SparkPlan =
+      SparkEntry.queries(name)(spark, TestSpark.sf0001).queryExecution.executedPlan
+    for (name <- Seq("a2_weekly_histogram", "a2_dotw_histogram", "s1_crime_weekly")) {
+      val p = physical(name)
+      val parts = H.collect(p) { case e: ShuffleExchangeLike => e.outputPartitioning }
+      assert(parts.count(_.isInstanceOf[HashPartitioning]) == 1, s"$name:\n$p")
+      assert(!parts.exists(_.isInstanceOf[RangePartitioning]), s"$name:\n$p")
+      val pivots = H.collect(p) { case a: BaseAggregateExec => a.aggregateExpressions }
+        .flatten.filter(_.aggregateFunction.isInstanceOf[PivotFirst])
+      assert(pivots.isEmpty, s"$name:\n$p")
+    }
+    val cube = physical("a3_daily_cube_indexed")
+    // the cell aggregate is the one with three grouping keys
+    val cellKeys = H.collect(cube) {
+      case a: BaseAggregateExec if a.groupingExpressions.length == 3 =>
+        a.groupingExpressions.map(_.dataType)
+    }
+    assert(cellKeys.nonEmpty && cellKeys.forall(ks =>
+      ks.contains(DateType) && ks.count(_ == StringType) == 2), s"$cube")
+    val sortKeys = H.collect(cube) {
+      case s: SortExec if s.global => s.sortOrder.map(_.dataType)
+    }
+    assert(sortKeys.length == 1 && sortKeys.head.headOption.contains(DateType), s"$cube")
+  }
+
   test("aggregations run as partial+final HashAggregate pairs") {
     val p = plan(Parity.categoryTotals(Tables.events(spark, TestSpark.sf0001)))
     assert("HashAggregate".r.findAllIn(p).size >= 2)

@@ -25,17 +25,20 @@ class PropertiesSpec extends AnyFunSuite {
   private val genDay: Gen[java.time.LocalDate] =
     Gen.choose(0L, 73048L).map(java.time.LocalDate.of(1900, 1, 1).plusDays(_)) // ..2100
 
+  /** `java.util.Calendar.WEEK_OF_MONTH` (US locale) of `d`. */
+  private def calendarWeek(d: java.time.LocalDate): Int = {
+    val cal = Calendar.getInstance(Locale.US)
+    cal.clear(); cal.set(d.getYear, d.getMonthValue - 1, d.getDayOfMonth)
+    cal.get(Calendar.WEEK_OF_MONTH)
+  }
+
   test("property: week_of_month == Calendar.WEEK_OF_MONTH (US) on random dates 1900-2100") {
     forAll(Gen.listOfN(200, genDay), runs = 4) { days =>
       {
         val got = days.map(Date.valueOf).toDF("d")
           .select(col("d"), week_of_month(col("d")).as("w"))
           .collect().map(r => r.getDate(0).toString -> r.getInt(1)).toMap
-        days.foreach { d =>
-          val cal = Calendar.getInstance(Locale.US)
-          cal.clear(); cal.set(d.getYear, d.getMonthValue - 1, d.getDayOfMonth)
-          assert(got(d.toString) == cal.get(Calendar.WEEK_OF_MONTH), s"date $d")
-        }
+        days.foreach(d => assert(got(d.toString) == calendarWeek(d), s"date $d"))
       }
     }
   }
@@ -69,6 +72,69 @@ class PropertiesSpec extends AnyFunSuite {
           assert(ids(s, vs, parts) == base,
             s"parts=$parts aqe=${s.conf.get("spark.sql.adaptive.enabled")}")
       }
+    }
+  }
+
+  /** The UTC instant at `hour`:00 of `day` (the test session is UTC). */
+  private def at(day: java.time.LocalDate, hour: Int): java.time.Instant =
+    day.atTime(hour, 0).toInstant(java.time.ZoneOffset.UTC)
+
+  test("property: denseCounts == Scala count per (key, bin); null keys and " +
+      "keys with no bin in the domain keep their row") {
+    import graft.ops.CrimePipeline
+    import graft.plans.Natives
+    val genRow = for {
+      k <- Gen.frequency((1, Gen.const(None)), (6, Gen.oneOf("a", "b", "c").map(Some(_))))
+      d <- Gen.frequency((1, Gen.const(None)), (6, genDay.map(Some(_))))
+    } yield (k, d)
+    val bins = 1 to 4
+    // planted: a null key, a null timestamp, and "late", whose days (29th
+    // and later) are all in week 5 or 6, outside the bin domain
+    val planted = Seq((None, None), (Some("a"), None),
+      (Some("late"), Some(java.time.LocalDate.of(2013, 3, 31))),
+      (Some("late"), Some(java.time.LocalDate.of(2024, 1, 29))))
+    forAll(Gen.zip(Gen.listOfN(60, genRow), Gen.choose(1, 7)), runs = 6) {
+      case (rows0, parts) =>
+        val rows = rows0 ++ planted
+        val got = CrimePipeline.denseCounts(
+            rows.map { case (k, d) => (k, d.map(at(_, 12))) }.toDF("k", "ts").repartition(parts),
+            col("k"), "key", Natives.weekOfMonth(to_date(col("ts"))),
+            bins.map(b => b -> s"w$b"))
+          .collect().map(_.toSeq).toSeq
+        // Option's ordering puts None first, as Spark's ascending sort does null
+        val want = rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (k, rs) =>
+          k.orNull +: bins.map(b => rs.count(_._2.exists(calendarWeek(_) == b)).toLong)
+        }
+        assert(got == want)
+        assert(want.contains(Seq("late", 0L, 0L, 0L, 0L)))
+    }
+  }
+
+  test("property: dailyCubeIndexed == Scala cube with 0-based sorted-rank ids, " +
+      "null event types dropped, sorted on the date") {
+    import org.apache.spark.sql.Row
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy/MM/dd")
+    val genEv = for {
+      d <- Gen.frequency((1, Gen.const(None)), (8, Gen.choose(0L, 40L)
+        .map(n => Some(java.time.LocalDate.of(2023, 12, 20).plusDays(n)))))
+      h <- Gen.choose(0, 23)
+      u <- Gen.choose(-3L, 25L)
+      t <- Gen.frequency((1, Gen.const(None)),
+        (6, Gen.oneOf("view", "click", "buy").map(Some(_))))
+    } yield (d, h, u, t)
+    forAll(Gen.listOfN(120, genEv), runs = 6) { evs =>
+      val events = evs.zipWithIndex.map { case ((d, h, u, t), i) =>
+        (i.toLong, d.map(at(_, h)), u, t)
+      }.toDF("event_id", "ts", "user_id", "event_type")
+      val got = Parity.dailyCubeIndexed(events).collect().toSeq
+      def district(u: Long) = f"D${Math.floorMod(u, 10L)}%02d"
+      val cats = evs.flatMap(_._4).distinct.sorted.zipWithIndex.toMap
+      val dists = evs.map(e => district(e._3)).distinct.sorted.zipWithIndex.toMap
+      val want = evs.filter(_._4.isDefined)
+        .groupBy(e => (e._1, cats(e._4.get), dists(district(e._3)))).toSeq
+        .sortBy { case ((d, c, t), _) => (d.map(_.toEpochDay), c, t) }
+        .map { case ((d, c, t), es) => Row(d.map(_.format(fmt)).orNull, c, t, es.length.toLong) }
+      assert(got == want)
     }
   }
 
