@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -70,7 +70,6 @@ object ScaleUp {
       }.reduce(_ unionByName _)
 
     def writeOne(df: DataFrame, name: String): Unit = {
-      val tmp = s"$out/_tmp_$name"
       // bounded row groups (parquet.block.size=8m on the hadoop conf,
       // set once in main): coalesce(1) + parquet's default 128 MB block
       // writes any sub-128 MB table as ONE row group, which
@@ -79,18 +78,7 @@ object ScaleUp {
       // read zero rows at 128x), which reads as a serial wall when it is
       // really file layout. 8 MB groups keep every replica table
       // multi-split, the shape a real cluster table has.
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = scala.util.Using.resource(Files.list(Paths.get(tmp)))(
-        _.toArray.map(_.toString)
-          .filter(p => p.endsWith(".parquet") && p.contains("part-")))
-      require(part.length == 1, s"$name: expected one part file, got ${part.length}")
-      Files.move(Paths.get(part.head), Paths.get(s"$out/$name.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-      // clean the scratch dir (part file already moved out); Using closes
-      // the walk stream's directory handles
-      scala.util.Using.resource(Files.walk(Paths.get(tmp)))(
-        _.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p)))
+      graft.sources.Scratch.writeSingleParquet(df, Paths.get(s"$out/$name.parquet"))
       println(s"[scaleup] $name -> $out/$name.parquet")
     }
 

@@ -469,167 +469,14 @@ object SparkEntry {
       Relational.transitionMatrix(Tables.events(s, d))),
     "ts_seasonal_dow" -> ((s, d) =>
       Relational.seasonalDow(Tables.events(s, d))),
-    // ---- sources/sinks (SURVEY §2.1): TSV sink + MR-output key reader
-    "s_json_roundtrip" -> ((s, d) => {
-      // JSON-lines source format: write the events slice as json, read it
-      // back with an explicit schema (scan-friendly), aggregate
-      val out = s"/tmp/graft_json_rt_${d.replaceAll("[^a-zA-Z0-9]", "_")}" +
-        s"_${ProcessHandle.current().pid()}"
-      val ev = Tables.events(s, d).select("event_id", "event_type", "value")
-      ev.write.mode("overwrite").json(out)
-      s.read.schema(ev.schema).json(out)
-        .groupBy("event_type").agg(count(lit(1)).as("n"))
-        .orderBy("event_type")
-    }),
-    "s_orc_roundtrip" -> ((s, d) => {
-      // ORC source/sink: the second columnar format the engine speaks
-      val out = s"/tmp/graft_orc_rt_${d.replaceAll("[^a-zA-Z0-9]", "_")}" +
-        s"_${ProcessHandle.current().pid()}"
-      Tables.lineitem(s, d).select("l_returnflag", "l_quantity")
-        .write.mode("overwrite").orc(out)
-      s.read.orc(out)
-        .groupBy("l_returnflag")
-        .agg(sum(col("l_quantity").cast("decimal(12,2)"))
-          .cast("decimal(18,2)").cast("double").as("sum_qty"))
-        .orderBy("l_returnflag")
-    }),
-    "s3_tsv_roundtrip" -> ((s, d) => {
-      // process-unique path: concurrent runs on the same sfDir (e.g. bench
-      // and verify) must not race on one directory
-      val out = s"/tmp/graft_tsv_roundtrip_${d.replaceAll("[^a-zA-Z0-9]", "_")}" +
-        s"_${ProcessHandle.current().pid()}"
-      graft.sources.Sinks.writeTsv(Parity.categoryTotals(Tables.events(s, d)), out, 1)
-      graft.sources.Sinks.readTsvKeys(s, out)
-    }),
-    "s_jdbc_roundtrip" -> ((s, d) => {
-      // S5/S6 LoadStarDB parity (`LoadStarDB.java:86-103,202-217`): load the
-      // category dim into a JDBC star schema (embedded Derby standing in for
-      // the reference's MySQL), truncate-reload it (the S6 semantics), read
-      // it back through the JDBC source. Process-unique in-memory db name:
-      // bench and verify may run this concurrently.
-      val url = s"jdbc:derby:memory:graftgate_${d.replaceAll("[^a-zA-Z0-9]", "_")}" +
-        s"_${ProcessHandle.current().pid()};create=true"
-      val dim = Star.dimCategory(Tables.orders(s, d))
-      graft.sources.Sinks.writeJdbc(dim, url, "category", "app", "app")
-      // second write proves truncate-before-load keeps the DDL and replaces rows
-      graft.sources.Sinks.writeJdbc(dim, url, "category", "app", "app")
-      val props = new java.util.Properties()
-      props.setProperty("user", "app"); props.setProperty("password", "app")
-      try {
-        // materialize the (dim-cardinality-bounded) read-back into a local
-        // frame BEFORE dropping the db: the JDBC scan is lazy, and the
-        // caller counts/writes the result after this function returns
-        val back = s.read.jdbc(url, "category", props)
-          .select(col("category_id").cast("int").as("category_id"),
-            col("name").cast("string").as("name"))
-          .orderBy("category_id")
-        val rows = back.collect().toSeq
-        s.createDataFrame(
-          s.sparkContext.parallelize(rows, 1), back.schema)
-      } finally {
-        // drop the in-memory scratch db so repeated in-process verify/bench
-        // loops don't accumulate one Derby db per run (r9 VERDICT nit);
-        // Derby signals a successful in-memory drop with SQLException 08006
-        try java.sql.DriverManager.getConnection(
-          url.replace(";create=true", ";drop=true"), "app", "app")
-        catch { case _: java.sql.SQLException => }
-      }
-    }),
-    "s_bucketed_join" -> ((s, d) => {
-      // Sinks.writeBucketed gate: two co-bucketed warehouse tables joined
-      // and aggregated — the storage-level co-location strategy for
-      // repeated 100 TB fact joins (shuffle-freeness of the join is
-      // plan-asserted in SinksSpec; the write→catalog-read→join→agg path
-      // is hash-oracled here). Run-unique table names (pid + UUID, same
-      // discipline as jdbcAppendEndState): two concurrent invocations in
-      // ONE JVM must not collide on the catalog name, and a crash between
-      // write and the finally-drop must not poison the next run.
-      val tag = s"${d.replaceAll("[^a-zA-Z0-9]", "_")}" +
-        s"_${ProcessHandle.current().pid()}" +
-        s"_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val tOrd = s"gate_b_orders_$tag"
-      val tCus = s"gate_b_customer_$tag"
-      graft.sources.Sinks.writeBucketed(
-        Tables.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice"),
-        tOrd, "o_custkey", 8, Some("o_custkey"))
-      graft.sources.Sinks.writeBucketed(
-        Tables.customer(s, d).select("c_custkey", "c_mktsegment"),
-        tCus, "c_custkey", 8, Some("c_custkey"))
-      try {
-        val agg = s.table(tOrd)
-          .join(s.table(tCus), col("o_custkey") === col("c_custkey"))
-          .groupBy("c_mktsegment")
-          .agg(count(lit(1)).as("n_orders"),
-            // decimal(28,2) intermediate: Spark's sum over decimal(12,2)
-            // is decimal(22,2), so the widening cast can NEVER overflow —
-            // the former decimal(18,2) narrowing diverged on overflow
-            // (non-ANSI Spark → NULL, DuckDB → error) once a segment's
-            // price sum crossed 10^16 (~4 orders above tested replicas)
-            sum(col("o_totalprice").cast("decimal(12,2)"))
-              .cast("decimal(28,2)").cast("double").as("sum_price"))
-          .orderBy("c_mktsegment")
-        // materialize the (segment-bounded) result BEFORE dropping the
-        // managed tables the lazy plan would otherwise re-scan
-        val rows = agg.collect().toSeq
-        s.createDataFrame(s.sparkContext.parallelize(rows, 1), agg.schema)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $tOrd")
-        s.sql(s"DROP TABLE IF EXISTS $tCus")
-      }
-    }),
-    "s_partitioned_prune" -> ((s, d) => {
-      // Sinks.writeParquet partitionBy gate: write events partitioned by
-      // event_type, read back with a partition-column predicate, and
-      // REQUIRE the executed plan carries a non-empty PartitionFilters —
-      // directory-level skipping is the storage layout that turns a
-      // 100 TB scan into a per-partition one (plan shape was previously
-      // asserted only in SinksSpec; the write→prune→agg round-trip is
-      // hash-oracled here). Run-unique dir (pid + UUID): concurrent
-      // invocations must not collide, a crashed run must not poison the
-      // next.
-      val out = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_gate_part_${ProcessHandle.current().pid()}_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")).toString
-      try {
-        val src = Tables.events(s, d)
-          .select("event_id", "user_id", "event_type")
-        graft.sources.Sinks.writeParquet(src, out, Seq("event_type"))
-        // explicit schema: an EMPTY partitioned write leaves a dir with no
-        // partition directories, where schema inference has nothing to read
-        val pruned = s.read.schema(src.schema).parquet(out)
-          .where(col("event_type").isin("click", "purchase"))
-        // plan-shape requirement only when there ARE partition dirs to
-        // prune (on an empty write event_type is not a partition column,
-        // so the predicate correctly lands in data filters instead)
-        // Using.resource: Files.list holds a directory handle until the
-        // stream is closed — leaked handles accumulate in the long-lived
-        // driver JVM that runs the whole gate inventory
-        val hasParts = scala.util.Using.resource(
-            java.nio.file.Files.list(java.nio.file.Paths.get(out)))(
-          _.toArray.exists(_.toString.contains("event_type=")))
-        if (hasParts) {
-          val plan = pruned.queryExecution.executedPlan.toString
-          val at = plan.indexOf("PartitionFilters: [")
-          require(
-            at >= 0 && plan.charAt(at + "PartitionFilters: [".length) != ']',
-            s"partitioned read did not prune — PartitionFilters empty:\n$plan")
-        }
-        val agg = pruned.groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sum("event_id").as("id_sum"))
-          .orderBy("event_type")
-        // materialize BEFORE the finally-delete would pull the dir out
-        // from under the lazy plan
-        val rows = agg.collect().toSeq
-        s.createDataFrame(s.sparkContext.parallelize(rows, 1), agg.schema)
-      } finally {
-        val p = java.nio.file.Paths.get(out)
-        if (java.nio.file.Files.exists(p))
-          scala.util.Using.resource(java.nio.file.Files.walk(p))(
-            _.sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => java.nio.file.Files.deleteIfExists(f)))
-      }
-    }),
+    // ---- sources/sinks (SURVEY §2.1): a round trip through each sink
+    "s_json_roundtrip" -> ((s, d) => graft.sources.Sinks.jsonRoundTrip(s, d)),
+    "s_orc_roundtrip" -> ((s, d) => graft.sources.Sinks.orcRoundTrip(s, d)),
+    "s3_tsv_roundtrip" -> ((s, d) => graft.sources.Sinks.tsvRoundTrip(s, d)),
+    "s_jdbc_roundtrip" -> ((s, d) => graft.sources.Sinks.jdbcRoundTrip(s, d)),
+    "s_bucketed_join" -> ((s, d) => graft.sources.Sinks.bucketedJoin(s, d)),
+    "s_partitioned_prune" -> ((s, d) =>
+      graft.sources.Sinks.partitionedPrune(s, d)),
     "s1_crime_weekly" -> ((s, _) => {
       // S1/S2/P3/P4/A2 end-to-end on the reference's ACTUAL input shape
       // (`SanFranciscoCrime.java:75-102`): quoted-CSV parse, header drop,

@@ -1,13 +1,13 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.ConcurrentHashMap
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.Tables
+import graft.sources.Scratch
 
 /** Driver-gate adapters for the streaming operators: run a Structured
   * Streaming query over the bounded `events` table to completion
@@ -21,11 +21,11 @@ import graft.Tables
   * production source the same code runs incrementally — nothing here is
   * test-only except reading the finite directory.
   *
-  * Each run uses fresh temp checkpoint/output dirs: the gate must be
-  * re-runnable in one session without state collisions (the driver runs
-  * Verify, then specs may run the same queries again). A gate deletes its
-  * checkpoint and input dirs before it returns; the end-state dir, which
-  * the returned frame reads lazily, is deleted at JVM exit.
+  * Each run takes fresh checkpoint/output dirs from [[graft.sources.Scratch]]:
+  * the gate must be re-runnable in one session without state collisions
+  * (the driver runs Verify, then specs may run the same queries again).
+  * Checkpoint and input dirs are scoped to the gate; the end-state dir,
+  * which the returned frame reads lazily, lives until JVM exit.
   */
 object StreamGate {
 
@@ -86,98 +86,64 @@ object StreamGate {
     math.max(4L, math.min(cores.toLong, bytes / (16L << 20))).toInt
   }
 
-  /** Gate scratch space: tmpfs when the host has one. Checkpoint commits
-    * fsync every micro-batch — on-disk temp dirs made the gates pay real
-    * disk latency for durability that a drain-a-bounded-source gate does
-    * not need (a production job points checkpointLocation at durable
-    * storage; this is gate plumbing, not the operator). */
-  private[graft] def tmpBase: Path = {
-    val shm = Paths.get("/dev/shm")
-    if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
-    else Paths.get(System.getProperty("java.io.tmpdir"))
-  }
-
-  /** Delete `dir` and everything under it, if it exists. */
-  private def deleteTree(dir: Path): Unit =
-    if (Files.exists(dir))
-      // Using.resource: Files.walk holds a directory handle until closed
-      scala.util.Using.resource(Files.walk(dir))(
-        _.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p)))
-
-  /** End-state dirs still read by returned frames, deleted at JVM exit:
-    * `/dev/shm` is RAM, and a long-lived JVM runs many gates. */
-  private val endStateDirs = ConcurrentHashMap.newKeySet[Path]()
-  sys.addShutdownHook(endStateDirs.forEach(deleteTree(_)))
-
   /** Runs the query to completion and returns the engine's own late-data
     * accounting: the sum of `numRowsDroppedByWatermark` over every state
     * operator and micro-batch — the number Spark itself says it silently
-    * discarded. Most gates ignore it; [[lateCensusEndState]] cross-checks
-    * its census against it so the reported drops are the real drops. */
+    * discarded. `ck` is a checkpoint shared across query lifetimes (the
+    * checkpoint-recovery gate); by default each run gets its own, scoped
+    * to the run. */
   private def run(writer: DataStreamWriter[Row],
-      ck0: Option[String] = None): Long = {
-    // ck0: the checkpoint-recovery gate reuses ONE checkpoint across two
-    // query lifetimes and deletes it itself; every other gate gets a fresh
-    // one, deleted once the query stops
-    val ck = ck0.getOrElse(
-      Files.createTempDirectory(tmpBase, "graft_stream_ck").toString)
-    try {
+      ck: Option[Path] = None): Long = {
+    def drain(ck: Path): Long = {
       // AvailableNow: drain everything available, then STOP — versus
       // processAllAvailable on the default trigger, which keeps the
       // micro-batch scheduler polling (empty-batch planning cycles) until
       // the explicit stop. Same end state, less machinery.
       val q = writer
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ck).start()
+        .option("checkpointLocation", ck.toString).start()
       try {
         q.awaitTermination()
         q.recentProgress.iterator
           .flatMap(_.stateOperators.iterator)
           .map(_.numRowsDroppedByWatermark).sum
       } finally q.stop()
-    } finally if (ck0.isEmpty) deleteTree(Paths.get(ck))
+    }
+    ck.fold(Scratch.withDir("graft_stream_ck")(drain))(drain)
   }
 
-  private def freshOut(): String = {
-    val dir = Files.createTempDirectory(tmpBase, "graft_stream_out")
-    endStateDirs.add(dir)
-    dir.toString + "/end_state"
+  /** Drain `stream` through `foreachBatch` → parquet into a fresh end-state
+    * dir and return (end-state frame read with `spark`, the engine's
+    * watermark-drop count). The output mode fixes the write mode: each
+    * complete-mode batch is the whole aggregate (overwrite); append and
+    * update batches add rows (append). `stampBatchId` adds each batch's
+    * micro-batch id as `batch_id`, the exactly-once key a production sink
+    * would use.
+    *
+    * An EMPTY bounded source fires zero micro-batches under AvailableNow,
+    * so `foreachBatch` never runs and the sink dir is never created — that
+    * IS the empty end state, returned as a 0-row frame with the schema each
+    * batch would have written. Without this, an empty source — routine at
+    * 100 TB, e.g. a date-range with no events — turns into PATH_NOT_FOUND
+    * instead of an empty result. */
+  private def endState(spark: SparkSession, stream: DataFrame,
+      outputMode: String, stampBatchId: Boolean = false,
+      ck: Option[Path] = None): (DataFrame, Long) = {
+    val out = Scratch.untilExit("graft_stream_out").resolve("end_state")
+    val writeMode = if (outputMode == "complete") "overwrite" else "append"
+    val dropped = run(stream.writeStream.outputMode(outputMode).foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
+        (if (stampBatchId) batch.withColumn("batch_id", lit(batchId))
+         else batch).write.mode(writeMode).parquet(out.toString)
+    }, ck)
+    val schema =
+      if (stampBatchId) stream.withColumn("batch_id", lit(0L)).schema
+      else stream.schema
+    val end =
+      if (Files.exists(out)) spark.read.parquet(out.toString)
+      else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    (end, dropped)
   }
-
-  /** One single-file parquet per arrival batch into `inDir`; the file
-    * source orders by modification time, pinned explicitly so arrival
-    * order is fixed. Shared by the late-census and checkpoint-recovery
-    * gates (any gate that must control WHICH rows each micro-batch sees). */
-  private def writeArrival(inDir: Path, df: DataFrame,
-      name: String, mtimeSec: Long): Unit = {
-    val tmp = inDir.resolve(s"_tmp_$name")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    // Using.resource: Files.list/walk hold a directory handle until
-    // closed — this runs per arrival batch in a long-lived driver JVM
-    val parts = scala.util.Using.resource(Files.list(tmp))(
-      _.toArray.map(_.toString)
-        .filter(p => p.endsWith(".parquet") && p.contains("part-")))
-    require(parts.length == 1, s"$name: expected 1 part, got ${parts.length}")
-    val dst = inDir.resolve(s"$name.parquet")
-    Files.move(Paths.get(parts.head), dst)
-    deleteTree(tmp)
-    Files.setLastModifiedTime(dst,
-      java.nio.file.attribute.FileTime.fromMillis(mtimeSec * 1000))
-  }
-
-  /** Read a gate's end-state parquet. An EMPTY bounded source fires zero
-    * micro-batches under AvailableNow, so `foreachBatch` never runs and the
-    * sink dir is never created — that IS the empty end state, returned as a
-    * 0-row frame with the sink's schema (`schema` = the streaming frame's
-    * schema, what each batch would have written). Without this, an empty
-    * source — routine at 100 TB, e.g. a date-range with no events — turns
-    * into PATH_NOT_FOUND instead of an empty result. */
-  private def readEnd(spark: SparkSession, out: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (new java.io.File(out).exists()) spark.read.parquet(out)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
 
   /** [[Streaming.tumblingCounts]] end state. Complete output mode: every
     * micro-batch rewrites the full aggregate, so the final parquet is the
@@ -186,14 +152,9 @@ object StreamGate {
     * append mode would hold back the tail windows forever — complete mode
     * is the correct end-state semantics). */
   def tumblingDailyEndState(spark: SparkSession, dir: String): DataFrame = {
-    val out = freshOut()
-    val agg = Streaming.tumblingCounts(eventsStream(spark, dir))
-    run(agg.writeStream.outputMode("complete").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(out)
-    })
-    readEnd(spark, out, agg.schema)
-      .select(to_date(col("w_start")).as("day"), col("event_type"), col("n"))
+    val (end, _) = endState(spark,
+      Streaming.tumblingCounts(eventsStream(spark, dir)), "complete")
+    end.select(to_date(col("w_start")).as("day"), col("event_type"), col("n"))
       .orderBy("day", "event_type")
   }
 
@@ -204,14 +165,9 @@ object StreamGate {
     * `valid_to IS NOT NULL` rows). Append sink: closed rows are immutable
     * once emitted. */
   def scd2ClosedEndState(spark: SparkSession, dir: String): DataFrame = {
-    val out = freshOut()
-    val ds = Streaming.scd2Intervals(spark, eventsStream(spark, dir))
-    run(ds.toDF().writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-    })
-    readEnd(spark, out, ds.toDF().schema)
-      .select(col("user_id"), col("state"), col("valid_from"), col("valid_to"))
+    val (end, _) = endState(spark,
+      Streaming.scd2Intervals(spark, eventsStream(spark, dir)).toDF(), "append")
+    end.select(col("user_id"), col("state"), col("valid_from"), col("valid_to"))
       .orderBy("user_id", "valid_from")
   }
 
@@ -221,25 +177,17 @@ object StreamGate {
     * watermark never passes the final sessions, so append would withhold
     * each user's last session forever. */
   def sessionEndState(spark: SparkSession, dir: String): DataFrame = {
-    val out = freshOut()
-    val agg = Streaming.sessionCounts(eventsStream(spark, dir))
-    run(agg.writeStream.outputMode("complete").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(out)
-    })
-    readEnd(spark, out, agg.schema).orderBy("user_id", "session_start")
+    val (end, _) = endState(spark,
+      Streaming.sessionCounts(eventsStream(spark, dir)), "complete")
+    end.orderBy("user_id", "session_start")
   }
 
   /** [[Streaming.slidingCounts]] end state — complete-mode rewrite, same
     * rationale as [[tumblingDailyEndState]]. */
   def sliding6hEndState(spark: SparkSession, dir: String): DataFrame = {
-    val out = freshOut()
-    val agg = Streaming.slidingCounts(eventsStream(spark, dir))
-    run(agg.writeStream.outputMode("complete").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(out)
-    })
-    readEnd(spark, out, agg.schema).orderBy("w_start", "event_type")
+    val (end, _) = endState(spark,
+      Streaming.slidingCounts(eventsStream(spark, dir)), "complete")
+    end.orderBy("w_start", "event_type")
   }
 
   /** [[Streaming.dedupWithinWatermark]] end state: every event whose id was
@@ -247,14 +195,9 @@ object StreamGate {
     * unique) that is the identity, which is exactly what gates the state
     * plumbing: any spurious drop or duplication shows as a hash mismatch. */
   def dedupIdsEndState(spark: SparkSession, dir: String): DataFrame = {
-    val out = freshOut()
-    val ds = Streaming.dedupWithinWatermark(eventsStream(spark, dir))
-    run(ds.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-    })
-    readEnd(spark, out, ds.schema)
-      .select("event_id", "ts", "user_id", "event_type", "value")
+    val (end, _) = endState(spark,
+      Streaming.dedupWithinWatermark(eventsStream(spark, dir)), "append")
+    end.select("event_id", "ts", "user_id", "event_type", "value")
       .orderBy("event_id")
   }
 
@@ -266,14 +209,9 @@ object StreamGate {
     * crosses no milestone. */
   def userMilestonesEndState(spark: SparkSession, dir: String,
       every: Long = 10L): DataFrame = {
-    val out = freshOut()
-    val ds = Streaming.runningUserStats(spark, eventsStream(spark, dir), every)
-    run(ds.toDF().writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-    })
-    readEnd(spark, out, ds.toDF().schema)
-      .groupBy("user_id")
+    val (end, _) = endState(spark, Streaming.runningUserStats(spark,
+      eventsStream(spark, dir), every).toDF(), "append")
+    end.groupBy("user_id")
       .agg(max("n_events").as("n_events"),
         max("n_milestones").as("n_milestones"))
       .orderBy("user_id")
@@ -284,17 +222,11 @@ object StreamGate {
     * sides are fully buffered before the watermark can evict anything, so
     * the end state equals the batch time-bounded join. */
   def purchaseViewEndState(spark: SparkSession, dir: String): DataFrame = {
-    val out = freshOut()
     val ev = eventsStream(spark, dir)
-    val joined = Streaming.purchaseViewJoin(
+    val (end, _) = endState(spark, Streaming.purchaseViewJoin(
       ev.where(col("event_type") === "purchase"),
-      ev.where(col("event_type") === "view"))
-    run(joined.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-    })
-    readEnd(spark, out, joined.schema)
-      .select("user_id", "p_event", "v_event")
+      ev.where(col("event_type") === "view")), "append")
+    end.select("user_id", "p_event", "v_event")
       .orderBy("user_id", "p_event", "v_event")
   }
 
@@ -305,18 +237,14 @@ object StreamGate {
   def corpusDedupEndState(spark0: SparkSession, dir: String,
       corpusMaxDocId: Long = 100): DataFrame = {
     val spark = gateSession(spark0, dir, table = "documents")
-    val out = freshOut()
     val raw = spark.read.parquet(Tables.path(dir, "documents"))
     val incoming = spark.readStream.schema(raw.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
       .where(col("doc_id") >= corpusMaxDocId)
     val corpus = raw.where(col("doc_id") < corpusMaxDocId)
-    val ds = Streaming.dedupAgainstCorpus(incoming, corpus)
-    run(ds.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-    })
-    readEnd(spark, out, ds.schema).select("doc_id").orderBy("doc_id")
+    val (end, _) = endState(spark,
+      Streaming.dedupAgainstCorpus(incoming, corpus), "append")
+    end.select("doc_id").orderBy("doc_id")
   }
 
   /** [[Streaming.jdbcAppendSink]] end state — the `LoadStarDB` warehouse
@@ -330,48 +258,35 @@ object StreamGate {
     * event-id slice keeps the row-at-a-time JDBC surface proportionate at
     * replica scale (a production load fans out over executors; Derby here
     * stands in for the warehouse like the reference's MySQL). */
-  def jdbcAppendEndState(spark: SparkSession, dir: String): DataFrame = {
-    // process- AND run-unique scratch db: bench and verify run this
-    // concurrently, and a repeated in-process run must never APPEND into a
-    // previous run's surviving rows (the batch gate overwrites; this one
-    // cannot)
-    val url = "jdbc:derby:memory:graftgate_stream_" +
-      s"${ProcessHandle.current().pid()}_" +
-      java.util.UUID.randomUUID().toString.replace("-", "") + ";create=true"
-    val src = eventsStream(spark, dir)
-      .where(col("event_id") % 20 === 0)
-      .select(col("event_id"), col("user_id"), col("event_type"))
-    val props = new java.util.Properties()
-    props.setProperty("user", "app"); props.setProperty("password", "app")
-    // an EMPTY bounded source fires zero micro-batches under AvailableNow,
-    // so the sink's first append would never create the table and the
-    // read-back would throw — pre-create the DDL by appending the slice's
-    // 0-row prefix through the same JDBC writer (the streaming analog of
-    // StreamGate.readEnd's missing-dir handling)
-    spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        src.schema.add("batch_id", org.apache.spark.sql.types.LongType))
-      .write.mode("append").jdbc(url, "events_fact", props)
-    run(Streaming.jdbcAppendSink(src, url, "events_fact", "app", "app"))
-    try {
-      // the JDBC scan is lazy — materialize the (event-type-bounded)
-      // aggregate BEFORE dropping the scratch db, same discipline as
-      // s_jdbc_roundtrip
-      val agg = spark.read.jdbc(url, "events_fact", props)
+  def jdbcAppendEndState(spark: SparkSession, dir: String): DataFrame =
+    // run-unique scratch db: bench and verify run this concurrently, and a
+    // repeated in-process run must never APPEND into a previous run's
+    // surviving rows (the batch gate overwrites; this one cannot)
+    Scratch.withDerby("graftgate_stream") { url =>
+      val src = eventsStream(spark, dir)
+        .where(col("event_id") % 20 === 0)
+        .select(col("event_id"), col("user_id"), col("event_type"))
+      val props = new java.util.Properties()
+      props.setProperty("user", "app"); props.setProperty("password", "app")
+      // an EMPTY bounded source fires zero micro-batches under AvailableNow,
+      // so the sink's first append would never create the table and the
+      // read-back would throw — pre-create the DDL by appending the slice's
+      // 0-row prefix through the same JDBC writer (the JDBC analog of
+      // endState's missing-dir handling)
+      spark.createDataFrame(
+          spark.sparkContext.emptyRDD[Row],
+          src.schema.add("batch_id", org.apache.spark.sql.types.LongType))
+        .write.mode("append").jdbc(url, "events_fact", props)
+      run(Streaming.jdbcAppendSink(src, url, "events_fact", "app", "app"))
+      // the JDBC scan is lazy — collect the (event-type-bounded) aggregate
+      // before the scratch db is dropped
+      Scratch.collectLocal(spark.read.jdbc(url, "events_fact", props)
         .groupBy(col("event_type").cast("string").as("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("event_id")).cast("long").as("id_sum"),
           countDistinct(col("user_id")).as("n_users"))
-        .orderBy("event_type")
-      val rows = agg.collect().toSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), agg.schema)
-    } finally {
-      // Derby signals a successful in-memory drop with SQLException 08006
-      try java.sql.DriverManager.getConnection(
-        url.replace(";create=true", ";drop=true"), "app", "app")
-      catch { case _: java.sql.SQLException => }
+        .orderBy("event_type"))
     }
-  }
 
   /** [[Streaming.topKPerKey]] end state: the LIVE leaderboard per key = the
     * key's latest emitted snapshot. Each appended snapshot is stamped with
@@ -380,16 +295,9 @@ object StreamGate {
     * rows of that key's max batch_id — correct for any micro-batch split of
     * the input, not just the single-batch case. */
   def topKEndState(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val out = freshOut()
-    val ds = Streaming.topKPerKey(spark, eventsStream(spark, dir), k)
-    run(ds.toDF().writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(out)
-    })
-    // sink schema = streaming frame + the batch_id stamp added per batch
-    val snapshots = readEnd(spark, out, ds.toDF()
-      .withColumn("batch_id", lit(0L)).schema)
+    val (snapshots, _) = endState(spark,
+      Streaming.topKPerKey(spark, eventsStream(spark, dir), k).toDF(),
+      "append", stampBatchId = true)
     val latest = snapshots.groupBy("event_type")
       .agg(max("batch_id").as("batch_id"))
     snapshots.join(broadcast(latest), Seq("event_type", "batch_id"))
@@ -432,24 +340,21 @@ object StreamGate {
   def lateCensusEndState(spark0: SparkSession, dir: String,
       delayMs: Long = 7L * 24 * 3600 * 1000): DataFrame = {
     val spark = gateSession(spark0, dir)
-    val out = freshOut()
     val ev = Tables.events(spark, dir)
-    val inDir = Files.createTempDirectory(tmpBase, "graft_stream_late")
-    val droppedByEngine = try {
-      writeArrival(inDir, ev.where(col("event_id") % 20 =!= 0), "b0", 1000L)
-      writeArrival(inDir, ev.where(col("event_id") % 40 === 0), "b1", 2000L)
-      writeArrival(inDir, ev.where(col("event_id") % 40 === 20), "b2", 3000L)
+    val (snaps, droppedByEngine) = Scratch.withDir("graft_stream_late") { in =>
+      // one single-file arrival per batch; the file source orders by
+      // modification time, pinned so arrival order is fixed
+      Scratch.writeSingleParquet(ev.where(col("event_id") % 20 =!= 0),
+        in.resolve("b0.parquet"), Some(1000000L))
+      Scratch.writeSingleParquet(ev.where(col("event_id") % 40 === 0),
+        in.resolve("b1.parquet"), Some(2000000L))
+      Scratch.writeSingleParquet(ev.where(col("event_id") % 40 === 20),
+        in.resolve("b2.parquet"), Some(3000000L))
       val stream = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      val agg = Streaming.tumblingCounts(stream, "1 day",
-        s"$delayMs milliseconds")
-      run(agg.writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(out)
-        })
-    } finally deleteTree(inDir)
-    val snaps = spark.read.parquet(out)
+        .option("maxFilesPerTrigger", "1").parquet(in.toString)
+      endState(spark, Streaming.tumblingCounts(stream, "1 day",
+        s"$delayMs milliseconds"), "update", stampBatchId = true)
+    }
     val latest = snaps.groupBy("w_start", "event_type")
       .agg(max("batch_id").as("batch_id"))
     val kept = snaps.join(broadcast(latest),
@@ -484,18 +389,13 @@ object StreamGate {
     * shuffle or state store is involved. */
   def enrichEndState(spark0: SparkSession, dir: String): DataFrame = {
     val spark = gateSession(spark0, dir)
-    val out = freshOut()
     val dim = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
-    val joined = Streaming.enrich(eventsStream(spark, dir), dim,
-        "user_id", "c_custkey")
+    val (end, _) = endState(spark, Streaming.enrich(eventsStream(spark, dir),
+        dim, "user_id", "c_custkey")
       .select(col("event_id"), col("user_id"), col("c_name"),
-        col("c_nationkey"))
-    run(joined.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-    })
-    readEnd(spark, out, joined.schema).orderBy("event_id")
+        col("c_nationkey")), "append")
+    end.orderBy("event_id")
   }
 
   /** Checkpoint-recovery end state: ONE checkpoint, TWO query lifetimes.
@@ -513,46 +413,35 @@ object StreamGate {
   def checkpointRecoveryEndState(spark0: SparkSession,
       dir: String): DataFrame = {
     val spark = gateSession(spark0, dir)
-    val out = freshOut()
     val ev = Tables.events(spark, dir)
-    val inDir = Files.createTempDirectory(tmpBase, "graft_stream_ckrec")
-    val ck = Files.createTempDirectory(tmpBase, "graft_stream_ckrec_ck")
-      .toString
-    // 10-year watermark delay: the recovered watermark after life 1 (max
-    // even-id ts minus the delay) must sit below ALL odd-id event times,
-    // or the restart would legitimately drop them as late — this gate
-    // tests recovery, not late-data policy (lateCensusEndState does that)
-    // captured by drain() so the end-state reads below go through
-    // readEnd with the aggregate's schema: reading the sink path
-    // directly relied on writeArrival always producing a part file (so a
-    // micro-batch always fires and creates the dir) — an invariant the
-    // empty-source-recovery comment claimed NOT to need
-    var aggSchema: org.apache.spark.sql.types.StructType = null
-    def drain(): Long = {
-      val stream = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      val agg = Streaming.tumblingCounts(stream, "1 day", "3650 days")
-      aggSchema = agg.schema
-      run(agg.writeStream.outputMode("complete").foreachBatch {
-        (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-      }, Some(ck))
+    val (end, dropped) = Scratch.withDir("graft_stream_ckrec") { scratch =>
+      val (in, ck) = (scratch.resolve("in"), scratch.resolve("ck"))
+      // 10-year watermark delay: the recovered watermark after life 1 (max
+      // even-id ts minus the delay) must sit below ALL odd-id event times,
+      // or the restart would legitimately drop them as late — this gate
+      // tests recovery, not late-data policy (lateCensusEndState does that).
+      // Complete mode: life 2's end state is the whole aggregate.
+      def drain() = endState(spark, Streaming.tumblingCounts(
+          spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", "1").parquet(in.toString),
+          "1 day", "3650 days"), "complete", ck = Some(ck))
+      // arrival order pinned by modification time, as in lateCensusEndState
+      Scratch.writeSingleParquet(ev.where(col("event_id") % 2 === 0),
+        in.resolve("b0.parquet"), Some(1000000L))
+      val (_, dropped1) = drain()
+      Scratch.writeSingleParquet(ev.where(col("event_id") % 2 =!= 0),
+        in.resolve("b1.parquet"), Some(2000000L))
+      val (end, dropped2) = drain()
+      (end, dropped1 + dropped2)
     }
-    val (dropped1, dropped2) = try {
-      writeArrival(inDir, ev.where(col("event_id") % 2 === 0), "b0", 1000L)
-      val d1 = drain()
-      writeArrival(inDir, ev.where(col("event_id") % 2 =!= 0), "b1", 2000L)
-      (d1, drain())
-    } finally { deleteTree(inDir); deleteTree(Paths.get(ck)) }
-    require(dropped1 + dropped2 == 0,
-      s"recovery gate dropped ${dropped1 + dropped2} rows by watermark — " +
+    require(dropped == 0,
+      s"recovery gate dropped $dropped rows by watermark — " +
         "the 10-year delay should make every row on-time")
     // structural cross-check before the oracle: every event lands in
     // exactly one tumbling window, so the end-state counts must sum to
     // the full table size — < means lost state, > means a replayed file.
     // (sum over an EMPTY end state is NULL → 0: an empty source is a
     // valid recovery, both lifetimes drained zero rows)
-    val end = readEnd(spark, out, aggSchema)
     val total = Option(end.agg(sum("n")).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
     val expected = ev.count()

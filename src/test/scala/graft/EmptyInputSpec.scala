@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.sources.Scratch
 
 /** Totality on the empty corpus: EVERY gate query must produce a (0-row)
   * result — never throw — when all ten tables are empty. At 100 TB an
@@ -18,49 +19,48 @@ import org.scalatest.funsuite.AnyFunSuite
   *    missing from a NON-empty corpus still fails loudly);
   *  - streaming gates: an empty bounded source fires ZERO micro-batches
   *    under AvailableNow, so `foreachBatch` never creates the sink dir —
-  *    `StreamGate.readEnd` returns the 0-row end state with the sink's
+  *    `StreamGate.endState` returns the 0-row end state with the sink's
   *    schema instead of PATH_NOT_FOUND.
   */
 class EmptyInputSpec extends AnyFunSuite {
   import TestSpark.spark
 
-  private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty").toString
-    Tables.names.foreach { n =>
-      Tables.table(spark, TestSpark.sf0001, n).where(lit(false))
-        .write.mode("overwrite").parquet(s"$dir/$n.parquet")
-    }
-    dir
-  }
-
   test("every gate query is total on empty tables (0 rows, no throw)") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        // the invariant is totality, not 0 rows: a handful of global
-        // aggregates legitimately emit one row of nulls/zeros on empty
-        // input (SQL aggregate semantics, matched by the DuckDB oracle)
-        try { fn(spark, emptyDir).count(); None }
-        catch {
-          case e: Throwable =>
-            Some(s"$name: ${e.getClass.getSimpleName}: " +
-              Option(e.getMessage).getOrElse("").linesIterator.take(1)
-                .mkString)
-        }
+    Scratch.withDir("graft_empty") { scratch =>
+      val emptyDir = scratch.toString
+      Tables.names.foreach { n =>
+        Tables.table(spark, TestSpark.sf0001, n).where(lit(false))
+          .write.mode("overwrite").parquet(s"$emptyDir/$n.parquet")
+      }
+      val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+        case (name, fn) =>
+          // the invariant is totality, not 0 rows: a handful of global
+          // aggregates legitimately emit one row of nulls/zeros on empty
+          // input (SQL aggregate semantics, matched by the DuckDB oracle)
+          try { fn(spark, emptyDir).count(); None }
+          catch {
+            case e: Throwable =>
+              Some(s"$name: ${e.getClass.getSimpleName}: " +
+                Option(e.getMessage).getOrElse("").linesIterator.take(1)
+                  .mkString)
+          }
+      }
+      assert(failures.isEmpty,
+        s"${failures.size} queries throw on empty input:\n" +
+          failures.mkString("\n"))
     }
-    assert(failures.isEmpty,
-      s"${failures.size} queries throw on empty input:\n" +
-        failures.mkString("\n"))
   }
 
   test("fixed classes keep their schemas on empty input") {
     // TSV roundtrip: explicit schema survives the no-data-files dir
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_empty_tsv").toString
-    sources.Sinks.writeTsv(
-      Tables.documents(spark, TestSpark.sf0001).where(lit(false))
-        .select(col("doc_id"), col("lang")), out)
-    val back = sources.Sinks.readTsvKeys(spark, out)
-    assert(back.columns.toSeq == Seq("key") && back.count() == 0)
+    Scratch.withDir("graft_empty_tsv") { dir =>
+      val out = dir.toString
+      sources.Sinks.writeTsv(
+        Tables.documents(spark, TestSpark.sf0001).where(lit(false))
+          .select(col("doc_id"), col("lang")), out)
+      val back = sources.Sinks.readTsvKeys(spark, out)
+      assert(back.columns.toSeq == Seq("key") && back.count() == 0)
+    }
     // IVF assignment: empty corpus -> empty assignment, schema intact
     val emb = Tables.embeddings(spark, TestSpark.sf0001).where(lit(false))
     val assigned = ops.SimSearch.ivfAssign(emb, 16)

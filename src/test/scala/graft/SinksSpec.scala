@@ -2,18 +2,20 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.sources.Sinks
+import graft.sources.{Scratch, Sinks}
 
 class SinksSpec extends AnyFunSuite {
   import TestSpark.spark
 
   test("TSV sink + MR-output key reader roundtrip (S3/S4)") {
-    val out = "/tmp/graft_sinks_spec_tsv"
-    val totals = ops.Parity.categoryTotals(Tables.events(spark, TestSpark.sf0001))
-    Sinks.writeTsv(totals, out, coalesce = 1)
-    val keys = Sinks.readTsvKeys(spark, out).collect().map(_.getString(0)).toSeq
-    val want = totals.select("event_type").collect().map(_.getString(0)).sorted.toSeq
-    assert(keys == want)
+    Scratch.withDir("graft_sinks_spec_tsv") { dir =>
+      val out = dir.toString
+      val totals = ops.Parity.categoryTotals(Tables.events(spark, TestSpark.sf0001))
+      Sinks.writeTsv(totals, out, coalesce = 1)
+      val keys = Sinks.readTsvKeys(spark, out).collect().map(_.getString(0)).toSeq
+      val want = totals.select("event_type").collect().map(_.getString(0)).sorted.toSeq
+      assert(keys == want)
+    }
   }
 
   test("JDBC star-schema round-trip against embedded Derby (S5/S6)") {
@@ -81,54 +83,58 @@ class SinksSpec extends AnyFunSuite {
     // the checkpoint: the engine re-executes batch 0 verbatim.
     val url = "jdbc:derby:memory:graftretry;create=true"
     val props = new java.util.Properties()
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_retry_src").toString
-    val ck = java.nio.file.Files.createTempDirectory("graft_retry_ck").toString
-    import spark.implicits._
-    val input = Seq((1L, "click"), (2L, "view"), (3L, "click"))
-    input.toDF("event_id", "event_type").write.mode("append").parquet(srcDir)
-    def start() = graft.streaming.Streaming.jdbcAppendSink(
-        spark.readStream
-          .schema("event_id LONG, event_type STRING").parquet(srcDir),
-        url, "fact_retry", "app", "app")
-      .option("checkpointLocation", ck)
-      .start()
-    val q1 = start()
-    try q1.processAllAvailable()
-    finally { q1.stop(); q1.awaitTermination() }
-    def rows() = spark.read.jdbc(url, "fact_retry", props).collect()
-      .map(r => (r.getLong(r.fieldIndex("event_id")),
-        r.getString(r.fieldIndex("event_type")),
-        r.getLong(r.fieldIndex("batch_id"))))
-    assert(rows().length == 3)
-    // crash window: sink write durable, checkpoint commit lost (the local
-    // FS keeps a Hadoop .crc sidecar — it must go too, or the commit
-    // rewrite trips over it)
-    assert(new java.io.File(s"$ck/commits/0").delete())
-    new java.io.File(s"$ck/commits/.0.crc").delete()
-    val q2 = start()
-    try q2.processAllAvailable()
-    finally { q2.stop(); q2.awaitTermination() }
-    val replayed = rows()
-    // the retry duplicated every row — under the SAME batch id
-    assert(replayed.length == 6)
-    assert(replayed.groupBy(identity).values.forall(_.length == 2))
-    assert(replayed.forall(_._3 == 0L))
-    // an id-aware reader (dedupe on batch_id + key) sees exactly-once data
-    val exactlyOnce = replayed.toSet
-    assert(exactlyOnce == input.map { case (id, t) => (id, t, 0L) }.toSet)
+    Scratch.withDir("graft_retry") { dir =>
+      val srcDir = dir.resolve("src").toString
+      val ck = dir.resolve("ck").toString
+      import spark.implicits._
+      val input = Seq((1L, "click"), (2L, "view"), (3L, "click"))
+      input.toDF("event_id", "event_type").write.mode("append").parquet(srcDir)
+      def start() = graft.streaming.Streaming.jdbcAppendSink(
+          spark.readStream
+            .schema("event_id LONG, event_type STRING").parquet(srcDir),
+          url, "fact_retry", "app", "app")
+        .option("checkpointLocation", ck)
+        .start()
+      val q1 = start()
+      try q1.processAllAvailable()
+      finally { q1.stop(); q1.awaitTermination() }
+      def rows() = spark.read.jdbc(url, "fact_retry", props).collect()
+        .map(r => (r.getLong(r.fieldIndex("event_id")),
+          r.getString(r.fieldIndex("event_type")),
+          r.getLong(r.fieldIndex("batch_id"))))
+      assert(rows().length == 3)
+      // crash window: sink write durable, checkpoint commit lost (the local
+      // FS keeps a Hadoop .crc sidecar — it must go too, or the commit
+      // rewrite trips over it)
+      assert(new java.io.File(s"$ck/commits/0").delete())
+      new java.io.File(s"$ck/commits/.0.crc").delete()
+      val q2 = start()
+      try q2.processAllAvailable()
+      finally { q2.stop(); q2.awaitTermination() }
+      val replayed = rows()
+      // the retry duplicated every row — under the SAME batch id
+      assert(replayed.length == 6)
+      assert(replayed.groupBy(identity).values.forall(_.length == 2))
+      assert(replayed.forall(_._3 == 0L))
+      // an id-aware reader (dedupe on batch_id + key) sees exactly-once data
+      val exactlyOnce = replayed.toSet
+      assert(exactlyOnce == input.map { case (id, t) => (id, t, 0L) }.toSet)
+    }
   }
 
   test("partitioned parquet write prunes partitions at read (scan-level skipping)") {
     val d = TestSpark.sf0001
-    val out = "/tmp/graft_sinks_spec_partitioned"
-    Sinks.writeParquet(Tables.events(spark, d), out, partitionBy = Seq("event_type"))
-    val read = spark.read.parquet(out).where(col("event_type") === "click")
-    // the filter must become a PartitionFilter (directory-level skip), not a
-    // post-scan predicate over all rows
-    val scan = read.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters: [isnotnull(event_type"), scan)
-    val all = Tables.events(spark, d)
-    assert(read.count() == all.where(col("event_type") === "click").count())
+    Scratch.withDir("graft_sinks_spec_partitioned") { dir =>
+      val out = dir.toString
+      Sinks.writeParquet(Tables.events(spark, d), out, partitionBy = Seq("event_type"))
+      val read = spark.read.parquet(out).where(col("event_type") === "click")
+      // the filter must become a PartitionFilter (directory-level skip), not a
+      // post-scan predicate over all rows
+      val scan = read.queryExecution.executedPlan.toString
+      assert(scan.contains("PartitionFilters: [isnotnull(event_type"), scan)
+      val all = Tables.events(spark, d)
+      assert(read.count() == all.where(col("event_type") === "click").count())
+    }
   }
 
   test("co-bucketed tables join without a shuffle exchange") {

@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.sources.Scratch
 import graft.streaming.{StreamGate, Streaming}
 
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long, event_type: String)
@@ -194,43 +195,45 @@ class StreamingSpec extends AnyFunSuite {
 
   test("checkpoint recovery: restarted query resumes state, no recount") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    val srcDir = s"$dir/in"; val ckpt = s"$dir/ckpt"
-    new java.io.File(srcDir).mkdirs()
-    val schema = Seq.empty[Ev].toDS().schema
-    def start(tbl: String) =
-      Streaming.tumblingCounts(
-          spark.readStream.schema(schema).parquet(srcDir), "1 hour", "2 hours")
-        .writeStream.format("memory").queryName(tbl)
-        .option("checkpointLocation", ckpt)
-        .outputMode("complete").start()
-    def addFile(n: Int, evs: Ev*): Unit = {
-      // the file source lists *files* under the path — write to a scratch
-      // dir and move the part file in as a single flat file
-      val tmp = s"$dir/tmp$n"
-      evs.toDS().coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(s"$srcDir/batch$n.parquet"))
+    Scratch.withDir("graft_ckpt") { scratch =>
+      val dir = scratch.toString
+      val srcDir = s"$dir/in"; val ckpt = s"$dir/ckpt"
+      new java.io.File(srcDir).mkdirs()
+      val schema = Seq.empty[Ev].toDS().schema
+      def start(tbl: String) =
+        Streaming.tumblingCounts(
+            spark.readStream.schema(schema).parquet(srcDir), "1 hour", "2 hours")
+          .writeStream.format("memory").queryName(tbl)
+          .option("checkpointLocation", ckpt)
+          .outputMode("complete").start()
+      def addFile(n: Int, evs: Ev*): Unit = {
+        // the file source lists *files* under the path — write to a scratch
+        // dir and move the part file in as a single flat file
+        val tmp = s"$dir/tmp$n"
+        evs.toDS().coalesce(1).write.parquet(tmp)
+        val part = new java.io.File(tmp).listFiles()
+          .find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.move(part.toPath,
+          java.nio.file.Paths.get(s"$srcDir/batch$n.parquet"))
+      }
+      val q1 = start("ckpt_a")
+      try {
+        addFile(1, Ev(1, ts("2024-01-01 10:05:00"), 1, "click"),
+          Ev(2, ts("2024-01-01 10:10:00"), 2, "click"))
+        q1.processAllAvailable()
+        assert(spark.table("ckpt_a").collect().map(_.getLong(3)).sum == 2)
+      } finally q1.stop()
+      // restart from the checkpoint into a FRESH sink table: batch-1 rows must
+      // come back from recovered state (not re-read), batch-2 rows add to them
+      val q2 = start("ckpt_b")
+      try {
+        addFile(2, Ev(3, ts("2024-01-01 10:30:00"), 3, "click"))
+        q2.processAllAvailable()
+        val got = spark.table("ckpt_b").collect()
+          .map(r => (r.getTimestamp(0).toString, r.getString(2)) -> r.getLong(3)).toMap
+        assert(got(("2024-01-01 10:00:00.0", "click")) == 3L)
+      } finally q2.stop()
     }
-    val q1 = start("ckpt_a")
-    try {
-      addFile(1, Ev(1, ts("2024-01-01 10:05:00"), 1, "click"),
-        Ev(2, ts("2024-01-01 10:10:00"), 2, "click"))
-      q1.processAllAvailable()
-      assert(spark.table("ckpt_a").collect().map(_.getLong(3)).sum == 2)
-    } finally q1.stop()
-    // restart from the checkpoint into a FRESH sink table: batch-1 rows must
-    // come back from recovered state (not re-read), batch-2 rows add to them
-    val q2 = start("ckpt_b")
-    try {
-      addFile(2, Ev(3, ts("2024-01-01 10:30:00"), 3, "click"))
-      q2.processAllAvailable()
-      val got = spark.table("ckpt_b").collect()
-        .map(r => (r.getTimestamp(0).toString, r.getString(2)) -> r.getLong(3)).toMap
-      assert(got(("2024-01-01 10:00:00.0", "click")) == 3L)
-    } finally q2.stop()
   }
 
   test("streaming SCD2 emits the batch operator's closed intervals") {
@@ -287,55 +290,57 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("checkpoint recovery of CUSTOM state: restarted leaderboard remembers the board") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_topk_ckpt_").toString
-    val srcDir = s"$dir/in"; val ckpt = s"$dir/ckpt"
-    new java.io.File(srcDir).mkdirs()
-    val schema = Seq.empty[TopKIn].toDS().schema
-    // memory sink cannot recover an append-mode query from a checkpoint;
-    // foreachBatch -> parquet can (the StreamGate sink shape)
-    def start(out: String) =
-      Streaming.topKPerKey(spark,
-          spark.readStream.schema(schema).parquet(srcDir), k = 2)
-        .toDF().writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-    def readOut(out: String) =
-      try spark.read.parquet(out).collect()
-      catch { case _: Throwable => Array.empty[org.apache.spark.sql.Row] }
-    def addFile(n: Int, rows: TopKIn*): Unit = {
-      val tmp = s"$dir/tmp$n"
-      rows.toDS().coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(s"$srcDir/batch$n.parquet"))
+    Scratch.withDir("graft_topk_ckpt") { scratch =>
+      val dir = scratch.toString
+      val srcDir = s"$dir/in"; val ckpt = s"$dir/ckpt"
+      new java.io.File(srcDir).mkdirs()
+      val schema = Seq.empty[TopKIn].toDS().schema
+      // memory sink cannot recover an append-mode query from a checkpoint;
+      // foreachBatch -> parquet can (the StreamGate sink shape)
+      def start(out: String) =
+        Streaming.topKPerKey(spark,
+            spark.readStream.schema(schema).parquet(srcDir), k = 2)
+          .toDF().writeStream
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            b.write.mode("append").parquet(out)
+          }
+          .option("checkpointLocation", ckpt)
+          .outputMode("append").start()
+      def readOut(out: String) =
+        try spark.read.parquet(out).collect()
+        catch { case _: Throwable => Array.empty[org.apache.spark.sql.Row] }
+      def addFile(n: Int, rows: TopKIn*): Unit = {
+        val tmp = s"$dir/tmp$n"
+        rows.toDS().coalesce(1).write.parquet(tmp)
+        val part = new java.io.File(tmp).listFiles()
+          .find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.move(part.toPath,
+          java.nio.file.Paths.get(s"$srcDir/batch$n.parquet"))
+      }
+      val outA = s"$dir/outA"; val outB = s"$dir/outB"
+      val q1 = start(outA)
+      try {
+        addFile(1, TopKIn("a", 1, 30.0), TopKIn("a", 2, 20.0))
+        q1.processAllAvailable()
+        assert(readOut(outA).length == 2)
+      } finally { q1.stop(); q1.awaitTermination() }
+      // restart into a FRESH sink: a below-board value must emit NOTHING —
+      // only possible if the flatMapGroupsWithState state (the board) was
+      // RECOVERED from the checkpoint, not rebuilt empty
+      val q2 = start(outB)
+      try {
+        addFile(2, TopKIn("a", 3, 5.0))
+        q2.processAllAvailable()
+        assert(readOut(outB).isEmpty,
+          "recovered state should have suppressed the below-board value")
+        // a displacing value merges with the RECOVERED board values
+        addFile(3, TopKIn("a", 4, 25.0))
+        q2.processAllAvailable()
+        val board = readOut(outB)
+          .map(r => (r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
+        assert(board == Seq((1, 1L, 30.0), (2, 4L, 25.0)))
+      } finally { q2.stop(); q2.awaitTermination() }
     }
-    val outA = s"$dir/outA"; val outB = s"$dir/outB"
-    val q1 = start(outA)
-    try {
-      addFile(1, TopKIn("a", 1, 30.0), TopKIn("a", 2, 20.0))
-      q1.processAllAvailable()
-      assert(readOut(outA).length == 2)
-    } finally { q1.stop(); q1.awaitTermination() }
-    // restart into a FRESH sink: a below-board value must emit NOTHING —
-    // only possible if the flatMapGroupsWithState state (the board) was
-    // RECOVERED from the checkpoint, not rebuilt empty
-    val q2 = start(outB)
-    try {
-      addFile(2, TopKIn("a", 3, 5.0))
-      q2.processAllAvailable()
-      assert(readOut(outB).isEmpty,
-        "recovered state should have suppressed the below-board value")
-      // a displacing value merges with the RECOVERED board values
-      addFile(3, TopKIn("a", 4, 25.0))
-      q2.processAllAvailable()
-      val board = readOut(outB)
-        .map(r => (r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
-      assert(board == Seq((1, 1L, 30.0), (2, 4L, 25.0)))
-    } finally { q2.stop(); q2.awaitTermination() }
   }
 
   test("streaming top-k: tied values each hold their own rank (r10 regression)") {
@@ -395,7 +400,7 @@ class StreamingSpec extends AnyFunSuite {
   test("StreamGate leaves only its end-state dir behind") {
     import scala.jdk.CollectionConverters._
     def scratch() = scala.util.Using.resource(
-        java.nio.file.Files.list(StreamGate.tmpBase))(_.iterator.asScala
+        java.nio.file.Files.list(Scratch.base))(_.iterator.asScala
       .map(_.getFileName.toString).filter(_.startsWith("graft_stream_")).toSet)
     val before = scratch()
     // the late-census gate makes all three kinds: checkpoint, a copy of

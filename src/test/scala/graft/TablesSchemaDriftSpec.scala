@@ -1,11 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
+import graft.sources.Scratch
 
 /** Schema-drift resilience of the events loader (VERDICT r8 item 4).
   *
@@ -30,33 +31,31 @@ class TablesSchemaDriftSpec extends AnyFunSuite {
     (2L, 1357002000123456L, 7L, "purchase", 20L),    // +1h and change
     (3L, 1359676799999999L, 9L, "view", 30L))        // 2013-01-31T23:59:59.999999
 
-  private def writeEvents(df: DataFrame, tag: String): String = {
-    val dir = Files.createTempDirectory(s"graft_drift_$tag").toString
-    val tmp = s"$dir/_tmp"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)
-      .filter(p => p.endsWith(".parquet") && p.contains("part-"))
-    require(part.length == 1)
-    Files.move(Paths.get(part.head), Paths.get(s"$dir/events.parquet"))
-    dir
+  // each test's event dirs live under one scoped scratch root
+  private def drift(body: Path => Unit): Unit = Scratch.withDir("graft_drift")(body)
+
+  private def writeEvents(root: Path, df: DataFrame, tag: String): String = {
+    val dir = root.resolve(tag)
+    Scratch.writeSingleParquet(df, dir.resolve("events.parquet"))
+    dir.toString
   }
 
   private def base = micros.toDF("event_id", "us", "user_id", "event_type", "value")
 
   // INT64 with no logical annotation — what the legacy NANOS files look like
   // to a nanosAsLong scan, and what a raw-long writer produces
-  private def longNanosDir = writeEvents(
+  private def longNanosDir(root: Path) = writeEvents(root,
     base.select(col("event_id"), (col("us") * 1000L).as("ts"),
       col("user_id"), col("event_type"), col("value")), "long")
 
   // native TIMESTAMP(MICROS, isAdjustedToUTC=false) — the current testdata
-  private def ntzDir = writeEvents(
+  private def ntzDir(root: Path) = writeEvents(root,
     base.select(col("event_id"),
       timestamp_micros(col("us")).cast("timestamp_ntz").as("ts"),
       col("user_id"), col("event_type"), col("value")), "ntz")
 
   // session-TZ TimestampType as written by a plain Spark job
-  private def tzDir = writeEvents(
+  private def tzDir(root: Path) = writeEvents(root,
     base.select(col("event_id"), timestamp_micros(col("us")).as("ts"),
       col("user_id"), col("event_type"), col("value")), "tz")
 
@@ -71,17 +70,21 @@ class TablesSchemaDriftSpec extends AnyFunSuite {
 
   test("all three on-disk ts encodings load to identical rows") {
     val expected = micros.map(m => (m._1, m._2, m._4)).sortBy(_._1)
-    assert(load(longNanosDir) == expected, "INT64-nanos encoding")
-    assert(load(ntzDir) == expected, "timestamp_ntz encoding")
-    assert(load(tzDir) == expected, "timestamp encoding")
+    drift { root =>
+      assert(load(longNanosDir(root)) == expected, "INT64-nanos encoding")
+      assert(load(ntzDir(root)) == expected, "timestamp_ntz encoding")
+      assert(load(tzDir(root)) == expected, "timestamp encoding")
+    }
   }
 
   test("nanos residue truncates toward zero like the oracle's µs cast") {
     // 999 ns above a whole µs must floor to that µs, matching DuckDB's scan
-    val dir = writeEvents(
-      Seq((1L, 1356998400000000L * 1000L + 999L, 7L, "view", 10L))
-        .toDF("event_id", "ts", "user_id", "event_type", "value"), "resid")
-    assert(load(dir) == Seq((1L, 1356998400000000L, "view")))
+    drift { root =>
+      val dir = writeEvents(root,
+        Seq((1L, 1356998400000000L * 1000L + 999L, 7L, "view", 10L))
+          .toDF("event_id", "ts", "user_id", "event_type", "value"), "resid")
+      assert(load(dir) == Seq((1L, 1356998400000000L, "view")))
+    }
   }
 
   // true parquet TIMESTAMP(NANOS, isAdjustedToUTC=false) — what the legacy
@@ -89,7 +92,7 @@ class TablesSchemaDriftSpec extends AnyFunSuite {
   // produced with parquet-java's Group API directly; this is the encoding
   // the probe exists for (vectorized reader refuses NANOS unless
   // `nanosAsLong` is set, under which it scans as LongType).
-  private def nanosAnnotatedDir: String = {
+  private def nanosAnnotatedDir(root: Path): String = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
@@ -104,7 +107,7 @@ class TablesSchemaDriftSpec extends AnyFunSuite {
         .as(LogicalTypeAnnotation.stringType()).named("event_type"))
       .addField(Types.required(INT64).named("value"))
       .named("events")
-    val dir = Files.createTempDirectory("graft_drift_nanos").toString
+    val dir = root.resolve("nanos").toString
     val writer = ExampleParquetWriter
       .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
       .withType(schema)
@@ -122,7 +125,9 @@ class TablesSchemaDriftSpec extends AnyFunSuite {
 
   test("true TIMESTAMP(NANOS)-annotated parquet loads via the nanosAsLong probe") {
     val expected = micros.map(m => (m._1, m._2, m._4)).sortBy(_._1)
-    assert(load(nanosAnnotatedDir) == expected, "TIMESTAMP(NANOS) encoding")
+    drift { root =>
+      assert(load(nanosAnnotatedDir(root)) == expected, "TIMESTAMP(NANOS) encoding")
+    }
   }
 
   test("rewriting the events file with a different encoding mid-session is picked up") {
@@ -130,14 +135,16 @@ class TablesSchemaDriftSpec extends AnyFunSuite {
     // file regenerated in one long-lived JVM. The cache keys on
     // (path, mtime/size fingerprint), so the rewrite must re-probe.
     val expected = micros.map(m => (m._1, m._2, m._4)).sortBy(_._1)
-    val dir = longNanosDir
-    assert(load(dir) == expected, "initial INT64-nanos load")
-    val ntz = ntzDir
-    Files.move(Paths.get(s"$ntz/events.parquet"),
-      Paths.get(s"$dir/events.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    assert(load(dir) == expected,
-      "same path, rewritten as timestamp_ntz — stale cached type would fail here")
+    drift { root =>
+      val dir = longNanosDir(root)
+      assert(load(dir) == expected, "initial INT64-nanos load")
+      val ntz = ntzDir(root)
+      Files.move(Paths.get(s"$ntz/events.parquet"),
+        Paths.get(s"$dir/events.parquet"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assert(load(dir) == expected,
+        "same path, rewritten as timestamp_ntz — stale cached type would fail here")
+    }
   }
 
   test("loading the real testdata surfaces TimestampType and nonzero rows") {

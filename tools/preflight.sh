@@ -27,8 +27,15 @@ fi
 
 step "Verify + DuckDB oracle at sf0.01 (driver t2 mirror, ~3 min)"
 rm -rf /tmp/preflight_verify
+# gate scratch must not outlive the run: any graft_* entry in /tmp or
+# /dev/shm that appears during Verify and is still there after it exits
+# is a leak
+scratch() { ls -d /tmp/graft_* /dev/shm/graft_* 2>/dev/null | sort; }
+scratch_before=$(scratch)
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/preflight_verify" \
   2>&1 | grep "\[verify\].*failed" && rc=1
+leaked=$(comm -13 <(echo "$scratch_before") <(scratch))
+if [ -n "$leaked" ]; then echo "Verify left scratch behind:"; echo "$leaked"; rc=1; fi
 python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/preflight_verify \
   | tail -1 | tee /dev/stderr | grep -q " 0 fail" || rc=1
 
