@@ -23,7 +23,7 @@ import graft.sources.Scratch
   *
   * Each run takes fresh checkpoint/output dirs from [[graft.sources.Scratch]]:
   * the gate must be re-runnable in one session without state collisions
-  * (the driver runs Verify, then specs may run the same queries again).
+  * (Verify runs the inventory, then specs may run the same queries again).
   * Checkpoint and input dirs are scoped to the gate; the end-state dir,
   * which the returned frame reads lazily, lives until JVM exit.
   */
